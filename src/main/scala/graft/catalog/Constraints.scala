@@ -2,13 +2,13 @@ package graft.catalog
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Post-write constraint assertions — Spark doesn't enforce PK/NOT
-  * NULL declarations (SURVEY.md §1.4), so the reference's DDL
-  * constraints (`create_tables.py:21`, `orders_ETL.py:76`) become
-  * explicit distributed checks run after materialization. Each check
-  * is a single aggregation returning violation counts; `enforce`
-  * throws with the counts so pipelines fail fast on bad loads.
+/** Pre-commit constraint checks — Spark doesn't enforce PK/NOT NULL
+  * declarations (SURVEY.md §1.4), so the reference's DDL constraints
+  * (`create_tables.py:21`, `orders_ETL.py:76`) become explicit
+  * distributed checks on the once-materialised output, run before the
+  * sink commits: a failed check leaves the previous output in place.
   */
 object Constraints {
 
@@ -25,17 +25,36 @@ object Constraints {
         .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
     val nulls =
       if (notNull.isEmpty) 0L
-      else df.filter(notNull.map(col(_).isNull).reduce(_ || _)).count()
+      else df.filter(anyNull(notNull)).count()
     Violations(table, dupes, nulls)
   }
 
-  /** Fail-fast wrapper for pipeline load stages. */
-  def enforce(df: DataFrame, table: String, primaryKey: Seq[String],
-              notNull: Seq[String]): Unit = {
-    val v = check(df, table, primaryKey, notNull)
-    if (!v.clean)
-      throw new IllegalStateException(
-        s"constraint violations in $table: ${v.duplicateKeys} duplicate " +
-          s"primary keys, ${v.nullRows} rows with NULL in NOT NULL columns")
+  /** Materialises `df` once, checks it, and hands the cached rows to
+    * `sink` only if it is clean; the cache is released either way.
+    *
+    * The happy path is one `count` of violating key groups; the exact
+    * counts for the exception come from [[check]], run only when that
+    * count is non-zero.
+    */
+  def enforce[T](df: DataFrame, table: String, primaryKey: Seq[String],
+                 notNull: Seq[String])(sink: DataFrame => T): T = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val duplicate = if (primaryKey.isEmpty) lit(false) else col("n") > 1
+      val violating = df.groupBy(primaryKey.map(col): _*)
+        .agg(count(lit(1)).as("n"), count_if(anyNull(notNull)).as("nulls"))
+        .filter(duplicate || col("nulls") > 0)
+        .count()
+      if (violating > 0) {
+        val v = check(df, table, primaryKey, notNull)
+        throw new IllegalStateException(
+          s"constraint violations in $table: ${v.duplicateKeys} duplicate " +
+            s"primary keys, ${v.nullRows} rows with NULL in NOT NULL columns")
+      }
+      sink(df)
+    } finally df.unpersist()
   }
+
+  private def anyNull(columns: Seq[String]) =
+    columns.map(col(_).isNull).foldLeft(lit(false))(_ || _)
 }

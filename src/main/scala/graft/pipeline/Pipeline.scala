@@ -1,12 +1,15 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** extract → transform → load runner — the Spark-native mapping of
   * the reference's 3-task Airflow DAGs (`orders_ETL.py:152-166`,
   * SURVEY.md §2.9 D1).
   *
-  * D2 (retries=2) becomes a simple stage retry wrapper; D3 (the
+  * D2 (retries=2) becomes a simple stage retry wrapper over non-fatal
+  * errors; fatal ones and interrupts propagate at once. D3 (the
   * reference swallows every exception and prints — `orders_ETL.py:
   * 66-67,130-131,146-147`) is consciously NOT replicated: stages
   * fail fast after retries are exhausted.
@@ -31,7 +34,7 @@ trait Pipeline {
     while (attempt <= retries) {
       try return body
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e
           attempt += 1
           if (attempt <= retries)
@@ -64,12 +67,7 @@ object ReferencePipelines {
     def transform(df: DataFrame): DataFrame =
       ReferenceTransforms.aggPublicHoliday(
         df, Csv.read(spark, s"$inDir/dim_dates.csv", dimDates))
-    def load(df: DataFrame): Unit = {
-      // DDL constraints become post-transform assertions (§1.4)
-      Constraints.enforce(df, "agg_public_holiday",
-        primaryKey = Seq("ingestion_date"), notNull = Seq("ingestion_date"))
-      Csv.writeSingle(df, s"$outDir/agg_public_holiday")
-    }
+    def load(df: DataFrame): Unit = commit(df, name, outDir, Seq("ingestion_date"))
   }
 
   final case class AggShipmentsPipeline(inDir: String, outDir: String) extends Pipeline {
@@ -81,11 +79,7 @@ object ReferencePipelines {
     def transform(df: DataFrame): DataFrame =
       ReferenceTransforms.aggShipments(
         df, Csv.read(spark, s"$inDir/orders.csv", orders))
-    def load(df: DataFrame): Unit = {
-      Constraints.enforce(df, "agg_shipments",
-        primaryKey = Seq("ingestion_date"), notNull = Seq("ingestion_date"))
-      Csv.writeSingle(df, s"$outDir/agg_shipments")
-    }
+    def load(df: DataFrame): Unit = commit(df, name, outDir, Seq("ingestion_date"))
   }
 
   final case class BestPerformingProductPipeline(inDir: String, outDir: String) extends Pipeline {
@@ -101,10 +95,16 @@ object ReferencePipelines {
         Csv.read(spark, s"$inDir/orders.csv", orders),
         Csv.read(spark, s"$inDir/dim_dates.csv", dimDates),
         Csv.read(spark, s"$inDir/shipments_deliveries.csv", shipmentsDeliveries))
-    def load(df: DataFrame): Unit = {
-      Constraints.enforce(df, "best_performing_product",
-        primaryKey = Seq("ingestion_date"), notNull = Seq("ingestion_date", "product_name"))
-      Csv.writeSingle(df, s"$outDir/best_performing_product")
-    }
+    def load(df: DataFrame): Unit =
+      commit(df, name, outDir, Seq("ingestion_date", "product_name"))
   }
+
+  /** The reference's DDL constraints (primary key `ingestion_date`,
+    * §1.4) checked on the once-materialised transform output, which is
+    * then written from the cache to `$outDir/<table>/`.
+    */
+  private def commit(df: DataFrame, table: String, outDir: String,
+                     notNull: Seq[String]): Unit =
+    Constraints.enforce(df, table, primaryKey = Seq("ingestion_date"), notNull)(
+      Csv.writeSingle(_, s"$outDir/$table"))
 }

@@ -1,7 +1,6 @@
 package graft.transforms
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's three analytics transforms on its OWN data model
@@ -63,9 +62,9 @@ object ReferenceTransforms {
   }
 
   /** Best performing product (`reviews_ETL.py:93-198`): 5-way join
-    * chain, top-1 product by mean review, star-percentage split via
-    * the global ratio-to-report window, most-ordered day + holiday
-    * flag, early/late shipment percentages.
+    * chain, top-1 product by mean review, most-ordered day + holiday
+    * flag, and one aggregate over the winner's rows for the
+    * star-percentage split and the early/late shipment percentages.
     *
     * Reference shipment-status semantics preserved exactly
     * (`reviews_ETL.py:155-156`): late := >= 6 days AND undelivered;
@@ -85,16 +84,15 @@ object ReferenceTransforms {
         col("c.order_id"), col("c.order_date"), col("d.day_of_the_week_num"),
         col("d.working_day"), col("e.shipment_id"), col("e.shipment_date"),
         col("e.delivery_date"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // CTE_2 (reviews_ETL.py:116-124): top-1 by avg review, tie-break id
     val cte2 = cte1.groupBy(col("product_id"), col("product_name"))
       .agg(avg(col("review")).as("average"), sum(col("review")).as("tt_review_points"))
       .orderBy(desc("average"), asc("product_id")).limit(1)
-    val bestId = broadcast(cte2.select(col("product_id")))
+    val winner = cte1.join(broadcast(cte2.select(col("product_id"))), Seq("product_id"))
 
     // CTE_3 (reviews_ETL.py:127-135): most-ordered day for the winner
-    val mostOrdered = cte1.join(bestId, Seq("product_id"))
+    val mostOrdered = winner
       .groupBy(col("order_date"),
         (col("working_day") === false &&
           col("day_of_the_week_num").isin(1, 2, 3, 4, 5)).as("is_public_holiday"))
@@ -102,28 +100,20 @@ object ReferenceTransforms {
       .orderBy(desc("total"), asc("order_date")).limit(1)
       .select(col("order_date").as("most_ordered_day"), col("is_public_holiday"))
 
-    // CTA_4 (reviews_ETL.py:137-149): star split, ratio-to-report window
-    val starCounts = cte1.join(bestId, Seq("product_id"))
-      .groupBy(col("review")).agg(count(lit(1)).as("cnt"))
-      .withColumn("total_all", sum(col("cnt")).over(Window.partitionBy()))
+    // CTA_4 + CTE_5/6 (reviews_ETL.py:137-170): star split and
+    // early/late shipment pcts in one aggregate. count_if / count(1) is
+    // the same long / long as the reference's ratio-to-report window.
+    def pct(cond: Column) = count_if(cond) * 100.0 / count(lit(1))
     val starNames = Seq("one", "two", "three", "four", "five")
-    val starCols = (1 to 5).map { s =>
-      (sum(when(col("review") === s, col("cnt")).otherwise(0L)) * 100.0 /
-        max(col("total_all"))).as(s"pct_${starNames(s - 1)}_star_review")
-    }
-    val starPcts = starCounts.agg(starCols.head, starCols.tail: _*)
-
-    // CTE_5/6 (reviews_ETL.py:152-170): early/late shipment pcts
     val days = datediff(col("shipment_date"), col("order_date"))
-    val shipPcts = cte1.join(bestId, Seq("product_id"))
-      .agg(
-        (sum(when(days <= 6 && col("delivery_date").isNotNull, 1).otherwise(0)) * 100.0 /
-          count(lit(1))).as("pct_early_shipment"),
-        (sum(when(days >= 6 && col("delivery_date").isNull, 1).otherwise(0)) * 100.0 /
-          count(lit(1))).as("pct_late_shipment"))
+    val pcts = (1 to 5).map(s =>
+      pct(col("review") === s).as(s"pct_${starNames(s - 1)}_star_review")) ++ Seq(
+      pct(days <= 6 && col("delivery_date").isNotNull).as("pct_early_shipment"),
+      pct(days >= 6 && col("delivery_date").isNull).as("pct_late_shipment"))
+    val winnerPcts = winner.agg(pcts.head, pcts.tail: _*)
 
     // CTE_FINAL (reviews_ETL.py:172-198)
-    cte2.crossJoin(mostOrdered).crossJoin(starPcts).crossJoin(shipPcts)
+    cte2.crossJoin(mostOrdered).crossJoin(winnerPcts)
       .select(
         lit(ingestionDate).cast("date").as("ingestion_date"),
         col("product_name"), col("most_ordered_day"), col("is_public_holiday"),

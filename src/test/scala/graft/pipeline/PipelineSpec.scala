@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 
@@ -11,7 +11,9 @@ import graft.SparkSpec
   */
 class PipelineSpec extends SparkSpec {
 
-  private lazy val inDir: String = {
+  private lazy val inDir: String = fixtures()
+
+  private def fixtures(): String = {
     val d = Files.createTempDirectory("graft-csv").toString
     def write(name: String, lines: String*): Unit =
       Files.writeString(new java.io.File(s"$d/$name.csv").toPath, lines.mkString("\n"))
@@ -47,8 +49,12 @@ class PipelineSpec extends SparkSpec {
     d
   }
 
+  private def cacheEntries = org.apache.spark.sql.graftshim.CacheEntries(spark)
+
   private def runAndRead(p: Pipeline, out: String) = {
+    val cached = cacheEntries
     p.run(spark)
+    assert(cacheEntries == cached, s"${p.name} left a cache entry behind")
     spark.read.option("header", "true").csv(out).collect()(0)
   }
 
@@ -86,5 +92,43 @@ class PipelineSpec extends SparkSpec {
     val p5 = row.getAs[String]("pct_five_star_review").toDouble
     assert(math.abs(p1 - 100.0 / 3) < 0.34)
     assert(math.abs(p5 - 200.0 / 3) < 0.34)
+  }
+
+  test("a rerun in the same session sees rewritten input, not a stale cache") {
+    val in = fixtures()
+    val out = Files.createTempDirectory("graft-out").toString
+    val p = ReferencePipelines.BestPerformingProductPipeline(in, out)
+    val first = runAndRead(p, s"$out/best_performing_product")
+    assert(first.getAs[String]("product_name") == "widget")
+    // product 8 now averages 5 against product 7's 1
+    Files.writeString(Paths.get(in, "reviews.csv"), "review,product_id\n1,7\n1,7\n5,8\n5,8")
+    val second = runAndRead(p, s"$out/best_performing_product")
+    assert(second.getAs[String]("product_name") == "gadget")
+  }
+
+  test("a clean run executes the transform once: one count, one write") {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = names.add(funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = names.add(s"failed $funcName")
+    }
+    val out = Files.createTempDirectory("graft-out").toString
+    for (p <- Seq(ReferencePipelines.AggPublicHolidayPipeline(inDir, out),
+                  ReferencePipelines.AggShipmentsPipeline(inDir, out),
+                  ReferencePipelines.BestPerformingProductPipeline(inDir, out))) {
+      names.clear()
+      spark.listenerManager.register(l)
+      try {
+        p.run(spark)
+        org.apache.spark.graftshim.ListenerBusSync.waitUntilEmpty(spark.sparkContext)
+      } finally spark.listenerManager.unregister(l)
+      // the sink's write reaches the listener as "command"
+      assert(names.toArray(Array.empty[String]).toSeq.sorted == Seq("command", "count"),
+        s"${p.name} executions")
+    }
   }
 }

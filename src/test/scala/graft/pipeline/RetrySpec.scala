@@ -36,4 +36,26 @@ class RetrySpec extends SparkSpec {
     assert(e.getMessage.contains("failed after 3 attempts"))
     assert(p.loaded == -1) // downstream stages never ran
   }
+
+  private class FailingLoad(error: => Throwable) extends Pipeline {
+    val name = "failing-load"
+    val loads = new AtomicInteger(0)
+    def extract(s: SparkSession): DataFrame = s.range(5).toDF("v")
+    def transform(df: DataFrame): DataFrame = df
+    def load(df: DataFrame): Unit = { loads.incrementAndGet(); throw error }
+  }
+
+  test("an interrupted load is not retried") {
+    val p = new FailingLoad(new InterruptedException("stop"))
+    intercept[InterruptedException](p.run(spark))
+    assert(p.loads.get == 1)
+  }
+
+  test("a non-fatal load error is retried, then surfaces wrapped") {
+    val p = new FailingLoad(new RuntimeException("transient"))
+    val e = intercept[RuntimeException](p.run(spark))
+    assert(p.loads.get == p.retries + 1)
+    assert(e.getMessage == s"[failing-load/load] failed after ${p.retries + 1} attempts")
+    assert(e.getCause.getMessage == "transient")
+  }
 }
