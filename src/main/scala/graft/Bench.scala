@@ -234,47 +234,16 @@ object Bench {
     }
     val (preGateCores, idleWaitSec, lastSample) =
       waitForIdle(5.0, idleWaitMaxSec)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same custom Catalyst surface the library sessions get
-      // (GraftSession.local): without it the bench times a plan the
-      // engine would never produce — grouped-top-k stays a full
-      // window sort instead of the bounded-heap aggregate
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive events.ts reads as session-tz (UTC) TIMESTAMP, not
-      // NTZ — matches the DuckDB oracle's view of the same file
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the 100-entry default thrashes on a 100+-query suite: every
-      // generated class is evicted before its next use, so the "warm"
-      // pass recompiles everything. Sized to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // typed-aggregate partials (topk_by_score heaps, sketch buffers)
-      // must stay HASH-based: the 128-key default fallback demotes any
-      // partition with >128 group keys to sort-based object aggregation
-      // - the r14 Zipf smoke measured the knn partial top-k sorting
-      // 14M-row partitions with 256MB spills (58s CPU in one task) for
-      // agg state that fits in a few MB of heap. 2^17 keys x ~100B
-      // state ~= 13MB/task - far under executor memory at 32 tasks.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      // caches report their real partitioning (see GraftSession) —
-      // without this every consumer re-exchanges persisted relations
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // plan-hash stability: FileScan metadata truncates at a CHAR
-      // budget (default 100) and run-varying exprId digit widths
-      // shift the cut point, making identical plans hash differently.
-      // Render the full strings instead — both confs only affect
-      // toString, never planning.
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the library's own session: without it the bench times a plan
+    // the engine would never produce
+    val spark = GraftSession.local(cpus.toInt, "graft-bench")
+    // plan-hash stability: FileScan metadata truncates at a CHAR
+    // budget (default 100) and run-varying exprId digit widths shift
+    // the cut point, making identical plans hash differently. Render
+    // the full strings instead — both confs only affect toString,
+    // never planning.
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
     // one throwaway action so JVM/scheduler warmup isn't billed to
     // whichever query happens to run first
     spark.read.parquet(s"$sfDir/region.parquet").count()

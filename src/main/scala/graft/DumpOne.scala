@@ -1,35 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object DumpOne {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name, out) = args
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive events.ts reads as session-tz (UTC) TIMESTAMP, not
-      // NTZ — matches the DuckDB oracle's view of the same file
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the 100-entry default thrashes on a 100+-query suite: every
-      // generated class is evicted before its next use, so the "warm"
-      // pass recompiles everything. Sized to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // typed-aggregate partials (topk_by_score heaps, sketch buffers)
-      // must stay HASH-based: the 128-key default fallback demotes any
-      // partition with >128 group keys to sort-based object aggregation
-      // - the r14 Zipf smoke measured the knn partial top-k sorting
-      // 14M-row partitions with 256MB spills (58s CPU in one task) for
-      // agg state that fits in a few MB of heap. 2^17 keys x ~100B
-      // state ~= 13MB/task - far under executor memory at 32 tasks.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      // caches report their real partitioning (see GraftSession)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, "graft-dump-one")
     SparkEntry.queries(name)(spark, sfDir).coalesce(1)
       .write.mode("overwrite").parquet(out)
     spark.stop()

@@ -59,6 +59,16 @@ object GraftSession {
       // reads from the same file.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // One executor class loader for every job. With isolation on,
+      // Spark 4.1's ArtifactManager.state tags each job of a session
+      // with JobArtifactState(sessionUUID, replClassURI); a streaming
+      // query clones the session on every start, so each
+      // IncrementalIngest run gets a new UUID and its tasks run under
+      // a fresh ExecutorClassLoader. CodeGenerator's cache is keyed on
+      // (classLoader, code), so every run recompiled the same
+      // generated classes. The engine adds no session artifacts (no
+      // addArtifact or addJar), so isolation has nothing to isolate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // dev escape hatch: SPARK_GRAFT_CONF="k=v;k=v" overlays any conf
     // (profiling experiments — never required for correctness)
     sys.env.get("SPARK_GRAFT_CONF").toSeq

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,40 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // register the custom optimizer rule + function surface here
-      // too, so the DuckDB oracle gate validates the SAME plans the
-      // library produces (a WindowTopKToHeap bug must fail THIS gate,
-      // not only the unit specs)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive events.ts reads as session-tz (UTC) TIMESTAMP, not
-      // NTZ — matches the DuckDB oracle's view of the same file
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the 100-entry default thrashes on a 100+-query suite: every
-      // generated class is evicted before its next use, so the "warm"
-      // pass recompiles everything. Sized to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // typed-aggregate partials (topk_by_score heaps, sketch buffers)
-      // must stay HASH-based: the 128-key default fallback demotes any
-      // partition with >128 group keys to sort-based object aggregation
-      // - the r14 Zipf smoke measured the knn partial top-k sorting
-      // 14M-row partitions with 256MB spills (58s CPU in one task) for
-      // agg state that fits in a few MB of heap. 2^17 keys x ~100B
-      // state ~= 13MB/task - far under executor memory at 32 tasks.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      // caches report their real partitioning (see GraftSession) —
-      // the gate must validate the same plans the library produces
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the library's own session: the DuckDB oracle gate validates the
+    // SAME plans the library produces (a WindowTopKToHeap bug must fail
+    // THIS gate, not only the unit specs)
+    val spark = GraftSession.local(cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // same subset filter as Bench (shared impl — see graft.Subset):
     // targeted dev-loop checks on one family; the driver never sets

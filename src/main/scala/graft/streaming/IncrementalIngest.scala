@@ -44,13 +44,15 @@ object IncrementalIngest extends StreamingProvider {
     * persisted fingerprint store, `operators.IncrementalDedup`).
     * Kept rows append to `destDir`.
     *
-    * Exactly-once story at scale: the checkpoint makes file pickup
-    * exactly-once; a replayed batch re-appends only fingerprints
-    * (harmless — the anti-join treats store dupes as one), and its
-    * kept rows overwrite-by-append the same content, so downstream
-    * consumers dedup on `h` if they need strict idempotence. State is
-    * 16 bytes per unique doc ever seen, NOT per-doc text — the store
-    * shuffles in the anti-join, nothing is collected or broadcast.
+    * Delivery story at scale: the checkpoint makes file pickup
+    * exactly-once, and a batch's fingerprints are appended only after
+    * its rows reach `destDir`. A batch whose destination write failed
+    * is replayed in full on the next run; one that failed after that
+    * write is delivered again. Delivery to `destDir` is therefore
+    * at-least-once: consumers dedup on `h` if they need strict
+    * idempotence. State is 16 bytes per unique doc ever seen, NOT
+    * per-doc text — the store shuffles in the anti-join, nothing is
+    * collected or broadcast.
     */
   def ingestDocumentsDedup(spark: SparkSession, srcDir: String,
                            schema: StructType, destDir: String,
@@ -62,10 +64,8 @@ object IncrementalIngest extends StreamingProvider {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val kept = graft.operators.IncrementalDedup
-          .dedupAgainstStore(batch.toDF(), storePath)
-        kept.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(destDir)
-        ()
+        graft.operators.IncrementalDedup.dedupAgainstStore(batch.toDF(), storePath)(
+          _.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(destDir))
       }
       .start()
     q.awaitTermination()

@@ -78,4 +78,56 @@ class IncrementalIngestSpec extends SparkSpec {
       """{"doc_id": 31}""")
     assert(ingest() == Set(1L, 3L, 11L, 20L, 22L))
   }
+
+  private val docSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("text",
+      org.apache.spark.sql.types.StringType)))
+
+  test("a batch whose destination write failed is ingested in full on the next run") {
+    val src = Files.createTempDirectory("graft-replayland").toString
+    val destRoot = Files.createTempDirectory("graft-replaydest")
+    val dest = destRoot.resolve("docs")
+    val ck = Files.createTempDirectory("graft-replayck").toString
+    val store = Files.createTempDirectory("graft-replayfp").toString + "/fp"
+    Files.writeString(new java.io.File(s"$src/b1.jsonl").toPath, Seq(
+      """{"doc_id": 1, "text": "alpha"}""",
+      """{"doc_id": 2, "text": "alpha"}""",
+      """{"doc_id": 3, "text": "beta"}""").mkString("\n"))
+    // a regular file where the destination directory should be: the
+    // destination write fails after the batch is deduped
+    Files.writeString(dest, "not a directory")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      IncrementalIngest.ingestDocumentsDedup(spark, src, docSchema,
+        dest.toString, ck, store)
+    }
+    Files.delete(dest)
+    IncrementalIngest.ingestDocumentsDedup(spark, src, docSchema,
+      dest.toString, ck, store)
+    val ids = spark.read.parquet(dest.toString).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == Seq(1L, 3L))
+  }
+
+  test("later runs of the same shape reuse the compiled classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val src = Files.createTempDirectory("graft-cgland").toString
+    val dest = Files.createTempDirectory("graft-cgdest").toString + "/docs"
+    val ck = Files.createTempDirectory("graft-cgck").toString
+    val store = Files.createTempDirectory("graft-cgfp").toString + "/fp"
+    def ingest(run: Int): Unit = {
+      Files.writeString(new java.io.File(s"$src/b$run.jsonl").toPath,
+        (0 until 4).map(i =>
+          s"""{"doc_id": ${run * 10 + i}, "text": "t${i % 3}-$run"}""")
+          .mkString("\n"))
+      IncrementalIngest.ingestDocumentsDedup(spark, src, docSchema, dest, ck, store)
+    }
+    ingest(1)
+    ingest(2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    ingest(3)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0)
+    assert(spark.read.parquet(dest).count() == 9)
+  }
 }
