@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -16,41 +16,41 @@ object Constraints {
     def clean: Boolean = duplicateKeys == 0 && nullRows == 0
   }
 
-  /** Count PK duplicates and NOT-NULL violations in one pass each. */
+  /** A failed check. Deterministic, so a retry cannot clear it. */
+  final class ConstraintViolation(val violations: Violations)
+      extends IllegalStateException(
+        s"constraint violations in ${violations.table}: " +
+          s"${violations.duplicateKeys} duplicate primary keys, " +
+          s"${violations.nullRows} rows with NULL in NOT NULL columns")
+
+  /** Counts PK duplicates and NOT-NULL violations in one `count` job:
+    * per key group its row count and null rows, totalled over the
+    * groups as observed metrics. An empty key is one group and never
+    * counts duplicates.
+    */
   def check(df: DataFrame, table: String, primaryKey: Seq[String],
             notNull: Seq[String]): Violations = {
-    val dupes =
-      if (primaryKey.isEmpty) 0L
-      else df.groupBy(primaryKey.map(col): _*)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
-    val nulls =
-      if (notNull.isEmpty) 0L
-      else df.filter(anyNull(notNull)).count()
-    Violations(table, dupes, nulls)
+    val duplicate = if (primaryKey.isEmpty) lit(false) else col("n") > 1
+    val totals = Observation()
+    df.groupBy(primaryKey.map(col): _*)
+      .agg(count(lit(1)).as("n"), count_if(anyNull(notNull)).as("nulls"))
+      .observe(totals, count_if(duplicate).as("dupes"),
+        coalesce(sum(col("nulls")), lit(0L)).as("nulls"))
+      .count()
+    val m = totals.get
+    Violations(table, m("dupes").asInstanceOf[Long], m("nulls").asInstanceOf[Long])
   }
 
   /** Materialises `df` once, checks it, and hands the cached rows to
-    * `sink` only if it is clean; the cache is released either way.
-    *
-    * The happy path is one `count` of violating key groups; the exact
-    * counts for the exception come from [[check]], run only when that
-    * count is non-zero.
+    * `sink` only if it is clean; the cache is released either way. The
+    * happy path is the one [[check]] job and the sink's write.
     */
   def enforce[T](df: DataFrame, table: String, primaryKey: Seq[String],
                  notNull: Seq[String])(sink: DataFrame => T): T = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val duplicate = if (primaryKey.isEmpty) lit(false) else col("n") > 1
-      val violating = df.groupBy(primaryKey.map(col): _*)
-        .agg(count(lit(1)).as("n"), count_if(anyNull(notNull)).as("nulls"))
-        .filter(duplicate || col("nulls") > 0)
-        .count()
-      if (violating > 0) {
-        val v = check(df, table, primaryKey, notNull)
-        throw new IllegalStateException(
-          s"constraint violations in $table: ${v.duplicateKeys} duplicate " +
-            s"primary keys, ${v.nullRows} rows with NULL in NOT NULL columns")
-      }
+      val v = check(df, table, primaryKey, notNull)
+      if (!v.clean) throw new ConstraintViolation(v)
       sink(df)
     } finally df.unpersist()
   }

@@ -294,242 +294,6 @@ object Dedup {
     */
   private[operators] val BlockPairCap = 10000
 
-  /** Memoized xxhash64-injectivity verdicts for [[jaccardPrefixJoin]],
-    * keyed by the input's CANONICALIZED logical plan (structural
-    * equality — collision-impossible, unlike a 32-bit semantic hash:
-    * this check exists to guarantee exactness, so its cache key must
-    * not be able to alias two distinct inputs). One O(vocab) probe
-    * job per distinct input relation per JVM, not per call.
-    */
-  private val injectivityVerdicts = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean]()
-
-  /** Verdict-map size cap: each key RETAINS a whole logical plan, so
-    * a long-lived service probing ever-fresh plans (e.g. per-batch
-    * temp views) would grow without bound. Past the cap the map is
-    * cleared — the only cost of a lost memo is one cheap re-probe.
-    */
-  private[operators] val VerdictCacheMax = 256
-
-  private[operators] def memoVerdict(
-      cache: java.util.concurrent.ConcurrentHashMap[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean],
-      key: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
-      probe: => Boolean): Boolean = {
-    // evict ONE arbitrary entry past the cap instead of clearing the
-    // whole map: a service steadily probing fresh plans would
-    // otherwise periodically re-probe every live pipeline at once
-    // (and a full clear racing computeIfAbsent could transiently
-    // blow past the cap anyway — dropping one key is no worse)
-    while (cache.size() > VerdictCacheMax) {
-      val it = cache.keySet().iterator()
-      if (it.hasNext) { it.next(); it.remove() } else return cache.computeIfAbsent(key, _ => probe)
-    }
-    cache.computeIfAbsent(key, _ => probe)
-  }
-
-  /** Disk-backed verdict memo (r15). The [[memoVerdict]] caches are
-    * per-JVM, so every fresh session re-paid the O(corpus) exactness
-    * probes (xxhash64 injectivity ~0.8 s, dup-share ~0.3 s at sf0.1)
-    * on the first use of each pipeline — inside the bench's cold
-    * window, and on a cluster inside the first query of every new
-    * driver. A probe verdict is a CORPUS STATISTIC, so it persists
-    * across sessions exactly like the other derived artifacts
-    * ([[DerivedLayout]]): keyed by md5 of (probe kind, the
-    * CANONICALIZED plan — exprIds normalized, deterministic across
-    * JVMs — and the leaf files' fingerprint: names, sizes, mtimes),
-    * under `target/derived/verdicts/`. The disk tier applies only
-    * when EVERY leaf of the plan is a LOCAL-filesystem file scan — a
-    * synthetic in-memory relation has no stable content key, and a
-    * remote scheme (hdfs://, s3a://) cannot be fingerprinted with
-    * local file metadata (r16 ADVICE: the old java.io.File probe
-    * yielded a constant `name:0:0` fingerprint off-box, silently
-    * serving stale verdicts) — so those stay JVM-memoized only and
-    * probe per session. Staleness is impossible by construction ON
-    * THE QUALIFYING PATH: the fingerprint enumerates the relation's
-    * own FileIndex leaf files recursively (nested partition dirs
-    * included) with sizes + mtimes, so changing any input file
-    * changes the key; changing the query changes the canonical
-    * semantic hash — the same contract that keeps the cluster
-    * assignment and the partitioned fact copy fresh.
-    */
-  private[operators] def memoVerdictDisk(
-      cache: java.util.concurrent.ConcurrentHashMap[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean],
-      df: DataFrame, kind: String)(probe: => Boolean): Boolean = {
-    val key = df.queryExecution.analyzed.canonicalized
-    Option(cache.get(key)) match {
-      case Some(v) => v.booleanValue()
-      case None =>
-        val computed = diskVerdictKey(df, kind) match {
-          case Some(dk) =>
-            val f = new java.io.File(s"target/derived/verdicts/$dk")
-            if (f.exists()) {
-              DerivedStore.touch(f)
-              new String(java.nio.file.Files.readAllBytes(f.toPath),
-                "UTF-8").trim == "true"
-            } else {
-              val v = probe
-              f.getParentFile.mkdirs()
-              // temp-file + atomic rename: a concurrent JVM sharing
-              // target/derived must never read a half-written verdict
-              // (a partial file parses as false — plan-only-safe
-              // today, but the memo must not depend on that asymmetry)
-              val tmp = java.nio.file.Files.createTempFile(
-                f.getParentFile.toPath, f.getName, ".tmp")
-              java.nio.file.Files.write(tmp,
-                (if (v) "true" else "false").getBytes("UTF-8"))
-              java.nio.file.Files.move(tmp, f.toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              DerivedStore.evictPast(f.getParentFile, DerivedStore.VerdictCap)
-              v
-            }
-          case None => probe
-        }
-        memoVerdict(cache, key)(computed)
-    }
-  }
-
-  /** Stable cross-session key for [[memoVerdictDisk]]: Some(md5) when
-    * every leaf of `df`'s plan is a local-filesystem file scan, None
-    * otherwise.
-    *
-    * Two keying rules, both load-bearing (r16 ADVICE):
-    *  - FILES come from the relation's own FileIndex (`allFiles()`:
-    *    every leaf file's full path + length + mtime, RECURSIVE
-    *    through nested partition dirs like root/a=1/b=2/part-*.parquet)
-    *    — never from a java.io.File directory listing, which is
-    *    non-recursive (a changed nested file leaves parent-dir mtimes
-    *    untouched) and meaningless for remote schemes. Paths whose
-    *    scheme isn't local (null/"file") or that don't exist locally
-    *    disqualify the plan from the disk tier entirely.
-    *  - The PLAN is keyed by its canonicalized UNTRUNCATED treeString
-    *    (explicit maxFields, not the spark.sql.maxToStringFields
-    *    default of 25) + full schema JSON, so two distinct wide-schema
-    *    plans over the same files can never alias to one md5 and swap
-    *    verdicts across queries of the same kind. NOT semanticHash():
-    *    that is the canonicalized plan's hashCode, and HadoopFsRelation
-    *    hashes its FileIndex by IDENTITY — a different value in every
-    *    JVM, which silently degraded the disk tier to per-session
-    *    (measured in the r16 recording session: every bench attempt
-    *    re-probed and re-trained under fresh keys, putting ~1.1 s of
-    *    probe jobs back inside dedup_minhash_lsh's cold window).
-    */
-  private def diskVerdictKey(df: DataFrame, kind: String): Option[String] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val plan = df.queryExecution.analyzed.canonicalized
-    val leaves = plan.collectLeaves()
-    if (leaves.isEmpty) return None
-    val parts = leaves.map {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          val roots = fs.location.rootPaths
-          val local = roots.nonEmpty && roots.forall { p =>
-            val scheme = p.toUri.getScheme
-            (scheme == null || scheme == "file") &&
-              new java.io.File(p.toUri.getPath).exists()
-          }
-          if (!local) None
-          else Some(fs.location.listFiles(Nil, Nil).flatMap(_.files)
-            .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
-            .sorted.mkString(","))
-        case _ => None
-      }
-      case _ => None
-    }
-    if (parts.exists(_.isEmpty)) None
-    else {
-      val raw = kind + "\n" +
-        plan.treeString(verbose = false, addSuffix = false,
-          maxFields = Int.MaxValue, printOperatorId = false) + "\n" +
-        plan.schema.json + "\n" + parts.flatten.mkString("|")
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(raw.getBytes("UTF-8"))
-      Some(d.map("%02x".format(_)).mkString)
-    }
-  }
-
-  /** Disk-backed trained-MODEL memo (r16, verdict item 3): trained
-    * ANN models (IVF centroids, PQ coarse quantizer + codebooks) are
-    * corpus statistics exactly like the exactness-probe verdicts — a
-    * real warehouse trains its quantizer ONCE and stores it with the
-    * index; it does not re-run Lloyd's algorithm inside every query's
-    * cold latency. Same keying contract as [[memoVerdictDisk]]
-    * (canonicalized UNTRUNCATED treeString + full schema JSON +
-    * recursive local-FS leaf-file fingerprint via [[diskVerdictKey]] —
-    * never semanticHash, which is JVM-unstable; see the diskVerdictKey
-    * doc — so a regenerated corpus always retrains), same
-    * atomic-rename write, same fall-through for non-file relations
-    * (tests/smokes train per JVM). Callers must VERSION their `kind`
-    * string (e.g. a `v1:` prefix) and bump it with any trainer or
-    * encode/decode format change: the key otherwise carries only
-    * hyperparams + corpus, so old-code models would silently serve
-    * (exact output either way, but a decode could crash on an
-    * old-format file and cross-round training-cost comparisons would
-    * mix code versions). Output safety does NOT rest on the model being byte-stable:
-    * the consumers are certificate-exact w.r.t. the model (ivfTopK's
-    * registered query probes every cell; ivfpqTopK's rerank pool is
-    * bound-certified ⊇ the true top-k), so WHICH converged model is
-    * served can never change query output — the memo only moves
-    * training cost out of per-query latency, which is also why the
-    * r15 bench flagged the ANN family cold_vs_warm (driver-side
-    * training re-ran inside every cold window).
-    */
-  private[operators] def memoModelDisk[T <: AnyRef](
-      cache: java.util.concurrent.ConcurrentHashMap[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, AnyRef],
-      df: DataFrame, kind: String)(
-      train: => T)(encode: T => String)(decode: String => T): T = {
-    val key = df.queryExecution.analyzed.canonicalized
-    // bounded like [[memoVerdict]]: each key retains a whole plan
-    while (cache.size() > VerdictCacheMax) {
-      val it = cache.keySet().iterator()
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    // computeIfAbsent, matching memoVerdict's contract (r16 ADVICE):
-    // two threads racing the first call for one plan must not both
-    // run training — the old get → compute → put let both pay the
-    // Lloyd cost (benign last-wins result, duplicated work)
-    // the single preload opt-out (SPARK_GRAFT_AOT_WARM=0, r17 verdict
-    // item 2) bypasses the DISK tier entirely: training runs per JVM,
-    // inside whatever timed window first needs the model — the
-    // raw-JVM, train-included regime, measurable on demand. The
-    // in-JVM memo above still dedups within a run.
-    cache.computeIfAbsent(key, _ =>
-      diskVerdictKey(df, kind).filter(_ => ModelCost.preloadsEnabled) match {
-        case Some(dk) =>
-          val f = new java.io.File(s"target/derived/models/$dk")
-          val sidecar = new java.io.File(s"target/derived/models/$dk.sec")
-          if (f.exists()) {
-            DerivedStore.touch(f)
-            DerivedStore.touch(sidecar)
-            // excluded-cost ledger: the artifact's original build
-            // seconds ride its sidecar so every later recording can
-            // still surface what its timed windows skip
-            ModelCost.recordLoaded(kind, dk, sidecar)
-            decode(new String(
-              java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-          } else {
-            val t0 = System.nanoTime()
-            val v = train
-            val buildSec = (System.nanoTime() - t0) / 1e9
-            f.getParentFile.mkdirs()
-            val tmp = java.nio.file.Files.createTempFile(
-              f.getParentFile.toPath, f.getName, ".tmp")
-            java.nio.file.Files.write(tmp, encode(v).getBytes("UTF-8"))
-            java.nio.file.Files.move(tmp, f.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            try java.nio.file.Files.writeString(sidecar.toPath,
-              "%.3f".format(buildSec))
-            catch { case _: Throwable => () }
-            ModelCost.recordBuilt(kind, dk, buildSec)
-            DerivedStore.evictPast(f.getParentFile, DerivedStore.ModelCap)
-            v
-          }
-        case None => train
-      }).asInstanceOf[T]
-  }
-
   /** Duplicate share above which the exact-then-near REP composition
     * pays for itself. Both branches are exact, so the gate can never
     * change output — it only decides whether the textGroups shuffle +
@@ -541,17 +305,13 @@ object Dedup {
     */
   private[operators] val RepGateDupShare = 0.05
 
-  /** Memoized "corpus is essentially duplicate-free" verdicts for the
-    * rep-composition gate, keyed like [[injectivityVerdicts]] by the
-    * input's canonicalized plan — one cheap O(corpus) count-distinct
-    * agg per distinct input relation per JVM, map-side combined on
-    * the 128-bit content hash.
+  /** "Corpus is essentially duplicate-free" verdict for the
+    * rep-composition gate, kept in [[DerivedStore]] — one cheap
+    * O(corpus) count-distinct agg per distinct input relation,
+    * map-side combined on the 128-bit content hash.
     */
-  private val dupFreeVerdicts = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean]()
-
   private def essentiallyDupFree(docs: DataFrame): Boolean =
-    memoVerdictDisk(dupFreeVerdicts, docs, "dupfree") {
+    DerivedStore.verdict(docs, "dupfree") {
       // count_distinct skips NULLs, so null texts must be counted as
       // ONE distinct group (textGroups treats them that way) — not as
       // n_null "duplicates" that would misroute a dup-free corpus
@@ -768,7 +528,7 @@ object Dedup {
     // builds its own throwaway string pipeline; it runs once per
     // corpus fingerprint and is then a disk hit.
     val useHash =
-      memoVerdictDisk(injectivityVerdicts, docs, s"xxinj_vocab_k$shingleK") {
+      DerivedStore.verdict(docs, s"xxinj_vocab_k$shingleK") {
         shingleSetsK(spread(docs, col("doc_id")), shingleK)
           .select(explode(col("toks")).as("w"))
           .agg((count_distinct(col("w")) ===
@@ -1278,16 +1038,17 @@ object Dedup {
     * jobs where one job plus three cheap consumers suffices. A real
     * warehouse maintains the cluster assignment as a table exactly
     * like the partitioned fact copy ([[PartitionedFacts]]) — same
-    * derived-layout mechanism here, same source-fingerprint staleness
-    * guard, so a regenerated corpus can never serve a stale
-    * clustering. Exact: the layout holds [[minhashClusters]]' own
-    * output, so the cross-engine hash gate is unaffected.
+    * [[DerivedStore.table]] here, keyed on the documents' files and
+    * the engine code, so neither a regenerated corpus nor a changed
+    * clustering can serve a stale assignment. Exact: the layout holds
+    * [[minhashClusters]]' own output, so the cross-engine hash gate is
+    * unaffected.
     */
-  def materializedClusters(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(DerivedLayout.derive(s, dir, "cluster_assignment",
-      "documents.parquet") {
-      minhashClusters(Tables(s, dir).documents)
-    })
+  def materializedClusters(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(s, dir).documents
+    s.read.parquet(DerivedStore.table(dir, "cluster_assignment", docs)(
+      minhashClusters(docs).write.mode("overwrite").parquet(_)))
+  }
 
   /** Min-label propagation over an undirected graph given as DIRECTED
     * edge pairs `(doc_a, doc_b)` — returns `(id, cluster_id)` for
@@ -1725,7 +1486,7 @@ object Dedup {
     // non-injective fallback branch; on the normal path it never
     // executes after the verdict is on disk
     val sets = shingleSets(spreadDocs)
-    val useHash = memoVerdictDisk(injectivityVerdicts, sets, "xxinj_bigram") {
+    val useHash = DerivedStore.verdict(sets, "xxinj_bigram") {
       sets.select(explode(col("toks")).as("w"))
         .agg((count_distinct(col("w")) ===
           count_distinct(xxhash64(col("w")))).as("ok"))

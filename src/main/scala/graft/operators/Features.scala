@@ -345,7 +345,7 @@ object Features {
     (meansE6, v1, v2, covE6, cov2)
   }
 
-  /** [[powerFitE6]] memoized per (corpus fingerprint, iters) — the
+  /** [[powerFitE6]] memoized per store key (its kind carries `iters`) — the
     * PCA family's analogue of the cluster family's derived layout
     * (r11 verdict #3): three board queries (`pca_power_projection`,
     * `mahalanobis_pc2`, `zca_whiten_pc2`) consume the identical
@@ -354,17 +354,21 @@ object Features {
     * DRIVER-SIDE model (a few width-bounded Long arrays — exactly the
     * legitimate-collect class), so a JVM-lifetime memo is the right
     * mechanism — unlike cached DataFrames it survives Bench's
-    * per-query clearCache, and the [[DerivedLayout.fingerprint]] key
-    * gives it the same staleness guarantee as the on-disk layouts: a
-    * regenerated corpus can never serve a stale eigenbasis.
+    * per-query clearCache, and the [[DerivedStore.key]] gives it the
+    * same staleness guarantee as the on-disk layouts: neither a
+    * regenerated corpus nor changed engine code can serve a stale
+    * eigenbasis. A corpus without a key is refitted on every call.
     */
-  def powerFitE6For(s: SparkSession, dir: String, iters: Int): Fit =
-    fitMemo.computeIfAbsent(
-      (DerivedLayout.fingerprint(dir, "embeddings.parquet"), iters),
-      _ => powerFitE6(Tables(s, dir).embeddings, iters))
+  def powerFitE6For(s: SparkSession, dir: String, iters: Int): Fit = {
+    val emb = Tables(s, dir).embeddings
+    DerivedStore.key(emb, s"pca_fit_i$iters") match {
+      case Some(k) => fitMemo.computeIfAbsent(k, _ => powerFitE6(emb, iters))
+      case None => powerFitE6(emb, iters)
+    }
+  }
 
   private val fitMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Fit]()
+    new java.util.concurrent.ConcurrentHashMap[String, Fit]()
 
   /** Fixed-point projection column Σᵢ v_i·(x_i_e6 − mean_i_e6) —
     * scale 1e12, all-integer, shuffle-free.

@@ -83,11 +83,11 @@ object IncrementalDedup {
     if (r.getDouble(1) == 0) 1.0 else r.getDouble(0) / r.getDouble(1)
   }
 
-  private def storeDf(spark: SparkSession, path: String): DataFrame =
-    try spark.read.schema(StoreSchema).parquet(path)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        // first run: no store yet
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StoreSchema)
-    }
+  private def storeDf(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(StoreSchema).parquet(path)
+    else // first run: no store yet
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StoreSchema)
+  }
 }

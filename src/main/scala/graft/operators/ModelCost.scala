@@ -1,37 +1,38 @@
 package graft.operators
 
-/** Ledger of trained-model build cost EXCLUDED from timed query
+/** Ledger of model and probe build cost EXCLUDED from timed query
   * windows, plus the single opt-out gate for every bench-setup
   * preload/warm (r17 verdict item 2).
   *
-  * The disk-backed model memo ([[Dedup.memoModelDisk]]) moves trainer
-  * loops (ANN centroids/codebooks, BPE merges) out of per-query
-  * latency — the warehouse "the trained model ships with the index"
-  * billing argument. The r17 verdict accepted the argument but flagged
-  * the accounting: once the artifact exists on disk, NO timed window
-  * ever executes the trainer again and the excluded cost silently
-  * vanishes from every recording. Two fixes live here:
+  * The disk tier of [[DerivedStore.value]] moves trainer loops (ANN
+  * centroids/codebooks, BPE merges) and exactness probes out of
+  * per-query latency — the warehouse "the trained model ships with
+  * the index" billing argument. The r17 verdict accepted the argument
+  * but flagged the accounting: once the artifact exists on disk, NO
+  * timed window ever executes the trainer again and the excluded cost
+  * silently vanishes from every recording. Two fixes live here:
   *
   *  - [[preloadsEnabled]]: `SPARK_GRAFT_AOT_WARM=0` now gates ALL
   *    setup preloads and warms with one switch — the JIT/engine warms
-  *    in Bench setup AND the model memos themselves (the memo falls
-  *    through to train-per-JVM, no disk read or write), so an opted-out
-  *    run demonstrably pays training inside the first timed window
-  *    that needs the model (the raw-JVM regime, measurable on demand).
+  *    in Bench setup AND the store's disk tier for every value kind
+  *    (values are then computed once per JVM, no disk read or write),
+  *    so an opted-out run demonstrably pays training inside the first
+  *    timed window that needs the model (the raw-JVM regime,
+  *    measurable on demand).
   *
-  *  - the cost ledger: every memoModelDisk train is timed and the
-  *    seconds persist in a `<key>.sec` sidecar next to the artifact;
-  *    disk hits re-read the sidecar. Bench sums whatever the setup
-  *    preloads registered and emits `model_build_sec` in the recording
-  *    — the excluded cost is visible in the artifact instead of
-  *    vanished. Entries key by artifact fingerprint, so one model
-  *    counted via two queries still counts once.
+  *  - the cost ledger: every value built through the disk tier is
+  *    timed and the seconds persist in the first line of its entry;
+  *    disk hits re-read them. Bench sums whatever the setup preloads
+  *    registered and emits `model_build_sec` in the recording — the
+  *    excluded cost is visible in the artifact instead of vanished.
+  *    Entries key by store key, so one model counted via two queries
+  *    still counts once.
   */
 object ModelCost {
 
   /** One gate for every setup preload/warm (graph + streaming AOT
-    * warms in Bench, ANN/BPE model preloads, and the disk memo
-    * itself). Read per call, not cached: tests set the property via
+    * warms in Bench, ANN/BPE model preloads, and the store's disk
+    * value tier). Read per call, not cached: tests set the property via
     * [[forceDisabled]].
     */
   def preloadsEnabled: Boolean =
@@ -47,19 +48,9 @@ object ModelCost {
   def recordBuilt(kind: String, key: String, sec: Double): Unit =
     costs.put(key, (kind, sec, true))
 
-  /** Record a disk hit whose sidecar carries the original build cost;
-    * missing/corrupt sidecars record 0 so the entry still shows up.
-    */
-  def recordLoaded(kind: String, key: String, sidecar: java.io.File): Unit = {
-    val sec =
-      try {
-        if (sidecar.exists())
-          new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
-            "UTF-8").trim.toDouble
-        else 0.0
-      } catch { case _: Throwable => 0.0 }
+  /** Record a disk hit carrying its original build cost `sec`. */
+  def recordLoaded(kind: String, key: String, sec: Double): Unit =
     costs.putIfAbsent(key, (kind, sec, false))
-  }
 
   /** Total excluded build seconds registered so far in this JVM. */
   def totalSec: Double = {

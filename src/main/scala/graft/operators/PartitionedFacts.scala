@@ -17,27 +17,22 @@ import graft.catalog.Tables
   * (asserted in PlanQualitySpec).
   *
   * The partitioned copy is derived once per scale factor under
-  * `target/derived/` (idempotent; keyed on the `_SUCCESS` marker) —
-  * standing in for the partitioned external table a real warehouse
-  * would maintain.
+  * `target/derived/` ([[DerivedStore.table]]) — standing in for the
+  * partitioned external table a real warehouse would maintain.
   */
 object PartitionedFacts {
 
   /** Path of the ship-month-partitioned lineitem copy, writing it on
-    * first use. The cached copy is keyed on a fingerprint of the
-    * SOURCE parquet (file names, sizes, mtimes), not on mere
-    * `_SUCCESS` existence — if the testdata at the same sf dir is
-    * regenerated, a marker-only check would silently serve the stale
-    * fact copy and diverge from the freshly-computed oracle.
+    * first use and again whenever the source files or the engine code
+    * change.
     */
-  def partitionedLineitem(s: SparkSession, dir: String): String =
-    DerivedLayout.deriveWith(s, dir, "lineitem_by_ship_ym",
-      "lineitem.parquet") { out =>
-      Tables(s, dir).lineitem
-        .withColumn("ship_ym", date_format(col("l_shipdate"), "yyyy-MM"))
+  def partitionedLineitem(s: SparkSession, dir: String): String = {
+    val li = Tables(s, dir).lineitem
+    DerivedStore.table(dir, "lineitem_by_ship_ym", li)(
+      li.withColumn("ship_ym", date_format(col("l_shipdate"), "yyyy-MM"))
         .repartition(col("ship_ym")) // one writer task per partition dir
-        .write.mode("overwrite").partitionBy("ship_ym").parquet(out)
-    }
+        .write.mode("overwrite").partitionBy("ship_ym").parquet(_))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // revenue shipped in 1995-Q4, with the quarter coming from a dim

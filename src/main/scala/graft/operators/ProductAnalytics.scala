@@ -400,16 +400,15 @@ object ProductAnalytics {
     * makes the ONE layout serve both the weighted consumers
     * (co-occurrence counts, item-item cosine, association rules) and
     * the unweighted graph trio (edges = the distinct key set).
-    * Same [[DerivedLayout]] mechanism as the partitioned fact copy
-    * and the cluster assignment — fingerprint-guarded against a
-    * regenerated corpus, billed to bench setup like all one-time
-    * layout jobs.
+    * Same [[DerivedStore.table]] as the partitioned fact copy and the
+    * cluster assignment — keyed on the source files and the engine
+    * code, billed to bench setup like all one-time layout jobs.
     */
-  def materializedPairCounts(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(DerivedLayout.derive(s, dir, "copurchase_pairs",
-      "lineitem.parquet") {
-      copurchasePairCounts(Tables(s, dir).lineitem)
-    })
+  def materializedPairCounts(s: SparkSession, dir: String): DataFrame = {
+    val li = Tables(s, dir).lineitem
+    s.read.parquet(DerivedStore.table(dir, "copurchase_pairs", li)(
+      copurchasePairCounts(li).write.mode("overwrite").parquet(_)))
+  }
 
   /** Materialized per-part order counts `(part, n_item)` — the node
     * face of the same layout family: the part set (PageRank/BFS node
@@ -418,15 +417,15 @@ object ProductAnalytics {
     * map-side-combined aggregate over the distinct (order, part)
     * relation, derived once per corpus.
     */
-  def materializedPartOrderCounts(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(DerivedLayout.derive(s, dir, "part_order_counts",
-      "lineitem.parquet") {
-      val li = Tables(s, dir).lineitem
+  def materializedPartOrderCounts(s: SparkSession, dir: String): DataFrame = {
+    val li = Tables(s, dir).lineitem
+    s.read.parquet(DerivedStore.table(dir, "part_order_counts", li)(
       li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
         .groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
         .select(col("pk").as("part"), col("n_item"))
-    })
+        .write.mode("overwrite").parquet(_)))
+  }
 
   /** The pair-count build behind [[materializedPairCounts]]: the
     * codegen orderkey self-join of [[copurchaseEdges]] with the

@@ -161,10 +161,8 @@ object ProductQuantization {
     */
   private[operators] def trainedPqModels(
       emb: DataFrame): (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    // `v1:` versions the trainer+codec — bump with any collectSample/
-    // lloyd/encode-format change (see [[Dedup.memoModelDisk]] doc)
-    Dedup.memoModelDisk(pqMemo, emb,
-      s"v1:pq_models:m$M:k$CodebookK:c$CoarseCells:i$Iters:t$TrainSample")({
+    DerivedStore.value(emb,
+      s"pq_models:m$M:k$CodebookK:c$CoarseCells:i$Iters:t$TrainSample")({
       val raw = collectSample(emb)
       (lloyd(raw.map(_.map(_.toDouble).toArray),
         raw.take(CoarseCells).map(_.map(_.toDouble).toArray), Iters),
@@ -177,9 +175,6 @@ object ProductQuantization {
       (Similarity.decodeMatrix(c),
         m.split("\n#\n").map(Similarity.decodeMatrix))
     })
-
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, AnyRef]()
 
   /** IVF-routed PQ top-k with PROVABLE candidate pruning: encode the
     * corpus in one shuffle-free pass (coarse cell + PQ codes + the

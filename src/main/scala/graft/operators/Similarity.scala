@@ -317,10 +317,8 @@ object Similarity {
     * count. xxhash64 over the raw array is deterministic; a collision
     * could only misroute the PLAN choice, never the output.
     */
-  private val embDupVerdicts = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean]()
   private def embeddingsDupFree(emb: DataFrame): Boolean =
-    graft.operators.Dedup.memoVerdictDisk(embDupVerdicts, emb, "embdupfree") {
+    DerivedStore.verdict(emb, "embdupfree") {
       val r = emb.agg(count(lit(1)),
         count_distinct(xxhash64(col("label"), col("embedding")))).head()
       val n = r.getLong(0)
@@ -607,18 +605,13 @@ object Similarity {
     // this function — count + seed collect + LloydIters mean-collect
     // jobs re-ran inside every cold window. The quantizer is a corpus
     // statistic; persist it like the probe verdicts
-    // ([[Dedup.memoModelDisk]] — see its exactness argument: the
-    // registered query probes every cell, so the served model can
-    // never change output).
-    // the `v1:` token versions the TRAINER+CODEC, not the hyperparams
-    // (r16 ADVICE): bump it with any lloyd/sample/encodeMatrix change
-    // so old-format files can never be served to new decode code
-    Dedup.memoModelDisk(centroidMemo, emb,
-      s"v1:ivf_centroids:k$Cells:i$LloydIters:s$SamplePerCell")(
+    // ([[DerivedStore.value]]). The registered query probes every
+    // cell, so WHICH converged model is served can never change
+    // output; the store key covers the engine code, so a trainer or
+    // codec change retrains.
+    DerivedStore.value(emb,
+      s"ivf_centroids:k$Cells:i$LloydIters:s$SamplePerCell")(
       trainCentroidsNow(emb))(encodeMatrix)(decodeMatrix)
-
-  private val centroidMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, AnyRef]()
 
   private[operators] def encodeMatrix(m: Array[Array[Double]]): String =
     m.map(_.map(java.lang.Double.toString).mkString(",")).mkString("\n")
@@ -693,15 +686,12 @@ object Similarity {
     * the model (pruned candidates/hits) to be oracle-hash-checked,
     * unlike the serving quantizer whose consumers are certificate-
     * exact and therefore tolerate a float trainer. Disk-memoized like
-    * every trained model ([[Dedup.memoModelDisk]]).
+    * every trained model ([[DerivedStore.value]]).
     */
   def trainCentroidsExact(emb: DataFrame): Array[Array[Double]] =
-    Dedup.memoModelDisk(centroidExactMemo, emb,
-      s"v1:ivf_centroids_exact:k$PrunedCells:i$LloydIters:s$SamplePerCell")(
+    DerivedStore.value(emb,
+      s"ivf_centroids_exact:k$PrunedCells:i$LloydIters:s$SamplePerCell")(
       trainCentroidsExactNow(emb))(encodeMatrix)(decodeMatrix)
-
-  private val centroidExactMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, AnyRef]()
 
   private def trainCentroidsExactNow(emb: DataFrame): Array[Array[Double]] = {
     graft.functions.Md5Hash60.register(emb.sparkSession)

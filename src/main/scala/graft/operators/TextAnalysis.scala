@@ -713,17 +713,8 @@ object TextAnalysis {
     merges.toSeq
   }
 
-  // one cache PER rounds value: memoModelDisk's in-JVM map keys by
-  // input plan alone (kind only reaches the disk key), so a single
-  // shared map would serve rounds=3 merges to a rounds=2 call over
-  // the same relation — caught by BpeLearnSpec when these calls
-  // first shared a cache
-  private val bpeModelCaches = new java.util.concurrent.ConcurrentHashMap[
-    Int, java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, AnyRef]]()
-
-  /** Fingerprint-keyed learned merge table (r17) — the tokenizer
-    * twin of the ANN quantizer store (Dedup.memoModelDisk, r16): a
+  /** Store-kept learned merge table (r17) — the tokenizer twin of
+    * the ANN quantizer models ([[DerivedStore.value]], r16): a
     * trained tokenizer SHIPS with the pipeline; re-running the
     * sequential trainer loop (rounds × 2 driver-paced jobs) inside
     * every encode/fertility/decode invocation was measured as the
@@ -733,16 +724,11 @@ object TextAnalysis {
     * never a corpus-derived intermediate. Serialization is one merge
     * per line, fields space-joined: vocabulary tokens come from a
     * \\s+ split, so no token can contain a space/newline and the
-    * format is unambiguous. The v1 token versions the trainer
-    * (bump with any trainer change, r16 ADVICE).
+    * format is unambiguous.
     */
   private def bpeMergesFor(docs: DataFrame, rounds: Int)
       : Seq[(Int, String, String, String, Long)] =
-    Dedup.memoModelDisk(
-      bpeModelCaches.computeIfAbsent(rounds,
-        _ => new java.util.concurrent.ConcurrentHashMap[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, AnyRef]()),
-      docs, s"bpe_merges_v1_r$rounds") {
+    DerivedStore.value(docs, s"bpe_merges_r$rounds") {
       bpeTrainMerges(docs, rounds)
     } { ms =>
       ms.map { case (k, l, r, m, n) => s"$k $l $r $m $n" }.mkString("\n")

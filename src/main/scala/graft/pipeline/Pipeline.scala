@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SURVEY.md §2.9 D1).
   *
   * D2 (retries=2) becomes a simple stage retry wrapper over non-fatal
-  * errors; fatal ones and interrupts propagate at once. D3 (the
+  * errors; fatal ones, interrupts and constraint violations (which a
+  * rerun of the same input would only repeat) propagate at once. D3 (the
   * reference swallows every exception and prints — `orders_ETL.py:
   * 66-67,130-131,146-147`) is consciously NOT replicated: stages
   * fail fast after retries are exhausted.
@@ -34,6 +35,7 @@ trait Pipeline {
     while (attempt <= retries) {
       try return body
       catch {
+        case e: graft.catalog.Constraints.ConstraintViolation => throw e
         case NonFatal(e) =>
           last = e
           attempt += 1
@@ -60,41 +62,35 @@ object ReferencePipelines {
     */
   final case class AggPublicHolidayPipeline(inDir: String, outDir: String) extends Pipeline {
     val name = "agg_public_holiday"
-    private var spark: SparkSession = _
-    def extract(s: SparkSession): DataFrame = {
-      spark = s; Csv.read(s, s"$inDir/orders.csv", orders)
-    }
+    def extract(s: SparkSession): DataFrame = Csv.read(s, s"$inDir/orders.csv", orders)
     def transform(df: DataFrame): DataFrame =
       ReferenceTransforms.aggPublicHoliday(
-        df, Csv.read(spark, s"$inDir/dim_dates.csv", dimDates))
+        df, Csv.read(df.sparkSession, s"$inDir/dim_dates.csv", dimDates))
     def load(df: DataFrame): Unit = commit(df, name, outDir, Seq("ingestion_date"))
   }
 
   final case class AggShipmentsPipeline(inDir: String, outDir: String) extends Pipeline {
     val name = "agg_shipments"
-    private var spark: SparkSession = _
-    def extract(s: SparkSession): DataFrame = {
-      spark = s; Csv.read(s, s"$inDir/shipments_deliveries.csv", shipmentsDeliveries)
-    }
+    def extract(s: SparkSession): DataFrame =
+      Csv.read(s, s"$inDir/shipments_deliveries.csv", shipmentsDeliveries)
     def transform(df: DataFrame): DataFrame =
       ReferenceTransforms.aggShipments(
-        df, Csv.read(spark, s"$inDir/orders.csv", orders))
+        df, Csv.read(df.sparkSession, s"$inDir/orders.csv", orders))
     def load(df: DataFrame): Unit = commit(df, name, outDir, Seq("ingestion_date"))
   }
 
   final case class BestPerformingProductPipeline(inDir: String, outDir: String) extends Pipeline {
     val name = "best_performing_product"
-    private var spark: SparkSession = _
-    def extract(s: SparkSession): DataFrame = {
-      spark = s; Csv.read(s, s"$inDir/reviews.csv", reviews)
-    }
-    def transform(df: DataFrame): DataFrame =
+    def extract(s: SparkSession): DataFrame = Csv.read(s, s"$inDir/reviews.csv", reviews)
+    def transform(df: DataFrame): DataFrame = {
+      val s = df.sparkSession
       ReferenceTransforms.bestPerformingProduct(
         df,
-        Csv.read(spark, s"$inDir/dim_products.csv", dimProducts),
-        Csv.read(spark, s"$inDir/orders.csv", orders),
-        Csv.read(spark, s"$inDir/dim_dates.csv", dimDates),
-        Csv.read(spark, s"$inDir/shipments_deliveries.csv", shipmentsDeliveries))
+        Csv.read(s, s"$inDir/dim_products.csv", dimProducts),
+        Csv.read(s, s"$inDir/orders.csv", orders),
+        Csv.read(s, s"$inDir/dim_dates.csv", dimDates),
+        Csv.read(s, s"$inDir/shipments_deliveries.csv", shipmentsDeliveries))
+    }
     def load(df: DataFrame): Unit =
       commit(df, name, outDir, Seq("ingestion_date", "product_name"))
   }

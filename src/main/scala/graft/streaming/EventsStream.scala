@@ -226,7 +226,7 @@ object EventsStream extends StreamingProvider {
     }
   }
 
-  private[streaming] def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.exists(p)) {
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator

@@ -1,14 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The ledger is plain-file machinery (no Spark session needed): the
   * JSONL round-trip must be lossless — an adopted record read back by
   * the NEXT attempt's JVM must carry exactly the windows that
   * justified its adoption — and the assembled artifact must reproduce
   * the single-run recording's flag rules from ledger records alone.
   */
-class BenchLedgerSpec extends AnyFunSuite {
+class BenchLedgerSpec extends SparkSpec {
 
   private def rec(name: String, attempt: Int, cold: Double,
                   warm: Seq[Double]) =
@@ -107,34 +105,35 @@ class BenchLedgerSpec extends AnyFunSuite {
   }
 
   test("write/read round-trips attempts, records, and pending meta") {
-    val dir = java.nio.file.Files.createTempDirectory("ledger")
-    val path = dir.resolve("ledger.json").toString
-    val (a0, r0) = BenchLedger.read(path)
-    assert(a0 == 0 && r0.isEmpty) // missing file = fresh campaign
-    val done = Map(
-      "q_b" -> rec("q_b", 2, 1.0, Seq(0.8, 0.9, 0.7)),
-      "q_a" -> rec("q_a", 1, 3.0, Seq(2.0, 2.1, 1.9)))
-    BenchLedger.write(path, attempts = 2, sf = "/sf0.1", cpus = "32",
-      warmReps = 3, cleanSteal = 0.30, cleanIowait = 1.50,
-      done = done, pendingNames = Seq("q_c"))
-    val (a1, r1) = BenchLedger.read(path)
-    assert(a1 == 2)
-    assert(r1.keySet == Set("q_a", "q_b"))
-    assert(r1("q_a").attempt == 1 && r1("q_b").attempt == 2)
-    assert(r1("q_a").cold == 3.0)
-    // meta line must be first and carry pending for the retry loop
-    val first = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(path)).get(0)
-    assert(first.startsWith("{\"meta\""))
-    assert(first.contains("\"pending\":true"))
-    assert(first.contains("\"pending_queries\":[\"q_c\"]"))
-    // board complete -> pending:false, which the retry loop keys on
-    BenchLedger.write(path, attempts = 3, sf = "/sf0.1", cpus = "32",
-      warmReps = 3, cleanSteal = 0.30, cleanIowait = 1.50,
-      done = done, pendingNames = Seq.empty)
-    val done2 = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(path)).get(0)
-    assert(done2.contains("\"pending\":false"))
+    withTempDir { t =>
+      val path = t.resolve("ledger.json").toString
+      val (a0, r0) = BenchLedger.read(path)
+      assert(a0 == 0 && r0.isEmpty) // missing file = fresh campaign
+      val done = Map(
+        "q_b" -> rec("q_b", 2, 1.0, Seq(0.8, 0.9, 0.7)),
+        "q_a" -> rec("q_a", 1, 3.0, Seq(2.0, 2.1, 1.9)))
+      BenchLedger.write(path, attempts = 2, sf = "/sf0.1", cpus = "32",
+        warmReps = 3, cleanSteal = 0.30, cleanIowait = 1.50,
+        done = done, pendingNames = Seq("q_c"))
+      val (a1, r1) = BenchLedger.read(path)
+      assert(a1 == 2)
+      assert(r1.keySet == Set("q_a", "q_b"))
+      assert(r1("q_a").attempt == 1 && r1("q_b").attempt == 2)
+      assert(r1("q_a").cold == 3.0)
+      // meta line must be first and carry pending for the retry loop
+      val first = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(path)).get(0)
+      assert(first.startsWith("{\"meta\""))
+      assert(first.contains("\"pending\":true"))
+      assert(first.contains("\"pending_queries\":[\"q_c\"]"))
+      // board complete -> pending:false, which the retry loop keys on
+      BenchLedger.write(path, attempts = 3, sf = "/sf0.1", cpus = "32",
+        warmReps = 3, cleanSteal = 0.30, cleanIowait = 1.50,
+        done = done, pendingNames = Seq.empty)
+      val done2 = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(path)).get(0)
+      assert(done2.contains("\"pending\":false"))
+    }
   }
 
   test("assemble reproduces totals, flags, and provenance") {

@@ -15,6 +15,14 @@ trait SparkSpec extends AnyFunSuite {
       r.schema.fieldNames.zip(r.toSeq).toMap)
 
   def run(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)
+
+  /** Runs `body` with a fresh temp directory and deletes it, with
+    * everything written under it, afterwards.
+    */
+  def withTempDir[T](body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spec")
+    try body(dir) finally graft.streaming.EventsStream.deleteRecursively(dir)
+  }
 }
 
 object SparkSpec {

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
@@ -46,18 +46,20 @@ class ConstraintsSpec extends SparkSpec {
       (Some(1), Some("a")), (Some(1), Some("b")), // dup key
       (Some(2), None), (None, Some("c"))          // null violations
     ).toDF("id", "v")
-    val out = Paths.get(Files.createTempDirectory("graft-constraints").toString, "bad")
-    var sinkCalls = 0
-    val e = intercept[IllegalStateException](
-      Constraints.enforce(bad, "bad", Seq("id"), Seq("id", "v")) { df =>
-        sinkCalls += 1
-        graft.sources.Csv.writeSingle(df, out.toString)
-      })
-    assert(e.getMessage == "constraint violations in bad: 1 duplicate " +
-      "primary keys, 2 rows with NULL in NOT NULL columns")
-    assert(sinkCalls == 0)
-    assert(!Files.exists(out))
-    assert(!cached(bad))
+    withTempDir { tmp =>
+      val out = tmp.resolve("bad")
+      var sinkCalls = 0
+      val e = intercept[IllegalStateException](
+        Constraints.enforce(bad, "bad", Seq("id"), Seq("id", "v")) { df =>
+          sinkCalls += 1
+          graft.sources.Csv.writeSingle(df, out.toString)
+        })
+      assert(e.getMessage == "constraint violations in bad: 1 duplicate " +
+        "primary keys, 2 rows with NULL in NOT NULL columns")
+      assert(sinkCalls == 0)
+      assert(!Files.exists(out))
+      assert(!cached(bad))
+    }
   }
 
   test("an empty primary key never counts duplicates") {

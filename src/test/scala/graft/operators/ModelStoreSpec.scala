@@ -1,11 +1,11 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** r16 verdict item 3: trained ANN models persist fingerprint-keyed
-  * (`Dedup.memoModelDisk`) so Lloyd training is index-build cost, not
+/** r16 verdict item 3: trained ANN models persist store-keyed
+  * (`DerivedStore.value`) so Lloyd training is index-build cost, not
   * per-query cold latency. The contract under test: (a) a file-backed
   * corpus trains ONCE and later calls — including across fresh
   * JVM-level caches, i.e. fresh sessions — load the identical model
@@ -16,50 +16,48 @@ import org.apache.spark.sql.functions.col
 class ModelStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshCache() = new java.util.concurrent.ConcurrentHashMap[
-    LogicalPlan, AnyRef]()
+  /** A matrix model as a fresh JVM would see it: empty in-JVM memo. */
+  private def fresh(df: DataFrame, kind: String)(
+      train: => Array[Array[Double]]): Array[Array[Double]] = {
+    DerivedStore.clearMemo()
+    DerivedStore.value(df, kind)(train)(Similarity.encodeMatrix)(Similarity.decodeMatrix)
+  }
 
-  private def writeVecs(dir: java.io.File, n: Int, shift: Double,
+  private def writeVecs(dir: java.nio.file.Path, n: Int, shift: Double,
                         dim: Int = 3): Unit =
     (0 until n).map(i => (i.toLong,
       Array.tabulate(dim)(d => i * 0.5 + shift + d * 0.125 - 1.0 / (i + d + 1))
         .map(_.toFloat)))
       .toDF("vec_id", "embedding").coalesce(1)
-      .write.mode("overwrite").parquet(dir.getAbsolutePath)
+      .write.mode("overwrite").parquet(dir.toString)
 
   test("models train once per corpus fingerprint and reload bit-identically") {
-    val dir = java.nio.file.Files.createTempDirectory("model-store").toFile
-    try {
+    withTempDir { dir =>
       writeVecs(dir, 20, 0.0)
-      def df() = spark.read.parquet(dir.getAbsolutePath)
+      def df() = spark.read.parquet(dir.toString)
       var trains = 0
       val kind = s"spec_model_${System.nanoTime()}"
-      def call(cache: java.util.concurrent.ConcurrentHashMap[LogicalPlan, AnyRef]) =
-        Dedup.memoModelDisk(cache, df(), kind) {
-          trains += 1
-          Array(Array(1.0, -0.000001), Array(math.Pi, 1e300))
-        }(Similarity.encodeMatrix)(Similarity.decodeMatrix)
-      val m1 = call(freshCache())
+      def call() = fresh(df(), kind) {
+        trains += 1
+        Array(Array(1.0, -0.000001), Array(math.Pi, 1e300))
+      }
+      val m1 = call()
       // FRESH cache — only the disk tier can satisfy this call
-      val m2 = call(freshCache())
+      val m2 = call()
       assert(trains == 1, s"same-fingerprint corpus retrained ($trains trains)")
       assert(m1.map(_.toSeq).toSeq == m2.map(_.toSeq).toSeq,
         "reloaded model must round-trip exactly (Double.toString/parseDouble)")
       // changed corpus: fingerprint moves, must retrain
       writeVecs(dir, 20, 7.0)
-      call(freshCache())
+      call()
       assert(trains == 2, s"changed corpus did not retrain ($trains trains)")
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 
   test("non-file relations train per cache, never touching disk") {
     var trains = 0
     val df = Seq((1L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    def call() = Dedup.memoModelDisk(freshCache(), df, "spec_model_mem") {
-      trains += 1; Array(Array(1.0))
-    }(Similarity.encodeMatrix)(Similarity.decodeMatrix)
+    def call() = fresh(df, "spec_model_mem") { trains += 1; Array(Array(1.0)) }
     call(); call()
     assert(trains == 2,
       "a synthetic relation has no stable content key and must train per cache")
@@ -69,15 +67,12 @@ class ModelStoreSpec extends SparkSpec {
     // r17 verdict item 2: with the single preload gate off, NO timed
     // window may be served a pre-trained model from disk — the memo
     // must fall through to train-per-JVM and write nothing.
-    val dir = java.nio.file.Files.createTempDirectory("model-gate").toFile
-    try {
+    withTempDir { dir =>
       writeVecs(dir, 10, 0.0)
-      def df() = spark.read.parquet(dir.getAbsolutePath)
+      def df() = spark.read.parquet(dir.toString)
       var trains = 0
       val kind = s"spec_gate_${System.nanoTime()}"
-      def call() = Dedup.memoModelDisk(freshCache(), df(), kind) {
-        trains += 1; Array(Array(1.0))
-      }(Similarity.encodeMatrix)(Similarity.decodeMatrix)
+      def call() = fresh(df(), kind) { trains += 1; Array(Array(1.0)) }
       ModelCost.forceDisabledFlag = true
       try { call(); call() } finally { ModelCost.forceDisabledFlag = false }
       assert(trains == 2,
@@ -85,46 +80,39 @@ class ModelStoreSpec extends SparkSpec {
       // gate back on: disk tier resumes, third call persists + fourth loads
       call(); call()
       assert(trains == 3, "gate on: disk tier must dedupe training again")
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 
-  test("model build cost rides a sidecar and registers in the ModelCost ledger") {
-    val dir = java.nio.file.Files.createTempDirectory("model-cost").toFile
-    try {
+  test("model build cost rides the entry's first line and registers in the ModelCost ledger") {
+    withTempDir { dir =>
       writeVecs(dir, 10, 3.0)
-      def df() = spark.read.parquet(dir.getAbsolutePath)
+      def df() = spark.read.parquet(dir.toString)
       val kind = s"spec_cost_${System.nanoTime()}"
       ModelCost.clear()
-      def call() = Dedup.memoModelDisk(freshCache(), df(), kind) {
-        Thread.sleep(30); Array(Array(2.0))
-      }(Similarity.encodeMatrix)(Similarity.decodeMatrix)
-      call() // trains: records measured seconds + writes sidecar
+      def call() = fresh(df(), kind) { Thread.sleep(30); Array(Array(2.0)) }
+      call() // trains: records measured seconds in the entry
       val builtSec = ModelCost.totalSec
       assert(builtSec >= 0.03, s"train cost must be measured, got $builtSec")
       assert(ModelCost.entriesJson.contains("\"built_now\":true"))
       ModelCost.clear()
-      call() // fresh cache → disk hit: cost re-surfaces from the sidecar
+      call() // fresh cache → disk hit: cost re-surfaces from the entry
       assert(math.abs(ModelCost.totalSec - builtSec) < 0.5,
-        s"sidecar must carry the original build cost " +
+        s"the entry must carry the original build cost " +
           s"(${ModelCost.totalSec} vs $builtSec)")
       assert(ModelCost.entriesJson.contains("\"built_now\":false"))
       ModelCost.clear()
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 
   test("derived-store LRU: eviction drops oldest past the cap, touch refreshes") {
-    // r16 verdict item 6: target/derived/{models,verdicts} accumulate
-    // one entry per corpus fingerprint forever. The stores are caches
-    // (a stale eviction only costs a retrain/re-probe), so they are
-    // bounded LRU-by-mtime: memoModelDisk/memoVerdictDisk touch on
-    // disk-hit and evict past DerivedStore.{ModelCap,VerdictCap} on
-    // write — this spec drives the shared mechanism directly.
-    val dir = java.nio.file.Files.createTempDirectory("derived-lru").toFile
-    try {
+    // r16 verdict item 6: target/derived/values accumulates one entry
+    // per corpus fingerprint forever. The store is a cache (a stale
+    // eviction only costs a retrain/re-probe), so it is bounded
+    // LRU-by-mtime: DerivedStore.value touches on disk-hit and evicts
+    // past DerivedStore.DiskCap on write — this spec drives the
+    // mechanism directly.
+    withTempDir { root =>
+      val dir = root.toFile
       def mk(name: String, ageSec: Long): java.io.File = {
         val f = new java.io.File(dir, name)
         java.nio.file.Files.writeString(f.toPath, "x")
@@ -146,19 +134,16 @@ class ModelStoreSpec extends SparkSpec {
       val left2 = dir.listFiles().map(_.getName).toSet
       assert(left2 == Set("m3", "m5", "m6", "m7", "half.tmp"),
         s"touched m3 must survive and untouched-oldest m4 must go, got $left2")
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 
   test("pq pair codec round-trips coarse + nested codebooks exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("model-pq").toFile
-    try {
+    withTempDir { dir =>
       writeVecs(dir, 64, 0.0, dim = 64)
       // drive the REAL trainedPqModels twice through its production
       // cache: second call is a memo hit (no extra Spark jobs), and
       // the persisted file decodes to the trained model exactly
-      val emb = spark.read.parquet(dir.getAbsolutePath)
+      val emb = spark.read.parquet(dir.toString)
         .select(col("vec_id"), col("embedding"))
       val (c1, m1) = ProductQuantization.trainedPqModels(emb)
       val (c2, m2) = ProductQuantization.trainedPqModels(emb)
@@ -167,8 +152,6 @@ class ModelStoreSpec extends SparkSpec {
       assert(c1.length == ProductQuantization.CoarseCells)
       assert(m1.length == ProductQuantization.M)
       assert(m1.forall(_.length == ProductQuantization.CodebookK))
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 }

@@ -1,101 +1,97 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Pins the bounded plan-keyed verdict memo (`Dedup.memoVerdict`) that
-  * the jaccard-injectivity, rep-composition, and embedding-dup gates
-  * share. Each cache key retains a whole canonicalized logical plan,
-  * so a long-lived session probing ever-fresh plans must not grow the
-  * map without bound — and because every gated branch is exact,
-  * EVICTION MUST BE INVISIBLE: a dropped memo costs one re-probe and
-  * must reproduce the same verdict, never flip it.
+/** Pins the bounded verdict memo of [[DerivedStore]] that the
+  * jaccard-injectivity, rep-composition, and embedding-dup gates
+  * share. A key for a relation without files retains a whole
+  * canonicalized logical plan, so a long-lived session probing
+  * ever-fresh plans must not grow the map without bound — and because
+  * every gated branch is exact, EVICTION MUST BE INVISIBLE: a dropped
+  * memo costs one re-probe and must reproduce the same verdict, never
+  * flip it.
   */
 class VerdictCacheSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshCache() = new java.util.concurrent.ConcurrentHashMap[
-    LogicalPlan, java.lang.Boolean]()
+  private def planOf(i: Int): DataFrame = Seq((i, s"doc_$i")).toDF("id", "text")
 
-  private def planOf(i: Int): LogicalPlan =
-    Seq((i, s"doc_$i")).toDF("id", "text")
-      .queryExecution.analyzed.canonicalized
+  /** A verdict as a fresh JVM would see it: empty in-JVM memo. */
+  private def fresh(df: DataFrame, kind: String)(probe: => Boolean): Boolean = {
+    DerivedStore.clearMemo()
+    DerivedStore.verdict(df, kind)(probe)
+  }
 
   test("verdicts are memoized: one probe per distinct plan") {
-    val cache = freshCache()
+    DerivedStore.clearMemo()
     var probes = 0
-    val key = planOf(1)
-    val first = Dedup.memoVerdict(cache, key) { probes += 1; true }
-    val second = Dedup.memoVerdict(cache, key) { probes += 1; false } // must not run
+    val first = DerivedStore.verdict(planOf(1), "spec_memo") { probes += 1; true }
+    val second = DerivedStore.verdict(planOf(1), "spec_memo") { probes += 1; false } // must not run
     assert(first && second, "memo hit must return the stored verdict")
     assert(probes == 1, s"probe ran $probes times for one plan")
   }
 
   test("cache never grows past the cap (+1 insertion transient)") {
-    val cache = freshCache()
-    val n = Dedup.VerdictCacheMax + 64
-    (1 to n).foreach(i => Dedup.memoVerdict(cache, planOf(i))(i % 2 == 0))
-    assert(cache.size() <= Dedup.VerdictCacheMax + 1,
-      s"cache grew to ${cache.size()} past cap ${Dedup.VerdictCacheMax}")
+    DerivedStore.clearMemo()
+    val n = DerivedStore.MemoMax + 64
+    (1 to n).foreach(i => DerivedStore.verdict(planOf(i), "spec_cap")(i % 2 == 0))
+    assert(DerivedStore.memoSize <= DerivedStore.MemoMax + 1,
+      s"cache grew to ${DerivedStore.memoSize} past cap ${DerivedStore.MemoMax}")
   }
 
   test("eviction does not change verdicts — an evicted key re-probes to the same answer") {
-    val cache = freshCache()
+    DerivedStore.clearMemo()
     // deterministic per-plan verdict the way the real gates are
     // (verdicts are a pure function of the input relation)
     def verdictFor(i: Int): Boolean = i % 3 == 0
-    val early = (1 to 8).map(i => i -> planOf(i))
-    val before = early.map { case (i, p) =>
-      i -> Dedup.memoVerdict(cache, p)(verdictFor(i))
-    }.toMap
+    val kind = "spec_evict"
+    val before = (1 to 8).map(i => i -> DerivedStore.verdict(planOf(i), kind)(verdictFor(i))).toMap
     // flood with fresh plans until every early key has been evicted
-    ((100 to (100 + Dedup.VerdictCacheMax + 64)): Range)
-      .foreach(i => Dedup.memoVerdict(cache, planOf(i))(verdictFor(i)))
-    val evicted = early.count { case (_, p) => !cache.containsKey(p) }
-    assert(evicted > 0, "flood was expected to evict at least one early key")
+    ((100 to (100 + DerivedStore.MemoMax + 64)): Range)
+      .foreach(i => DerivedStore.verdict(planOf(i), kind)(verdictFor(i)))
     // re-ask every early key: evicted ones re-probe, all answers equal
-    val after = early.map { case (i, p) =>
-      i -> Dedup.memoVerdict(cache, p)(verdictFor(i))
-    }.toMap
+    var reprobes = 0
+    val after = (1 to 8).map(i => i -> DerivedStore.verdict(planOf(i), kind) {
+      reprobes += 1; verdictFor(i)
+    }).toMap
+    assert(reprobes > 0, "flood was expected to evict at least one early key")
     assert(after == before, "eviction flipped a verdict")
     assert(before == (1 to 8).map(i => i -> verdictFor(i)).toMap)
   }
 
   // ---- disk tier (r15): verdicts are corpus statistics -------------
 
-  private def writeDocs(dir: java.io.File, rows: Seq[(Long, String)]): Unit = {
+  private def writeDocs(dir: java.nio.file.Path, rows: Seq[(Long, String)]): Unit = {
     rows.toDF("doc_id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(dir.getAbsolutePath)
+      .write.mode("overwrite").parquet(dir.toString)
   }
 
   test("disk tier: same files skip the probe across fresh caches; changed files re-probe") {
-    val dir = java.nio.file.Files.createTempDirectory("verdict-disk").toFile
-    try {
+    withTempDir { dir =>
       writeDocs(dir, Seq(1L -> "a b c", 2L -> "d e f"))
-      def df() = spark.read.parquet(dir.getAbsolutePath)
+      def df() = spark.read.parquet(dir.toString)
       var probes = 0
       val kind = s"spec_${System.nanoTime()}" // unique per test run
-      val v1 = Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; true }
+      val v1 = fresh(df(), kind) { probes += 1; true }
       // FRESH in-memory cache — only the disk tier can satisfy this
-      val v2 = Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; false }
+      val v2 = fresh(df(), kind) { probes += 1; false }
       assert(v1 && v2, "disk tier must return the stored verdict")
       assert(probes == 1, s"same-fingerprint corpus re-probed ($probes probes)")
       // grow the corpus: fingerprint changes (size/mtime), must re-probe
       writeDocs(dir, Seq(1L -> "a b c", 2L -> "d e f", 3L -> "g h i"))
-      val v3 = Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; false }
+      val v3 = fresh(df(), kind) { probes += 1; false }
       assert(!v3, "changed corpus must re-probe, not serve the stale verdict")
       assert(probes == 2, s"changed corpus did not re-probe ($probes probes)")
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 
   test("disk tier: non-file relations stay JVM-memoized only (probe per cache)") {
     var probes = 0
     val df = Seq((1L, "x y")).toDF("doc_id", "text") // LocalRelation leaf
-    Dedup.memoVerdictDisk(freshCache(), df, "spec_mem") { probes += 1; true }
-    Dedup.memoVerdictDisk(freshCache(), df, "spec_mem") { probes += 1; true }
+    fresh(df, "spec_mem") { probes += 1; true }
+    fresh(df, "spec_mem") { probes += 1; true }
     assert(probes == 2,
       "a synthetic relation has no stable content key and must re-probe per cache")
   }
@@ -103,54 +99,46 @@ class VerdictCacheSpec extends SparkSpec {
   // ---- r16 ADVICE: fingerprint must survive nesting, schemes, width --
 
   test("disk tier: a changed file under NESTED partition dirs re-probes") {
-    // root/a=?/b=?/part-*.parquet — the java.io.File root listing the
-    // old fingerprint used was non-recursive: appending a file two
-    // levels down left the listed child-dir mtimes untouched and
-    // served the stale verdict. The FileIndex fingerprint enumerates
-    // leaf files, so any nested change re-keys.
-    val dir = java.nio.file.Files.createTempDirectory("verdict-nested").toFile
-    try {
+    // root/a=?/b=?/part-*.parquet — a java.io.File root listing is
+    // non-recursive: appending a file two levels down leaves the
+    // listed child-dir mtimes untouched and would serve the stale
+    // verdict. The FileIndex fingerprint enumerates leaf files, so any
+    // nested change re-keys.
+    withTempDir { dir =>
       def write(rows: Seq[(Long, Int, Int, String)], mode: String): Unit =
         rows.toDF("doc_id", "a", "b", "text").coalesce(1)
-          .write.partitionBy("a", "b").mode(mode).parquet(dir.getAbsolutePath)
+          .write.partitionBy("a", "b").mode(mode).parquet(dir.toString)
       write(Seq((1L, 1, 1, "x y"), (2L, 1, 2, "p q")), "overwrite")
-      def df() = spark.read.parquet(dir.getAbsolutePath)
+      def df() = spark.read.parquet(dir.toString)
       var probes = 0
       val kind = s"spec_nested_${System.nanoTime()}"
-      val v1 = Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; true }
-      val v2 = Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; false }
+      val v1 = fresh(df(), kind) { probes += 1; true }
+      val v2 = fresh(df(), kind) { probes += 1; false }
       assert(v1 && v2 && probes == 1,
         s"partitioned corpus must qualify for the disk tier ($probes probes)")
-      // snapshot every DIRECTORY mtime before the append and restore
-      // after, so ONLY leaf-file knowledge can detect the change below
-      // (belt over the non-recursion argument: on some filesystems the
-      // append bumps b=1's mtime, which the old code never listed
-      // anyway — freezing closes that accidental detection channel)
-      def dirsUnder(f: java.io.File): Seq[java.io.File] =
-        if (!f.isDirectory) Seq.empty
-        else f +: f.listFiles().toSeq.flatMap(dirsUnder)
-      val frozen = dirsUnder(dir).map(d => d -> d.lastModified())
+      // snapshot every existing mtime (directories, and the `_SUCCESS`
+      // marker the append rewrites at the root) before the append and
+      // restore after, so ONLY leaf-file knowledge can detect the
+      // change below — a root listing would otherwise see the marker
+      def under(f: java.io.File): Seq[java.io.File] =
+        f +: Option(f.listFiles()).toSeq.flatten.flatMap(under)
+      val frozen = under(dir.toFile).map(d => d -> d.lastModified())
       write(Seq((3L, 1, 1, "z w")), "append") // new leaf file at depth 2
       frozen.foreach { case (d, t) =>
         java.nio.file.Files.setLastModifiedTime(d.toPath,
           java.nio.file.attribute.FileTime.fromMillis(t))
       }
-      val v3 = Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; false }
+      val v3 = fresh(df(), kind) { probes += 1; false }
       assert(!v3 && probes == 2,
         "a new leaf file two partition levels down must re-probe")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(dir)
     }
   }
 
   test("disk tier: a remote-scheme relation is disqualified (probe per cache)") {
     // s3a:// through the in-process object store: the path does not
     // exist on the local filesystem, so local file metadata can never
-    // fingerprint it — the old java.io.File probe produced a CONSTANT
-    // fingerprint here and served verdicts across data changes.
+    // fingerprint it — a java.io.File probe would produce a CONSTANT
+    // fingerprint here and serve verdicts across data changes.
     spark.sparkContext.hadoopConfiguration
       .set("fs.s3a.impl", classOf[graft.sources.InMemObjectStore].getName)
     spark.sparkContext.hadoopConfiguration
@@ -161,37 +149,32 @@ class VerdictCacheSpec extends SparkSpec {
     def df() = spark.read.parquet(path)
     var probes = 0
     val kind = s"spec_s3a_${System.nanoTime()}"
-    Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; true }
-    Dedup.memoVerdictDisk(freshCache(), df(), kind) { probes += 1; true }
+    fresh(df(), kind) { probes += 1; true }
+    fresh(df(), kind) { probes += 1; true }
     assert(probes == 2,
       "a non-local scheme must stay JVM-memoized only, never disk-keyed")
   }
 
   test("disk tier: two distinct wide plans over the same files don't alias") {
     // 30-column schema: plan.toString truncates the output list at
-    // spark.sql.maxToStringFields (25), so the old md5 could collide
+    // spark.sql.maxToStringFields (25), so an md5 of it could collide
     // two different projections/filters of the same table and swap
     // verdicts; the untruncated-treeString + full-schema-JSON key
     // cannot (NOT semanticHash — that is JVM-unstable, see
-    // diskVerdictKey's doc).
-    val dir = java.nio.file.Files.createTempDirectory("verdict-wide").toFile
-    try {
+    // DerivedStore.key's doc).
+    withTempDir { dir =>
       val cols = (0 until 30).map(i => s"c$i")
       spark.range(4).select(
           (col("id") +: (1 until 30).map(i => (col("id") * i).as(s"x$i"))): _*)
         .toDF(cols: _*)
-        .coalesce(1).write.mode("overwrite").parquet(dir.getAbsolutePath)
-      def base() = spark.read.parquet(dir.getAbsolutePath)
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      def base() = spark.read.parquet(dir.toString)
       val kind = s"spec_wide_${System.nanoTime()}"
       var probes = 0
-      val v1 = Dedup.memoVerdictDisk(freshCache(),
-        base().filter(col("c1") > 0), kind) { probes += 1; true }
-      val v2 = Dedup.memoVerdictDisk(freshCache(),
-        base().filter(col("c2") > 0), kind) { probes += 1; false }
+      val v1 = fresh(base().filter(col("c1") > 0), kind) { probes += 1; true }
+      val v2 = fresh(base().filter(col("c2") > 0), kind) { probes += 1; false }
       assert(v1 && !v2 && probes == 2,
         "distinct plans over the same files must key separately")
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 }

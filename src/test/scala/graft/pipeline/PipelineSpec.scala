@@ -11,10 +11,9 @@ import graft.SparkSpec
   */
 class PipelineSpec extends SparkSpec {
 
-  private lazy val inDir: String = fixtures()
-
-  private def fixtures(): String = {
-    val d = Files.createTempDirectory("graft-csv").toString
+  /** Writes the CSV fixtures under `tmp` and returns their dir. */
+  private def fixtures(tmp: java.nio.file.Path): String = {
+    val d = Files.createDirectories(tmp.resolve("in")).toString
     def write(name: String, lines: String*): Unit =
       Files.writeString(new java.io.File(s"$d/$name.csv").toPath, lines.mkString("\n"))
     // 2022-08-22 Mon working; 2022-08-25 Thu holiday; 2022-08-27 Sat
@@ -59,76 +58,87 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("agg_public_holiday pipeline end-to-end over CSV") {
-    val out = Files.createTempDirectory("graft-out").toString
-    val row = runAndRead(
-      ReferencePipelines.AggPublicHolidayPipeline(inDir, out),
-      s"$out/agg_public_holiday")
-    assert(row.getAs[String]("tt_order_hol_aug") == "1")
-    assert(row.getAs[String]("tt_order_hol_sep") == "1")
-    assert(row.getAs[String]("tt_order_hol_jul") == "0")
+    withTempDir { t =>
+      val out = s"$t/out"
+      val row = runAndRead(
+        ReferencePipelines.AggPublicHolidayPipeline(fixtures(t), out),
+        s"$out/agg_public_holiday")
+      assert(row.getAs[String]("tt_order_hol_aug") == "1")
+      assert(row.getAs[String]("tt_order_hol_sep") == "1")
+      assert(row.getAs[String]("tt_order_hol_jul") == "0")
+    }
   }
 
   test("agg_shipments pipeline: late boundary and 15-day undelivered rule") {
-    val out = Files.createTempDirectory("graft-out").toString
-    val row = runAndRead(
-      ReferencePipelines.AggShipmentsPipeline(inDir, out),
-      s"$out/agg_shipments")
-    assert(row.getAs[String]("tt_late_shipments") == "1")    // only order 2
-    assert(row.getAs[String]("tt_undelivered_items") == "1") // only order 5
+    withTempDir { t =>
+      val out = s"$t/out"
+      val row = runAndRead(
+        ReferencePipelines.AggShipmentsPipeline(fixtures(t), out),
+        s"$out/agg_shipments")
+      assert(row.getAs[String]("tt_late_shipments") == "1")    // only order 2
+      assert(row.getAs[String]("tt_undelivered_items") == "1") // only order 5
+    }
   }
 
   test("best_performing_product pipeline: argmax product, star split, ship pcts") {
-    val out = Files.createTempDirectory("graft-out").toString
-    val row = runAndRead(
-      ReferencePipelines.BestPerformingProductPipeline(inDir, out),
-      s"$out/best_performing_product")
-    // product 7: reviews 5,5,1 → avg 3.67 beats product 8's 3.0
-    assert(row.getAs[String]("product_name") == "widget")
-    // reference semantics: reviews fan out through the orders join
-    // (3 orders for product 7), so points = (5+5+1) × 3 — the avg is
-    // unaffected but SUM(review) multiplies (reviews_ETL.py:110-119)
-    assert(row.getAs[String]("tt_review_points") == "33")
-    val p1 = row.getAs[String]("pct_one_star_review").toDouble
-    val p5 = row.getAs[String]("pct_five_star_review").toDouble
-    assert(math.abs(p1 - 100.0 / 3) < 0.34)
-    assert(math.abs(p5 - 200.0 / 3) < 0.34)
+    withTempDir { t =>
+      val out = s"$t/out"
+      val row = runAndRead(
+        ReferencePipelines.BestPerformingProductPipeline(fixtures(t), out),
+        s"$out/best_performing_product")
+      // product 7: reviews 5,5,1 → avg 3.67 beats product 8's 3.0
+      assert(row.getAs[String]("product_name") == "widget")
+      // reference semantics: reviews fan out through the orders join
+      // (3 orders for product 7), so points = (5+5+1) × 3 — the avg is
+      // unaffected but SUM(review) multiplies (reviews_ETL.py:110-119)
+      assert(row.getAs[String]("tt_review_points") == "33")
+      val p1 = row.getAs[String]("pct_one_star_review").toDouble
+      val p5 = row.getAs[String]("pct_five_star_review").toDouble
+      assert(math.abs(p1 - 100.0 / 3) < 0.34)
+      assert(math.abs(p5 - 200.0 / 3) < 0.34)
+    }
   }
 
   test("a rerun in the same session sees rewritten input, not a stale cache") {
-    val in = fixtures()
-    val out = Files.createTempDirectory("graft-out").toString
-    val p = ReferencePipelines.BestPerformingProductPipeline(in, out)
-    val first = runAndRead(p, s"$out/best_performing_product")
-    assert(first.getAs[String]("product_name") == "widget")
-    // product 8 now averages 5 against product 7's 1
-    Files.writeString(Paths.get(in, "reviews.csv"), "review,product_id\n1,7\n1,7\n5,8\n5,8")
-    val second = runAndRead(p, s"$out/best_performing_product")
-    assert(second.getAs[String]("product_name") == "gadget")
+    withTempDir { t =>
+      val in = fixtures(t)
+      val out = s"$t/out"
+      val p = ReferencePipelines.BestPerformingProductPipeline(in, out)
+      val first = runAndRead(p, s"$out/best_performing_product")
+      assert(first.getAs[String]("product_name") == "widget")
+      // product 8 now averages 5 against product 7's 1
+      Files.writeString(Paths.get(in, "reviews.csv"), "review,product_id\n1,7\n1,7\n5,8\n5,8")
+      val second = runAndRead(p, s"$out/best_performing_product")
+      assert(second.getAs[String]("product_name") == "gadget")
+    }
   }
 
   test("a clean run executes the transform once: one count, one write") {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = names.add(funcName)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = names.add(s"failed $funcName")
-    }
-    val out = Files.createTempDirectory("graft-out").toString
-    for (p <- Seq(ReferencePipelines.AggPublicHolidayPipeline(inDir, out),
-                  ReferencePipelines.AggShipmentsPipeline(inDir, out),
-                  ReferencePipelines.BestPerformingProductPipeline(inDir, out))) {
-      names.clear()
-      spark.listenerManager.register(l)
-      try {
-        p.run(spark)
-        org.apache.spark.graftshim.ListenerBusSync.waitUntilEmpty(spark.sparkContext)
-      } finally spark.listenerManager.unregister(l)
-      // the sink's write reaches the listener as "command"
-      assert(names.toArray(Array.empty[String]).toSeq.sorted == Seq("command", "count"),
-        s"${p.name} executions")
+    withTempDir { t =>
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit = names.add(funcName)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = names.add(s"failed $funcName")
+      }
+      val out = s"$t/out"
+      val in = fixtures(t)
+      for (p <- Seq(ReferencePipelines.AggPublicHolidayPipeline(in, out),
+                    ReferencePipelines.AggShipmentsPipeline(in, out),
+                    ReferencePipelines.BestPerformingProductPipeline(in, out))) {
+        names.clear()
+        spark.listenerManager.register(l)
+        try {
+          p.run(spark)
+          org.apache.spark.graftshim.ListenerBusSync.waitUntilEmpty(spark.sparkContext)
+        } finally spark.listenerManager.unregister(l)
+        // the sink's write reaches the listener as "command"
+        assert(names.toArray(Array.empty[String]).toSeq.sorted == Seq("command", "count"),
+          s"${p.name} executions")
+      }
     }
   }
 }

@@ -51,6 +51,25 @@ class RetrySpec extends SparkSpec {
     assert(p.loads.get == 1)
   }
 
+  private class DuplicateKeyLoad extends Pipeline {
+    val name = "duplicate-key"
+    val loads = new AtomicInteger(0)
+    def extract(s: SparkSession): DataFrame = s.range(3).selectExpr("id % 2 AS id")
+    def transform(df: DataFrame): DataFrame = df
+    def load(df: DataFrame): Unit = {
+      loads.incrementAndGet()
+      graft.catalog.Constraints.enforce(df, "dup_key", Seq("id"), Seq("id"))(_ => ())
+    }
+  }
+
+  test("a constraint violation is loaded once and surfaces its exact message") {
+    val p = new DuplicateKeyLoad // keys 0, 1, 0
+    val e = intercept[IllegalStateException](p.run(spark))
+    assert(p.loads.get == 1, "a deterministic violation was retried")
+    assert(e.getMessage == "constraint violations in dup_key: 1 duplicate " +
+      "primary keys, 0 rows with NULL in NOT NULL columns")
+  }
+
   test("a non-fatal load error is retried, then surfaces wrapped") {
     val p = new FailingLoad(new RuntimeException("transient"))
     val e = intercept[RuntimeException](p.run(spark))

@@ -24,8 +24,7 @@ import org.apache.spark.sql.graftshim.CheckpointStats
 class ReliableCheckpointSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withCheckpointDir[A](body: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt")
+  private def withCheckpointDir[A](body: String => A): A = withTempDir { dir =>
     spark.sparkContext.setCheckpointDir(dir.toString)
     try body(dir.toString)
     finally {

@@ -16,10 +16,9 @@ import graft.SparkSpec
 class JdbcSpec extends SparkSpec {
   import spark.implicits._
 
-  private val dbDir = java.nio.file.Files
-    .createTempDirectory("graft-derby").toString
+  // in-memory database: lives as long as the test JVM, writes no files
   private val conn = Jdbc.Conn(
-    url = s"jdbc:derby:$dbDir/testdb;create=true",
+    url = "jdbc:derby:memory:graft-jdbc-spec;create=true",
     user = "app", password = "app",
     driver = "org.apache.derby.jdbc.EmbeddedDriver")
 

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -25,43 +23,45 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("z-order keeps BOTH columns' per-file ranges narrow; linear sort only one") {
-    val li = Tables(spark, sf).lineitem
-      .select($"l_orderkey", $"l_partkey", $"l_quantity")
-    val zdir = Files.createTempDirectory("graft-zorder").toString
-    val sdir = Files.createTempDirectory("graft-sorted").toString
-    val files = 16
+    withTempDir { t =>
+      val li = Tables(spark, sf).lineitem
+        .select($"l_orderkey", $"l_partkey", $"l_quantity")
+      val zdir = s"$t/zorder"
+      val sdir = s"$t/sorted"
+      val files = 16
 
-    Layout.writeZOrdered(li, zdir, "l_orderkey", "l_partkey", files)
-    // baseline: the classic single-column sort layout
-    li.repartitionByRange(files, $"l_orderkey")
-      .sortWithinPartitions($"l_orderkey")
-      .write.mode("overwrite").parquet(sdir)
+      Layout.writeZOrdered(li, zdir, "l_orderkey", "l_partkey", files)
+      // baseline: the classic single-column sort layout
+      li.repartitionByRange(files, $"l_orderkey")
+        .sortWithinPartitions($"l_orderkey")
+        .write.mode("overwrite").parquet(sdir)
 
-    // nothing lost in the rewrite
-    assert(spark.read.parquet(zdir).count() == li.count())
+      // nothing lost in the rewrite
+      assert(spark.read.parquet(zdir).count() == li.count())
 
-    // a point filter on the NON-leading column: count files whose
-    // [min,max] straddle the probe — those are the files a pruning
-    // reader must open
-    val probe = li.agg(percentile($"l_partkey", lit(0.5))).head().getDouble(0)
-    def touched(ranges: Seq[(Long, Long)]): Int =
-      ranges.count { case (lo, hi) => lo <= probe && probe <= hi }
+      // a point filter on the NON-leading column: count files whose
+      // [min,max] straddle the probe — those are the files a pruning
+      // reader must open
+      val probe = li.agg(percentile($"l_partkey", lit(0.5))).head().getDouble(0)
+      def touched(ranges: Seq[(Long, Long)]): Int =
+        ranges.count { case (lo, hi) => lo <= probe && probe <= hi }
 
-    val zTouched = touched(fileRanges(zdir, "l_partkey"))
-    val sTouched = touched(fileRanges(sdir, "l_partkey"))
-    // linear layout: l_partkey spans its full domain in every file →
-    // all 16 touched. Z-order: only ~√files of them.
-    assert(sTouched >= files * 3 / 4, s"baseline unexpectedly clustered: $sTouched")
-    assert(zTouched * 2 <= sTouched,
-      s"z-order should halve touched files: $zTouched vs $sTouched")
+      val zTouched = touched(fileRanges(zdir, "l_partkey"))
+      val sTouched = touched(fileRanges(sdir, "l_partkey"))
+      // linear layout: l_partkey spans its full domain in every file →
+      // all 16 touched. Z-order: only ~√files of them.
+      assert(sTouched >= files * 3 / 4, s"baseline unexpectedly clustered: $sTouched")
+      assert(zTouched * 2 <= sTouched,
+        s"z-order should halve touched files: $zTouched vs $sTouched")
 
-    // and the leading column must stay prunable too (the curve
-    // trades a LITTLE orderkey-locality, not all of it)
-    val probeA = li.agg(percentile($"l_orderkey", lit(0.5))).head().getDouble(0)
-    def touchedA(ranges: Seq[(Long, Long)]): Int =
-      ranges.count { case (lo, hi) => lo <= probeA && probeA <= hi }
-    assert(touchedA(fileRanges(zdir, "l_orderkey")) <= files / 2,
-      "z-order lost all leading-column locality")
+      // and the leading column must stay prunable too (the curve
+      // trades a LITTLE orderkey-locality, not all of it)
+      val probeA = li.agg(percentile($"l_orderkey", lit(0.5))).head().getDouble(0)
+      def touchedA(ranges: Seq[(Long, Long)]): Int =
+        ranges.count { case (lo, hi) => lo <= probeA && probeA <= hi }
+      assert(touchedA(fileRanges(zdir, "l_orderkey")) <= files / 2,
+        "z-order lost all leading-column locality")
+    }
   }
 
   test("zorder_layout board row: bucket stats stay narrow in BOTH dims") {

@@ -46,76 +46,80 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("watermark drops late data across incremental drains (append mode)") {
-    val src = java.nio.file.Files.createTempDirectory("graft-wm").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft-wm-ck").toString
-    def drop(name: String, rows: String*): Unit =
-      java.nio.file.Files.writeString(
-        new java.io.File(s"$src/$name").toPath,
-        ("event_id,ts,user_id,event_type,value" +: rows).mkString("\n"))
-    val out = java.nio.file.Files.createTempDirectory("graft-wm-out").toString + "/agg"
-    def drain(): Unit = {
-      val events = spark.readStream
-        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-        .option("header", "true").csv(src)
-      val agg = EventsStream.hourlyCounts(events)
-      // parquet sink: append-mode emits each window once it is
-      // finalized by the watermark, and recovers from the checkpoint
-      val q = agg.writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ck).start()
-      q.awaitTermination()
+    withTempDir { t =>
+      val src = java.nio.file.Files.createDirectories(t.resolve("src")).toString
+      val ck = s"$t/ck"
+      def drop(name: String, rows: String*): Unit =
+        java.nio.file.Files.writeString(
+          new java.io.File(s"$src/$name").toPath,
+          ("event_id,ts,user_id,event_type,value" +: rows).mkString("\n"))
+      val out = s"$t/agg"
+      def drain(): Unit = {
+        val events = spark.readStream
+          .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
+          .option("header", "true").csv(src)
+        val agg = EventsStream.hourlyCounts(events)
+        // parquet sink: append-mode emits each window once it is
+        // finalized by the watermark, and recovers from the checkpoint
+        val q = agg.writeStream.format("parquet").option("path", out)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .option("checkpointLocation", ck).start()
+        q.awaitTermination()
+      }
+      // batch 1 advances the watermark to 11:30 - 1h = 10:30; the
+      // 09:00 window closes and is emitted
+      drop("b1.csv",
+        "1,2024-01-01 09:10:00,1,click,1.0",
+        "2,2024-01-01 09:20:00,1,click,1.0",
+        "3,2024-01-01 11:30:00,1,click,1.0")
+      drain()
+      // batch 2: a 09:40 event arrives AFTER the 09:00 window closed —
+      // it must be dropped, not re-open the emitted window
+      drop("b2.csv", "4,2024-01-01 09:40:00,1,click,1.0")
+      drain()
+      val nineOclock = spark.read.parquet(out)
+        .filter($"hour" === to_timestamp(lit("2024-01-01 09:00:00")))
+        .select($"cnt").as[Long].collect()
+      assert(nineOclock.toSeq == Seq(2L), s"got ${nineOclock.toSeq}") // late row dropped
     }
-    // batch 1 advances the watermark to 11:30 - 1h = 10:30; the
-    // 09:00 window closes and is emitted
-    drop("b1.csv",
-      "1,2024-01-01 09:10:00,1,click,1.0",
-      "2,2024-01-01 09:20:00,1,click,1.0",
-      "3,2024-01-01 11:30:00,1,click,1.0")
-    drain()
-    // batch 2: a 09:40 event arrives AFTER the 09:00 window closed —
-    // it must be dropped, not re-open the emitted window
-    drop("b2.csv", "4,2024-01-01 09:40:00,1,click,1.0")
-    drain()
-    val nineOclock = spark.read.parquet(out)
-      .filter($"hour" === to_timestamp(lit("2024-01-01 09:00:00")))
-      .select($"cnt").as[Long].collect()
-    assert(nineOclock.toSeq == Seq(2L), s"got ${nineOclock.toSeq}") // late row dropped
   }
 
   test("streaming dedup drops redeliveries within the watermark horizon") {
-    val src = java.nio.file.Files.createTempDirectory("graft-dd").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft-dd-ck").toString
-    def drop(name: String, rows: String*): Unit =
-      java.nio.file.Files.writeString(
-        new java.io.File(s"$src/$name").toPath,
-        ("event_id,ts,user_id,event_type,value" +: rows).mkString("\n"))
-    val out = java.nio.file.Files.createTempDirectory("graft-dd-out").toString + "/dedup"
-    def drain(): Unit = {
-      val events = spark.readStream
-        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-        .option("header", "true").csv(src)
-      val q = EventsStream.dedupStream(events, horizon = "1 hour")
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ck).start()
-      q.awaitTermination()
+    withTempDir { t =>
+      val src = java.nio.file.Files.createDirectories(t.resolve("src")).toString
+      val ck = s"$t/ck"
+      def drop(name: String, rows: String*): Unit =
+        java.nio.file.Files.writeString(
+          new java.io.File(s"$src/$name").toPath,
+          ("event_id,ts,user_id,event_type,value" +: rows).mkString("\n"))
+      val out = s"$t/dedup"
+      def drain(): Unit = {
+        val events = spark.readStream
+          .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
+          .option("header", "true").csv(src)
+        val q = EventsStream.dedupStream(events, horizon = "1 hour")
+          .writeStream.format("parquet").option("path", out)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .option("checkpointLocation", ck).start()
+        q.awaitTermination()
+      }
+      // batch 1: id 1 delivered twice in-batch, id 2 once
+      drop("b1.csv",
+        "1,2024-01-01 09:10:00,1,click,1.0",
+        "1,2024-01-01 09:10:00,1,click,1.0",
+        "2,2024-01-01 09:20:00,1,click,1.0")
+      drain()
+      // batch 2: id 1 redelivered across batches (still inside the
+      // horizon — state remembers it); id 3 is new
+      drop("b2.csv",
+        "1,2024-01-01 09:12:00,1,click,1.0",
+        "3,2024-01-01 09:40:00,1,click,1.0")
+      drain()
+      val ids = spark.read.parquet(out).select($"event_id").as[Long].collect().sorted
+      assert(ids.toSeq == Seq(1L, 2L, 3L), s"got ${ids.toSeq}")
     }
-    // batch 1: id 1 delivered twice in-batch, id 2 once
-    drop("b1.csv",
-      "1,2024-01-01 09:10:00,1,click,1.0",
-      "1,2024-01-01 09:10:00,1,click,1.0",
-      "2,2024-01-01 09:20:00,1,click,1.0")
-    drain()
-    // batch 2: id 1 redelivered across batches (still inside the
-    // horizon — state remembers it); id 3 is new
-    drop("b2.csv",
-      "1,2024-01-01 09:12:00,1,click,1.0",
-      "3,2024-01-01 09:40:00,1,click,1.0")
-    drain()
-    val ids = spark.read.parquet(out).select($"event_id").as[Long].collect().sorted
-    assert(ids.toSeq == Seq(1L, 2L, 3L), s"got ${ids.toSeq}")
   }
 
   test("stream-stream attribution join matches the batch interval join") {
@@ -141,23 +145,25 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch hands every row to the custom sink exactly once") {
-    val ck = java.nio.file.Files.createTempDirectory("graft-fb-ck").toString
-    val seen = new java.util.concurrent.atomic.AtomicLong(0)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    EventsStream.runForeachBatch(
-      EventsStream.readEvents(spark, sf), ck) { (batch, _) =>
-      seen.addAndGet(batch.count())
-      batches.incrementAndGet()
+    withTempDir { t =>
+      val ck = s"$t/ck"
+      val seen = new java.util.concurrent.atomic.AtomicLong(0)
+      val batches = new java.util.concurrent.atomic.AtomicLong(0)
+      EventsStream.runForeachBatch(
+        EventsStream.readEvents(spark, sf), ck) { (batch, _) =>
+        seen.addAndGet(batch.count())
+        batches.incrementAndGet()
+      }
+      assert(seen.get() == Tables(spark, sf).events.count())
+      assert(batches.get() >= 1)
+      // second drain with the same checkpoint: nothing new to process
+      val seen2 = new java.util.concurrent.atomic.AtomicLong(0)
+      EventsStream.runForeachBatch(
+        EventsStream.readEvents(spark, sf), ck) { (batch, _) =>
+        seen2.addAndGet(batch.count())
+      }
+      assert(seen2.get() == 0)
     }
-    assert(seen.get() == Tables(spark, sf).events.count())
-    assert(batches.get() >= 1)
-    // second drain with the same checkpoint: nothing new to process
-    val seen2 = new java.util.concurrent.atomic.AtomicLong(0)
-    EventsStream.runForeachBatch(
-      EventsStream.readEvents(spark, sf), ck) { (batch, _) =>
-      seen2.addAndGet(batch.count())
-    }
-    assert(seen2.get() == 0)
   }
 
   test("session event counts cover all but the open tail sessions") {

@@ -23,172 +23,178 @@ class StreamingHeavyHittersSpec extends SparkSpec {
   }
 
   test("exact regime: stream equals batch counts across a checkpointed restart") {
-    withRocksDb {
-      val src = java.nio.file.Files.createTempDirectory("graft-shh").toString
-      val ck = java.nio.file.Files.createTempDirectory("graft-shh-ck").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-shh-out").toString + "/hh"
-      def drop(name: String, rows: String*): Unit =
+    withTempDir { t =>
+      withRocksDb {
+        val src = java.nio.file.Files.createDirectories(t.resolve("src")).toString
+        val ck = s"$t/ck"
+        val out = s"$t/hh"
+        def drop(name: String, rows: String*): Unit =
+          java.nio.file.Files.writeString(
+            new java.io.File(s"$src/$name").toPath,
+            ("group,item" +: rows).mkString("\n"))
+        def drain(): Unit = {
+          val in = spark.readStream.schema("group STRING, item STRING")
+            .option("header", "true").csv(src)
+          val q = StreamingHeavyHitters.perGroupHitters(in, capacity = 8)
+            .writeStream.format("parquet").option("path", out)
+            .outputMode("append")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .option("checkpointLocation", ck).start()
+          q.awaitTermination()
+        }
+        drop("b1.csv", "en,a", "en,a", "en,b", "de,x", "de,y", "de,y")
+        drain()
+        drop("b2.csv", "en,a", "en,c", "de,y")
+        drain() // state reloads from the checkpoint
+        val last = spark.read.parquet(out)
+          .orderBy($"n_seen".desc).collect()
+          .groupBy(_.getString(0)).view.mapValues(_.head).toMap
+        val en = last("en")
+        assert(en.getLong(1) == 5L, s"en n_seen: $en")
+        val enMap = en.getSeq[String](2).zip(en.getSeq[Long](3)).toMap
+        assert(enMap == Map("a" -> 3L, "b" -> 1L, "c" -> 1L), s"en: $enMap")
+        val de = last("de")
+        assert(de.getLong(1) == 4L)
+        val deMap = de.getSeq[String](2).zip(de.getSeq[Long](3)).toMap
+        assert(deMap == Map("y" -> 3L, "x" -> 1L), s"de: $deMap")
+      }
+    }
+  }
+
+  test("lossy regime: state stays within capacity and MG bounds hold") {
+    withTempDir { t =>
+      withRocksDb {
+        val src = java.nio.file.Files.createDirectories(t.resolve("src")).toString
+        val ck = s"$t/ck"
+        val out = s"$t/hh"
+        // skewed stream: "hot" appears 40×, 30 singletons — capacity 4
+        val rows = (Seq.fill(40)("g,hot") ++ (0 until 30).map(i => s"g,t$i"))
         java.nio.file.Files.writeString(
-          new java.io.File(s"$src/$name").toPath,
+          new java.io.File(s"$src/b.csv").toPath,
           ("group,item" +: rows).mkString("\n"))
-      def drain(): Unit = {
         val in = spark.readStream.schema("group STRING, item STRING")
           .option("header", "true").csv(src)
-        val q = StreamingHeavyHitters.perGroupHitters(in, capacity = 8)
+        val q = StreamingHeavyHitters.perGroupHitters(in, capacity = 4)
           .writeStream.format("parquet").option("path", out)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ck).start()
         q.awaitTermination()
+        val r = spark.read.parquet(out).orderBy($"n_seen".desc).head()
+        val n = r.getLong(1)
+        assert(n == 70L)
+        val items = r.getSeq[String](2)
+        assert(items.length <= 4, s"state exceeded capacity: $items")
+        // hot freq 40 > n/(cap+1) = 14 ⇒ must be present, est within slack
+        assert(items.contains("hot"), s"heavy item evicted: $items")
+        val est = r.getSeq[Long](3)(items.indexOf("hot"))
+        assert(est <= 40L && est >= 40L - n / 5,
+          s"hot estimate $est outside [${40L - n / 5}, 40]")
       }
-      drop("b1.csv", "en,a", "en,a", "en,b", "de,x", "de,y", "de,y")
-      drain()
-      drop("b2.csv", "en,a", "en,c", "de,y")
-      drain() // state reloads from the checkpoint
-      val last = spark.read.parquet(out)
-        .orderBy($"n_seen".desc).collect()
-        .groupBy(_.getString(0)).view.mapValues(_.head).toMap
-      val en = last("en")
-      assert(en.getLong(1) == 5L, s"en n_seen: $en")
-      val enMap = en.getSeq[String](2).zip(en.getSeq[Long](3)).toMap
-      assert(enMap == Map("a" -> 3L, "b" -> 1L, "c" -> 1L), s"en: $enMap")
-      val de = last("de")
-      assert(de.getLong(1) == 4L)
-      val deMap = de.getSeq[String](2).zip(de.getSeq[Long](3)).toMap
-      assert(deMap == Map("y" -> 3L, "x" -> 1L), s"de: $deMap")
-    }
-  }
-
-  test("lossy regime: state stays within capacity and MG bounds hold") {
-    withRocksDb {
-      val src = java.nio.file.Files.createTempDirectory("graft-shh2").toString
-      val ck = java.nio.file.Files.createTempDirectory("graft-shh2-ck").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-shh2-out").toString + "/hh"
-      // skewed stream: "hot" appears 40×, 30 singletons — capacity 4
-      val rows = (Seq.fill(40)("g,hot") ++ (0 until 30).map(i => s"g,t$i"))
-      java.nio.file.Files.writeString(
-        new java.io.File(s"$src/b.csv").toPath,
-        ("group,item" +: rows).mkString("\n"))
-      val in = spark.readStream.schema("group STRING, item STRING")
-        .option("header", "true").csv(src)
-      val q = StreamingHeavyHitters.perGroupHitters(in, capacity = 4)
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ck).start()
-      q.awaitTermination()
-      val r = spark.read.parquet(out).orderBy($"n_seen".desc).head()
-      val n = r.getLong(1)
-      assert(n == 70L)
-      val items = r.getSeq[String](2)
-      assert(items.length <= 4, s"state exceeded capacity: $items")
-      // hot freq 40 > n/(cap+1) = 14 ⇒ must be present, est within slack
-      assert(items.contains("hot"), s"heavy item evicted: $items")
-      val est = r.getSeq[Long](3)(items.indexOf("hot"))
-      assert(est <= 40L && est >= 40L - n / 5,
-        s"hot estimate $est outside [${40L - n / 5}, 40]")
     }
   }
 
   test("failAtCapacity errors loudly when the exact regime is violated") {
-    // 5 distinct items into capacity 3 with failAtCapacity: the
-    // oracle-row contract (summary ≡ count) no longer holds — the
-    // query must FAIL, not silently decrement (r9 advice)
-    withRocksDb {
-      val src = java.nio.file.Files.createTempDirectory("graft-shh-cap").toString
-      java.nio.file.Files.writeString(
-        new java.io.File(s"$src/b1.csv").toPath,
-        ("group,item" +: (1 to 5).map(i => s"g,item$i")).mkString("\n"))
-      val in = spark.readStream.schema("group STRING, item STRING")
-        .option("header", "true").csv(src)
-      // the query MUST fail; a clean completion fails the test
-      // immediately. The designed capacity error interrupts the
-      // micro-batch, which can race the RocksDB checkpoint zip and
-      // surface as an UncheckedIOException teardown artifact instead
-      // of the StreamingQueryException carrying the contract message
-      // (seen once in ~6 full-suite runs) — retry ONCE on an
-      // exception whose whole cause chain lacks "capacity"; never on
-      // success.
-      def chain(t: Throwable): Seq[String] =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .take(10).map(_.toString).toSeq
-      def attempt(i: Int): Seq[String] =
-        try {
-          graft.streaming.EventsStream.runAvailableNow(
-            StreamingHeavyHitters.perGroupHitters(
-              in, capacity = 3, failAtCapacity = true).toDF(),
-            s"hh_capfail_sink$i", outputMode = "update")
-          fail("capacity violation completed cleanly — the exact-" +
-            "regime contract must fail loudly")
-        } catch {
-          case e: org.scalatest.exceptions.TestFailedException => throw e
-          case t: Throwable => chain(t)
-        }
-      val first = attempt(1)
-      val msgs = if (first.exists(_.contains("capacity"))) first
-                 else first ++ attempt(2)
-      assert(msgs.exists(_.contains("capacity")),
-        s"expected the capacity contract error in the cause chain, got: $msgs")
+    withTempDir { t =>
+      // 5 distinct items into capacity 3 with failAtCapacity: the
+      // oracle-row contract (summary ≡ count) no longer holds — the
+      // query must FAIL, not silently decrement (r9 advice)
+      withRocksDb {
+        val src = java.nio.file.Files.createDirectories(t.resolve("src")).toString
+        java.nio.file.Files.writeString(
+          new java.io.File(s"$src/b1.csv").toPath,
+          ("group,item" +: (1 to 5).map(i => s"g,item$i")).mkString("\n"))
+        val in = spark.readStream.schema("group STRING, item STRING")
+          .option("header", "true").csv(src)
+        // the query MUST fail; a clean completion fails the test
+        // immediately. The designed capacity error interrupts the
+        // micro-batch, which can race the RocksDB checkpoint zip and
+        // surface as an UncheckedIOException teardown artifact instead
+        // of the StreamingQueryException carrying the contract message
+        // (seen once in ~6 full-suite runs) — retry ONCE on an
+        // exception whose whole cause chain lacks "capacity"; never on
+        // success.
+        def chain(t: Throwable): Seq[String] =
+          Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+            .take(10).map(_.toString).toSeq
+        def attempt(i: Int): Seq[String] =
+          try {
+            graft.streaming.EventsStream.runAvailableNow(
+              StreamingHeavyHitters.perGroupHitters(
+                in, capacity = 3, failAtCapacity = true).toDF(),
+              s"hh_capfail_sink$i", outputMode = "update")
+            fail("capacity violation completed cleanly — the exact-" +
+              "regime contract must fail loudly")
+          } catch {
+            case e: org.scalatest.exceptions.TestFailedException => throw e
+            case t: Throwable => chain(t)
+          }
+        val first = attempt(1)
+        val msgs = if (first.exists(_.contains("capacity"))) first
+                   else first ++ attempt(2)
+        assert(msgs.exists(_.contains("capacity")),
+          s"expected the capacity contract error in the cause chain, got: $msgs")
+      }
     }
   }
 
   test("forced 3-batch drain reaches the board row's exact leaderboard") {
-    // The board row's post-processing (max-n_seen row per group) is
-    // argued to be multi-batch-safe because n_seen is strictly
-    // monotone per group; force the multi-batch regime — 3-file copy
-    // of events, maxFilesPerTrigger=1 — and hold the final
-    // leaderboard to equality with the single-batch board result
-    // (itself DuckDB-hash-gated).
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val events = spark.read.parquet(s"$sf/events.parquet")
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-hh-mb").toString + "/events3"
-    events.repartition(3).write.parquet(srcDir)
-    assert(new java.io.File(srcDir).listFiles()
-      .count(_.getName.endsWith(".parquet")) >= 3)
-    val got = graft.streaming.EventsStream.withRocksDbStateStore(spark) {
-      val in = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .select(col("event_type").as("group"),
-          col("user_id").cast("string").as("item"))
-      val ck = java.nio.file.Files.createTempDirectory("graft-hh-mb-ck")
-      val q = StreamingHeavyHitters.perGroupHitters(
-          in, capacity = 1 << 17, failAtCapacity = true).toDF()
-        .writeStream.format("memory").queryName("hh_mb_sink")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ck.toString).start()
-      q.awaitTermination()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0)
-      assert(nBatches >= 3, s"expected a >=3-batch drain, got $nBatches")
-      // same post-processing as the board row: the update-mode sink
-      // holds one leaderboard row per group per batch; keep the final
-      // (max-n_seen) state and explode the top 50
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("group")).orderBy(desc("n_seen"))
-      val r = spark.table("hh_mb_sink")
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .select(col("group").as("event_type"), col("n_seen"),
-          posexplode(arrays_zip(col("items"), col("ests"))))
-        .select(col("event_type"), col("n_seen"),
-          (col("pos") + 1).cast("int").as("rk"),
-          col("col.items").as("item"), col("col.ests").as("cnt"))
-        .filter(col("rk") <= 50)
+    withTempDir { t =>
+      // The board row's post-processing (max-n_seen row per group) is
+      // argued to be multi-batch-safe because n_seen is strictly
+      // monotone per group; force the multi-batch regime — 3-file copy
+      // of events, maxFilesPerTrigger=1 — and hold the final
+      // leaderboard to equality with the single-batch board result
+      // (itself DuckDB-hash-gated).
+      import spark.implicits._
+      import org.apache.spark.sql.functions._
+      val events = spark.read.parquet(s"$sf/events.parquet")
+      val srcDir = s"$t/events3"
+      events.repartition(3).write.parquet(srcDir)
+      assert(new java.io.File(srcDir).listFiles()
+        .count(_.getName.endsWith(".parquet")) >= 3)
+      val got = graft.streaming.EventsStream.withRocksDbStateStore(spark) {
+        val in = spark.readStream.schema(events.schema)
+          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+          .select(col("event_type").as("group"),
+            col("user_id").cast("string").as("item"))
+        val ck = t.resolve("ck")
+        val q = StreamingHeavyHitters.perGroupHitters(
+            in, capacity = 1 << 17, failAtCapacity = true).toDF()
+          .writeStream.format("memory").queryName("hh_mb_sink")
+          .outputMode("update")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .option("checkpointLocation", ck.toString).start()
+        q.awaitTermination()
+        val nBatches = q.recentProgress.count(_.numInputRows > 0)
+        assert(nBatches >= 3, s"expected a >=3-batch drain, got $nBatches")
+        // same post-processing as the board row: the update-mode sink
+        // holds one leaderboard row per group per batch; keep the final
+        // (max-n_seen) state and explode the top 50
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("group")).orderBy(desc("n_seen"))
+        val r = spark.table("hh_mb_sink")
+          .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+          .select(col("group").as("event_type"), col("n_seen"),
+            posexplode(arrays_zip(col("items"), col("ests"))))
+          .select(col("event_type"), col("n_seen"),
+            (col("pos") + 1).cast("int").as("rk"),
+            col("col.items").as("item"), col("col.ests").as("cnt"))
+          .filter(col("rk") <= 50)
+          .collect()
+          .map(x => (x.getString(0), x.getLong(1), x.getInt(2),
+            x.getString(3), x.getLong(4))).toSet
+        r
+      }
+      val single = graft.SparkEntry.queries("stream_heavy_hitters")(spark, sf)
         .collect()
         .map(x => (x.getString(0), x.getLong(1), x.getInt(2),
           x.getString(3), x.getLong(4))).toSet
-      graft.streaming.EventsStream.deleteRecursively(ck)
-      r
+      assert(got == single,
+        s"batch-split changed the leaderboard: only-multi=${(got -- single).take(3)}, " +
+          s"only-single=${(single -- got).take(3)}")
+      assert(got.nonEmpty)
     }
-    val single = graft.SparkEntry.queries("stream_heavy_hitters")(spark, sf)
-      .collect()
-      .map(x => (x.getString(0), x.getLong(1), x.getInt(2),
-        x.getString(3), x.getLong(4))).toSet
-    assert(got == single,
-      s"batch-split changed the leaderboard: only-multi=${(got -- single).take(3)}, " +
-        s"only-single=${(single -- got).take(3)}")
-    assert(got.nonEmpty)
   }
 
   test("withRocksDbStateStore restores the provider conf afterwards") {
