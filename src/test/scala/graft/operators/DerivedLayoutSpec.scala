@@ -1,13 +1,16 @@
 package graft.operators
 
+import java.io.File
+
 import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
-/** The derived-layout mechanism shared by the partitioned fact copy
-  * and the materialized cluster assignment: built once, served while
-  * fresh, REBUILT when the source parquet changes (fingerprint on
-  * names+sizes+mtimes — a marker-only check would serve a stale
-  * derivation against a freshly-computed oracle).
+/** The derived tables (`DerivedStore.table`) behind the partitioned
+  * fact copy and the materialized cluster assignment: built once,
+  * served while fresh, REBUILT when the source parquet changes — a
+  * marker-only check would serve a stale derivation against a
+  * freshly-computed oracle.
   */
 class DerivedLayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -21,36 +24,38 @@ class DerivedLayoutSpec extends SparkSpec {
   }
 
   test("derive builds once while fresh, rebuilds on source change") {
-    val root = java.nio.file.Files.createTempDirectory("derived-spec").toFile
-    val dir = new java.io.File(root, "sfX"); dir.mkdirs()
-    val srcPath = new java.io.File(dir, "src.parquet").getAbsolutePath
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .coalesce(1).write.mode("overwrite").parquet(srcPath)
+    withTempDir { root =>
+      val dir = root.resolve("sfX").toFile; dir.mkdirs()
+      val srcPath = new File(dir, "src.parquet").getAbsolutePath
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+        .coalesce(1).write.mode("overwrite").parquet(srcPath)
 
-    var builds = 0
-    def derive() = DerivedLayout.derive(spark, dir.getAbsolutePath,
-      "layout_spec_probe", "src.parquet") {
-      builds += 1
-      spark.read.parquet(srcPath).withColumn("n", lit(builds))
+      var builds = 0
+      def derive() = DerivedStore.table(dir.getAbsolutePath, "layout_spec_probe",
+          spark.read.parquet(srcPath)) { out =>
+        builds += 1
+        spark.read.parquet(srcPath).withColumn("n", lit(builds))
+          .write.mode("overwrite").parquet(out)
+      }
+
+      val p1 = derive()
+      assert(builds == 1)
+      val p2 = derive() // fresh — served from the layout, no rebuild
+      assert(builds == 1 && p1 == p2)
+      assert(spark.read.parquet(p1).agg(max($"n")).head.getInt(0) == 1)
+
+      // regenerate the source (content AND mtime/size can all change);
+      // bump mtime explicitly in case the rewrite lands in the same
+      // filesystem timestamp granule with identical bytes
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
+        .coalesce(1).write.mode("overwrite").parquet(srcPath)
+      val srcDir = new File(srcPath)
+      srcDir.listFiles().foreach(f => f.setLastModified(f.lastModified() + 2000))
+
+      val p3 = derive() // stale — must rebuild
+      assert(builds == 2)
+      assert(spark.read.parquet(p3).count() == 3)
+      assert(spark.read.parquet(p3).agg(max($"n")).head.getInt(0) == 2)
     }
-
-    val p1 = derive()
-    assert(builds == 1)
-    val p2 = derive() // fresh — served from the layout, no rebuild
-    assert(builds == 1 && p1 == p2)
-    assert(spark.read.parquet(p1).agg(max($"n")).head.getInt(0) == 1)
-
-    // regenerate the source (content AND mtime/size can all change);
-    // bump mtime explicitly in case the rewrite lands in the same
-    // filesystem timestamp granule with identical bytes
-    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      .coalesce(1).write.mode("overwrite").parquet(srcPath)
-    val srcDir = new java.io.File(srcPath)
-    srcDir.listFiles().foreach(f => f.setLastModified(f.lastModified() + 2000))
-
-    val p3 = derive() // stale — must rebuild
-    assert(builds == 2)
-    assert(spark.read.parquet(p3).count() == 3)
-    assert(spark.read.parquet(p3).agg(max($"n")).head.getInt(0) == 2)
   }
 }

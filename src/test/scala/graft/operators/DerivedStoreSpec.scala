@@ -5,63 +5,18 @@ import java.nio.file.Files
 import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sources.{Jdbc, JdbcGate}
 
 /** The derived-artifact store behind the partitioned fact copy, the
   * cluster assignment, the pair/node layouts, the probe verdicts, the
-  * trained models and the Derby warehouse load: built once, served
-  * while the key holds, REBUILT when any input file or the engine code
-  * changes.
+  * trained models and the Derby warehouse load: no artifact kind is
+  * served once any input file or the engine code changes. The derived
+  * tables alone are covered in `DerivedLayoutSpec`.
   */
 class DerivedStoreSpec extends SparkSpec {
   import spark.implicits._
-
-  test("materialized cluster assignment equals the direct clustering") {
-    val docs = graft.catalog.Tables(spark, sf).documents
-    val direct = Dedup.minhashClusters(docs)
-    val mat = Dedup.materializedClusters(spark, sf)
-    assert(mat.count() == docs.count())
-    assert(direct.except(mat).count() == 0 && mat.except(direct).count() == 0)
-  }
-
-  test("table builds once while fresh, rebuilds on source change") {
-    withTempDir { root =>
-      val dir = root.resolve("sfX").toFile; dir.mkdirs()
-      val srcPath = new File(dir, "src.parquet").getAbsolutePath
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-        .coalesce(1).write.mode("overwrite").parquet(srcPath)
-
-      var builds = 0
-      def table() = DerivedStore.table(dir.getAbsolutePath, "layout_spec_probe",
-          spark.read.parquet(srcPath)) { out =>
-        builds += 1
-        spark.read.parquet(srcPath).withColumn("n", lit(builds))
-          .write.mode("overwrite").parquet(out)
-      }
-
-      val p1 = table()
-      assert(builds == 1)
-      val p2 = table() // fresh — served from the layout, no rebuild
-      assert(builds == 1 && p1 == p2)
-      assert(spark.read.parquet(p1).agg(max($"n")).head.getInt(0) == 1)
-
-      // regenerate the source (content AND mtime/size can all change);
-      // bump mtime explicitly in case the rewrite lands in the same
-      // filesystem timestamp granule with identical bytes
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-        .coalesce(1).write.mode("overwrite").parquet(srcPath)
-      val srcDir = new File(srcPath)
-      srcDir.listFiles().foreach(f => f.setLastModified(f.lastModified() + 2000))
-
-      val p3 = table() // stale — must rebuild
-      assert(builds == 2)
-      assert(spark.read.parquet(p3).count() == 3)
-      assert(spark.read.parquet(p3).agg(max($"n")).head.getInt(0) == 2)
-    }
-  }
 
   // ---- no artifact kind can be served stale ----------------------
 

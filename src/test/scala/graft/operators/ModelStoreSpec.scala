@@ -83,7 +83,8 @@ class ModelStoreSpec extends SparkSpec {
     }
   }
 
-  test("model build cost rides the entry's first line and registers in the ModelCost ledger") {
+  test("model build cost rides a sidecar and registers in the ModelCost ledger") {
+    // the "sidecar" is now the first line of the value's disk entry
     withTempDir { dir =>
       writeVecs(dir, 10, 3.0)
       def df() = spark.read.parquet(dir.toString)
