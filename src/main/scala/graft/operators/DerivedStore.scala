@@ -163,12 +163,25 @@ object DerivedStore {
     * is also kept on disk under `target/derived/values/<key>`: the
     * first line holds the build seconds (surfaced through
     * [[ModelCost]]), the rest `encode(value)`, written through a temp
-    * file and an atomic rename. The disk tier is off when
-    * [[ModelCost.preloadsEnabled]] is false: every JVM then pays the
-    * compute inside whatever window first needs it.
+    * file and an atomic rename. An entry that cannot be read or
+    * decoded is a miss: the value is computed and the entry rewritten.
+    * The disk tier is off when [[ModelCost.preloadsEnabled]] is false:
+    * every JVM then pays the compute inside whatever window first
+    * needs it.
     */
   def value[T <: AnyRef](df: DataFrame, kind: String)(compute: => T)(
-      encode: T => String)(decode: String => T): T = {
+      encode: T => String)(decode: String => T): T =
+    memoized(df, kind, ledger = true)(compute)(encode)(decode)
+
+  /** [[value]] for a Boolean probe verdict. A probe is query work, not
+    * a trained model, so its seconds stay out of the [[ModelCost]]
+    * ledger.
+    */
+  def verdict(df: DataFrame, kind: String)(probe: => Boolean): Boolean =
+    memoized[java.lang.Boolean](df, kind, ledger = false)(probe)(_.toString)(_ == "true")
+
+  private def memoized[T <: AnyRef](df: DataFrame, kind: String, ledger: Boolean)(
+      compute: => T)(encode: T => String)(decode: String => T): T = {
     val k = key(df, kind)
     val memoKey: AnyRef = k.getOrElse((kind, df.queryExecution.analyzed.canonicalized))
     while (memo.size() > MemoMax) {
@@ -177,24 +190,24 @@ object DerivedStore {
     }
     memo.computeIfAbsent(memoKey, _ => new Lazy(() =>
       k.filter(_ => ModelCost.preloadsEnabled) match {
-        case Some(dk) => onDisk(kind, dk)(compute)(encode)(decode)
+        case Some(dk) => onDisk(kind, dk, ledger)(compute)(encode)(decode)
         case None => compute
       })).get.asInstanceOf[T]
   }
 
-  /** [[value]] for a Boolean probe verdict. */
-  def verdict(df: DataFrame, kind: String)(probe: => Boolean): Boolean =
-    value[java.lang.Boolean](df, kind)(probe)(_.toString)(_ == "true")
-
-  private def onDisk[T <: AnyRef](kind: String, k: String)(compute: => T)(
-      encode: T => String)(decode: String => T): T = {
+  private def onDisk[T <: AnyRef](kind: String, k: String, ledger: Boolean)(
+      compute: => T)(encode: T => String)(decode: String => T): T = {
     val f = new File(s"$Root/values/$k")
-    if (f.exists()) {
-      touch(f)
-      val Array(sec, body) = Files.readString(f.toPath).split("\n", 2)
-      ModelCost.recordLoaded(kind, k, sec.toDouble)
-      decode(body)
-    } else {
+    val hit = if (!f.exists()) None else
+      try {
+        val Array(line, body) = Files.readString(f.toPath).split("\n", 2)
+        val sec = line.toDouble
+        val v = decode(body)
+        touch(f)
+        if (ledger) ModelCost.recordLoaded(kind, k, sec)
+        Some(v)
+      } catch { case NonFatal(_) => None }
+    hit.getOrElse {
       val t0 = System.nanoTime()
       val v = compute
       val sec = (System.nanoTime() - t0) / 1e9
@@ -205,7 +218,7 @@ object DerivedStore {
       Files.writeString(tmp, "%.3f".formatLocal(java.util.Locale.ROOT, sec) +
         "\n" + encode(v))
       Files.move(tmp, f.toPath, StandardCopyOption.ATOMIC_MOVE)
-      ModelCost.recordBuilt(kind, k, sec)
+      if (ledger) ModelCost.recordBuilt(kind, k, sec)
       evictPast(f.getParentFile, DiskCap)
       v
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-/** Ledger of model and probe build cost EXCLUDED from timed query
+/** Ledger of model build cost EXCLUDED from timed query
   * windows, plus the single opt-out gate for every bench-setup
   * preload/warm (r17 verdict item 2).
   *
@@ -20,13 +20,15 @@ package graft.operators
   *    timed window that needs the model (the raw-JVM regime,
   *    measurable on demand).
   *
-  *  - the cost ledger: every value built through the disk tier is
+  *  - the cost ledger: every model built through the disk tier is
   *    timed and the seconds persist in the first line of its entry;
   *    disk hits re-read them. Bench sums whatever the setup preloads
   *    registered and emits `model_build_sec` in the recording — the
   *    excluded cost is visible in the artifact instead of vanished.
   *    Entries key by store key, so one model counted via two queries
-  *    still counts once.
+  *    still counts once. Probe verdicts ([[DerivedStore.verdict]])
+  *    stay out of the ledger, so `model_build_sec` counts trainers
+  *    only.
   */
 object ModelCost {
 

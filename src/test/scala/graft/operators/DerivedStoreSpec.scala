@@ -89,4 +89,46 @@ class DerivedStoreSpec extends SparkSpec {
       }
     }
   }
+
+  // ---- a disk entry is only a cache ------------------------------
+
+  test("an entry that cannot be read or decoded is recomputed and rewritten") {
+    withTempDir { root =>
+      val path = root.resolve("customer.parquet").toString
+      writeCustomers(path, Seq((1L, 1, 1)), "overwrite")
+      def src(): DataFrame = spark.read.parquet(path)
+      val kind = s"spec_bad_entry_${System.nanoTime()}"
+      val entry = new File(s"target/derived/values/${DerivedStore.key(src(), kind).get}")
+      var builds = 0
+      def fresh(): Double = {
+        DerivedStore.clearMemo()
+        DerivedStore.value(src(), kind) { builds += 1; Array(Array(4.0)) }(
+          Similarity.encodeMatrix)(Similarity.decodeMatrix)(0)(0)
+      }
+      // no body, an unparseable cost line, an undecodable body
+      for (bad <- Seq("0.5", "soon\n4.0", "0.5\nfour")) {
+        entry.getParentFile.mkdirs()
+        Files.writeString(entry.toPath, bad)
+        assert(fresh() == 4.0, bad)
+      }
+      assert(builds == 3)
+      assert(fresh() == 4.0 && builds == 3, "the rewritten entry was not served")
+    }
+  }
+
+  test("probe verdicts stay out of the ModelCost ledger") {
+    withTempDir { root =>
+      val path = root.resolve("customer.parquet").toString
+      writeCustomers(path, Seq((1L, 1, 1)), "overwrite")
+      def src(): DataFrame = spark.read.parquet(path)
+      val kind = s"spec_probe_cost_${System.nanoTime()}"
+      var probes = 0
+      for (_ <- 1 to 2) { // built, then a disk hit
+        DerivedStore.clearMemo()
+        assert(DerivedStore.verdict(src(), kind) { probes += 1; Thread.sleep(30); true })
+      }
+      assert(probes == 1)
+      assert(!ModelCost.entriesJson.contains(kind), ModelCost.entriesJson)
+    }
+  }
 }
