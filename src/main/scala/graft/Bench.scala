@@ -155,10 +155,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the driver's recording environment (local[32]) —
-    // the r8 builder runs accidentally recorded at local[4] because
-    // this defaulted low, making the numbers incomparable to BASELINE
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // default: every core of this machine; a run at other than 32
+    // cores records beside the committed board (see recordPath)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // warm per-query times are MEDIANS over this many warm passes —
     // r9 showed a single warm pass at 155 queries is not a stable
     // trend line (three builder runs: 126.8 / 129.3 / 93.3 s)

@@ -4,15 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Defaults chosen for the driver environment (single-JVM `local[32]`,
-  * 128 GiB) but expressed so the same settings transfer to a real
-  * cluster: AQE on (runtime re-plan of shuffles, skew-join splitting,
-  * broadcast demotion/promotion), shuffle partitions sized to cores
-  * rather than the 200 default, UTC timezone pinned for oracle parity
-  * (reference analytics run in PG default UTC — see SURVEY.md §1.3).
+  * One local JVM, on every core of the machine by default, with
+  * settings that transfer unchanged to a real cluster: AQE on (runtime
+  * re-plan of shuffles, skew-join splitting, broadcast
+  * demotion/promotion), shuffle partitions sized to cores rather than
+  * the 200 default, UTC timezone pinned for oracle parity (reference
+  * analytics run in PG default UTC — see SURVEY.md §1.3).
   */
 object GraftSession {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  def local(cores: Int = Runtime.getRuntime.availableProcessors,
+            appName: String = "graft"): SparkSession = {
     val builder = SparkSession
       .builder()
       .master(s"local[$cores]")

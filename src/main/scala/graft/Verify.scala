@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // the library's own session: the DuckDB oracle gate validates the
     // SAME plans the library produces (a WindowTopKToHeap bug must fail
     // THIS gate, not only the unit specs)

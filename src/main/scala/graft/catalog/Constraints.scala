@@ -6,9 +6,18 @@ import org.apache.spark.storage.StorageLevel
 
 /** Pre-commit constraint checks — Spark doesn't enforce PK/NOT NULL
   * declarations (SURVEY.md §1.4), so the reference's DDL constraints
-  * (`create_tables.py:21`, `orders_ETL.py:76`) become explicit
-  * distributed checks on the once-materialised output, run before the
-  * sink commits: a failed check leaves the previous output in place.
+  * (`create_tables.py:21`, `orders_ETL.py:76`) become explicit checks on
+  * the once-computed output, run before the sink commits: a failed
+  * check leaves the previous output in place.
+  *
+  * [[enforce]] takes one of two paths, chosen from the optimized plan:
+  *  - a plan that yields at most one row (a global aggregate, a top-1;
+  *    all three reference outputs) is collected once and checked on the
+  *    driver, and the sink writes the collected row;
+  *  - any other plan is persisted, checked with one distributed `count`
+  *    ([[check]]) and written from the cache.
+  * Either way the transform runs once and the sink sees only a clean
+  * output.
   */
 object Constraints {
 
@@ -41,19 +50,32 @@ object Constraints {
     Violations(table, m("dupes").asInstanceOf[Long], m("nulls").asInstanceOf[Long])
   }
 
-  /** Materialises `df` once, checks it, and hands the cached rows to
-    * `sink` only if it is clean; the cache is released either way. The
-    * happy path is the one [[check]] job and the sink's write.
+  /** Plans bounded to this many rows are checked on the driver. At
+    * most one row holds no duplicate key, so only NOT NULL is tested.
+    */
+  private val DriverCheckMaxRows = 1L
+
+  /** Computes `df` once, checks it, and hands its rows to `sink` only
+    * if they are clean. The happy path is one job (the `collect` of a
+    * one-row plan, else the [[check]] of the persisted rows, whose cache
+    * is released either way) and the sink's write.
     */
   def enforce[T](df: DataFrame, table: String, primaryKey: Seq[String],
-                 notNull: Seq[String])(sink: DataFrame => T): T = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val v = check(df, table, primaryKey, notNull)
+                 notNull: Seq[String])(sink: DataFrame => T): T =
+    if (df.queryExecution.optimizedPlan.maxRows.exists(_ <= DriverCheckMaxRows)) {
+      val rows = df.collect()
+      val nullRows = rows.count(r => notNull.exists(c => r.isNullAt(r.fieldIndex(c))))
+      val v = Violations(table, duplicateKeys = 0L, nullRows.toLong)
       if (!v.clean) throw new ConstraintViolation(v)
-      sink(df)
-    } finally df.unpersist()
-  }
+      sink(df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
+    } else {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val v = check(df, table, primaryKey, notNull)
+        if (!v.clean) throw new ConstraintViolation(v)
+        sink(df)
+      } finally df.unpersist()
+    }
 
   private def anyNull(columns: Seq[String]) =
     columns.map(col(_).isNull).foldLeft(lit(false))(_ || _)

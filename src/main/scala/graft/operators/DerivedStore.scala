@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.File
 import java.nio.file.{FileSystems, Files, Paths, StandardCopyOption}
-import java.nio.file.attribute.FileTime
+import java.nio.file.attribute.{FileAttribute, FileTime, PosixFilePermissions}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -213,8 +213,10 @@ object DerivedStore {
       val sec = (System.nanoTime() - t0) / 1e9
       f.getParentFile.mkdirs()
       // a concurrent JVM sharing target/derived must never read a
-      // half-written entry
-      val tmp = Files.createTempFile(f.getParentFile.toPath, f.getName, ".tmp")
+      // half-written entry; the entry is readable beyond its owner, as
+      // every other file of the store is (a temp file is 0600)
+      val tmp = Files.createTempFile(f.getParentFile.toPath, f.getName, ".tmp",
+        entryMode: _*)
       Files.writeString(tmp, "%.3f".formatLocal(java.util.Locale.ROOT, sec) +
         "\n" + encode(v))
       Files.move(tmp, f.toPath, StandardCopyOption.ATOMIC_MOVE)
@@ -223,6 +225,11 @@ object DerivedStore {
       v
     }
   }
+
+  /** `rw-r--r--` (less the umask) on a POSIX filesystem. */
+  private val entryMode: Seq[FileAttribute[_]] =
+    if (!FileSystems.getDefault.supportedFileAttributeViews.contains("posix")) Nil
+    else Seq(PosixFilePermissions.asFileAttribute(PosixFilePermissions.fromString("rw-r--r--")))
 
   /** Disk hits refresh their entry's mtime; best-effort, so a
     * filesystem refusing the update degrades the LRU to FIFO.

@@ -96,8 +96,8 @@ object ReferencePipelines {
   }
 
   /** The reference's DDL constraints (primary key `ingestion_date`,
-    * §1.4) checked on the once-materialised transform output, which is
-    * then written from the cache to `$outDir/<table>/`.
+    * §1.4) checked on the once-computed transform output, whose rows
+    * are then written to `$outDir/<table>/` without computing it again.
     */
   private def commit(df: DataFrame, table: String, outDir: String,
                      notNull: Seq[String]): Unit =

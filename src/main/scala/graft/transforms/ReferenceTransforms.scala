@@ -1,6 +1,6 @@
 package graft.transforms
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's three analytics transforms on its OWN data model
@@ -62,9 +62,25 @@ object ReferenceTransforms {
   }
 
   /** Best performing product (`reviews_ETL.py:93-198`): 5-way join
-    * chain, top-1 product by mean review, most-ordered day + holiday
-    * flag, and one aggregate over the winner's rows for the
-    * star-percentage split and the early/late shipment percentages.
+    * chain, top-1 product by mean review, its most-ordered day and
+    * holiday flag, and over the winner's rows the star-percentage split
+    * and the early/late shipment percentages.
+    *
+    * The reference's CTEs read the join chain (CTE_1) four times. Here
+    * it is one linear plan, so every input is scanned and joined once:
+    *  1. per (product, order day, holiday flag): review sum and count,
+    *     row count (= order count), the five star counts and the
+    *     early/late counts;
+    *  2. per product: the summed counters, the mean review
+    *     Σsum / Σcount, and the busiest day as the day with the largest
+    *     key (orders << 32) − unix_date(day): most orders first, then
+    *     the earliest day;
+    *  3. top-1 by (mean desc, product_id asc), then the final select.
+    * It equals the CTE formulation exactly: integer sums below 2^53 give
+    * the same double as `avg`, the percentages stay long / long, and
+    * both tie-breaks are unchanged. Every aggregate stays hash-based:
+    * `max_by` over a date or a boolean keeps a fixed-width buffer, where
+    * a `min(struct(...))` would plan two sort aggregates.
     *
     * Reference shipment-status semantics preserved exactly
     * (`reviews_ETL.py:155-156`): late := >= 6 days AND undelivered;
@@ -85,42 +101,39 @@ object ReferenceTransforms {
         col("d.working_day"), col("e.shipment_id"), col("e.shipment_date"),
         col("e.delivery_date"))
 
-    // CTE_2 (reviews_ETL.py:116-124): top-1 by avg review, tie-break id
-    val cte2 = cte1.groupBy(col("product_id"), col("product_name"))
-      .agg(avg(col("review")).as("average"), sum(col("review")).as("tt_review_points"))
-      .orderBy(desc("average"), asc("product_id")).limit(1)
-    val winner = cte1.join(broadcast(cte2.select(col("product_id"))), Seq("product_id"))
-
-    // CTE_3 (reviews_ETL.py:127-135): most-ordered day for the winner
-    val mostOrdered = winner
-      .groupBy(col("order_date"),
+    // CTA_4 + CTE_5/6 (reviews_ETL.py:137-170) counters, per day so the
+    // same pass also serves CTE_3's most-ordered day
+    val days = datediff(col("shipment_date"), col("order_date"))
+    val counters = Seq("one", "two", "three", "four", "five").zipWithIndex.map {
+      case (n, i) => s"${n}_star_review" -> (col("review") === i + 1)
+    } ++ Seq(
+      "early_shipment" -> (days <= 6 && col("delivery_date").isNotNull),
+      "late_shipment" -> (days >= 6 && col("delivery_date").isNull))
+    val perDay = cte1
+      .groupBy(col("product_id"), col("product_name"), col("order_date"),
         (col("working_day") === false &&
           col("day_of_the_week_num").isin(1, 2, 3, 4, 5)).as("is_public_holiday"))
-      .agg(count(col("order_id")).as("total"))
-      .orderBy(desc("total"), asc("order_date")).limit(1)
-      .select(col("order_date").as("most_ordered_day"), col("is_public_holiday"))
+      .agg(sum(col("review")).as("points"), (Seq(
+        count(col("review")).as("reviewed"), count(lit(1)).as("rows")) ++
+        counters.map { case (c, cond) => count_if(cond).as(c) }): _*)
 
-    // CTA_4 + CTE_5/6 (reviews_ETL.py:137-170): star split and
-    // early/late shipment pcts in one aggregate. count_if / count(1) is
-    // the same long / long as the reference's ratio-to-report window.
-    def pct(cond: Column) = count_if(cond) * 100.0 / count(lit(1))
-    val starNames = Seq("one", "two", "three", "four", "five")
-    val days = datediff(col("shipment_date"), col("order_date"))
-    val pcts = (1 to 5).map(s =>
-      pct(col("review") === s).as(s"pct_${starNames(s - 1)}_star_review")) ++ Seq(
-      pct(days <= 6 && col("delivery_date").isNotNull).as("pct_early_shipment"),
-      pct(days >= 6 && col("delivery_date").isNull).as("pct_late_shipment"))
-    val winnerPcts = winner.agg(pcts.head, pcts.tail: _*)
+    // CTE_2 (reviews_ETL.py:116-124) and CTE_3 (127-135) per product.
+    // CTE_3 counts order_id, never NULL past its inner join: the rows.
+    val busiest = shiftleft(col("rows"), 32) - unix_date(col("order_date"))
+    val perProduct = perDay.groupBy(col("product_id"), col("product_name"))
+      .agg(sum(col("points")).as("tt_review_points"), (Seq(
+        sum(col("reviewed")).as("reviewed"), sum(col("rows")).as("rows"),
+        max_by(col("order_date"), busiest).as("most_ordered_day"),
+        max_by(col("is_public_holiday"), busiest).as("is_public_holiday")) ++
+        counters.map { case (c, _) => sum(col(c)).as(c) }): _*)
 
-    // CTE_FINAL (reviews_ETL.py:172-198)
-    cte2.crossJoin(mostOrdered).crossJoin(winnerPcts)
-      .select(
+    // top-1 by avg review, tie-break id; CTE_FINAL (reviews_ETL.py:172-198)
+    val average = col("tt_review_points").cast("double") / col("reviewed").cast("double")
+    perProduct.orderBy(average.desc, col("product_id").asc).limit(1)
+      .select((Seq(
         lit(ingestionDate).cast("date").as("ingestion_date"),
         col("product_name"), col("most_ordered_day"), col("is_public_holiday"),
-        col("tt_review_points"),
-        col("pct_one_star_review"), col("pct_two_star_review"),
-        col("pct_three_star_review"), col("pct_four_star_review"),
-        col("pct_five_star_review"),
-        col("pct_early_shipment"), col("pct_late_shipment"))
+        col("tt_review_points")) ++
+        counters.map { case (c, _) => (col(c) * 100.0 / col("rows")).as(s"pct_$c") }): _*)
   }
 }

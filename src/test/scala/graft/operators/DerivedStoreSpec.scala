@@ -1,8 +1,8 @@
 package graft.operators
 
 import java.io.File
-import java.nio.file.Files
-import java.nio.file.attribute.FileTime
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.{FileTime, PosixFilePermissions}
 
 import org.apache.spark.sql.DataFrame
 
@@ -113,6 +113,20 @@ class DerivedStoreSpec extends SparkSpec {
       }
       assert(builds == 3)
       assert(fresh() == 4.0 && builds == 3, "the rewritten entry was not served")
+    }
+  }
+
+  test("a disk entry is readable beyond its owner") {
+    withTempDir { root =>
+      val path = root.resolve("customer.parquet").toString
+      writeCustomers(path, Seq((1L, 1, 1)), "overwrite")
+      val src = spark.read.parquet(path)
+      val kind = s"spec_entry_mode_${System.nanoTime()}"
+      DerivedStore.value(src, kind)(Array(Array(1.0)))(
+        Similarity.encodeMatrix)(Similarity.decodeMatrix)
+      val entry = Paths.get(s"target/derived/values/${DerivedStore.key(src, kind).get}")
+      // a temp file would be rw------- whatever the umask
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(entry)) == "rw-r--r--")
     }
   }
 

@@ -1,6 +1,16 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftshim.ListenerBusSync
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -113,32 +123,63 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("a clean run executes the transform once: one count, one write") {
+  /** The executions `p.run` reports to a QueryExecutionListener, as
+    * (function name, executed plan); a failed one is named `failed <f>`.
+    */
+  private def executions(p: Pipeline): Seq[(String, SparkPlan)] = {
+    val seen = new ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = seen.add(funcName -> qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit =
+        seen.add(s"failed $funcName" -> qe.executedPlan)
+    }
+    spark.listenerManager.register(l)
+    try {
+      p.run(spark)
+      ListenerBusSync.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    seen.asScala.toSeq
+  }
+
+  test("a clean run executes the transform once: one execution, one write") {
     withTempDir { t =>
-      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val l = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = names.add(funcName)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = names.add(s"failed $funcName")
-      }
       val out = s"$t/out"
       val in = fixtures(t)
       for (p <- Seq(ReferencePipelines.AggPublicHolidayPipeline(in, out),
                     ReferencePipelines.AggShipmentsPipeline(in, out),
                     ReferencePipelines.BestPerformingProductPipeline(in, out))) {
-        names.clear()
-        spark.listenerManager.register(l)
-        try {
-          p.run(spark)
-          org.apache.spark.graftshim.ListenerBusSync.waitUntilEmpty(spark.sparkContext)
-        } finally spark.listenerManager.unregister(l)
-        // the sink's write reaches the listener as "command"
-        assert(names.toArray(Array.empty[String]).toSeq.sorted == Seq("command", "count"),
+        // every reference output is one row, collected and checked on
+        // the driver; the sink's write reaches the listener as "command"
+        assert(executions(p).map(_._1).sorted == Seq("collect", "command"),
           s"${p.name} executions")
       }
     }
   }
+
+  /** File scans run by `plans`, through adaptive query stages and,
+    * once per cached relation, into the plan that builds it; a reused
+    * exchange is not a scan.
+    */
+  private def fileScans(plans: Seq[SparkPlan]): Seq[FileSourceScanExec] = {
+    val cached = plans.flatMap(PlanWalk.collect(_) {
+      case m: InMemoryTableScanExec => m.relation.cachedPlan
+    }).distinct
+    (plans ++ cached).flatMap(PlanWalk.collect(_) { case s: FileSourceScanExec => s })
+  }
+
+  test("best_performing_product scans each input file once, aggregating by hash") {
+    withTempDir { t =>
+      val plans = executions(
+        ReferencePipelines.BestPerformingProductPipeline(fixtures(t), s"$t/out")).map(_._2)
+      val scanned = fileScans(plans)
+        .flatMap(_.relation.location.rootPaths.map(p => new java.io.File(p.toUri).getName))
+      assert(scanned.sorted == Seq("dim_dates.csv", "dim_products.csv", "orders.csv",
+        "reviews.csv", "shipments_deliveries.csv"))
+      assert(plans.flatMap(PlanWalk.collect(_) { case a: SortAggregateExec => a }).isEmpty)
+    }
+  }
 }
+
+private object PlanWalk extends AdaptiveSparkPlanHelper
