@@ -3,57 +3,30 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Holiday-order pivot aggregation — Spark-native re-expression of the
-  * reference's `agg_public_holiday` transform
-  * (`airflow/dags/orders_ETL.py:93-125`):
-  *
-  *   orders ⋈ dim_dates on order date (J1), filter to "public
-  *   holidays" (P4/P5: NOT working_day AND dow IN 1..5), then a
-  *   manual PIVOT: 12× SUM(CASE WHEN month = m THEN 1 ELSE 0) (A1).
-  *
-  * Scale notes: the dim side is one row per distinct date — broadcast
-  * join, no shuffle on the fact table. The 12 conditional sums are a
-  * single hash-aggregate pass (partial map-side combine → one final
-  * row); whole plan is one scan + broadcast + partial/final agg,
-  * which holds at 100 TB (output is a single row regardless of input).
+import graft.transforms.ReferenceTransforms
+import graft.transforms.ReferenceTransforms.{DefaultIngestionDate, Months}
+
+/** Holiday-order pivot (`airflow/dags/orders_ETL.py:93-125`) over the
+  * testdata: a column mapping onto
+  * [[ReferenceTransforms.aggPublicHoliday]]. `orders.o_orderdate`
+  * plays `order_date` and the derived [[DateDim]] plays
+  * `if_common.dim_dates`.
   */
 object AggPublicHoliday {
-  private val months = Seq(
-    1 -> "jan", 2 -> "feb", 3 -> "mar", 4 -> "apr", 5 -> "may",
-    6 -> "jun", 7 -> "jul", 8 -> "aug", 9 -> "sep", 10 -> "oct",
-    11 -> "nov", 12 -> "dec")
 
-  /** Fixed ingestion date replacing the reference's CURRENT_TIMESTAMP
-    * narrowing (`orders_ETL.py:107`, quirk SURVEY.md §2.10.6) so runs
-    * are reproducible. Value reuses the reference's own pinned date
-    * literal (`shipments_ETL.py:98`).
-    */
-  val IngestionDate = "2022-09-05"
-
-  def apply(orders: DataFrame): DataFrame = {
-    val dim = DateDim.fromOrders(orders)
-    val joined = orders
-      .join(broadcast(dim), to_date(col("o_orderdate")) === col("calendar_dt"))
-      .filter(DateDim.isPublicHoliday(col("working_day"), col("day_of_the_week_num")))
-    val pivots = months.map { case (m, name) =>
-      sum(when(col("month_of_the_year_num") === m, 1).otherwise(0))
-        .as(s"tt_order_hol_$name")
-    }
-    joined
-      .agg(pivots.head, pivots.tail: _*)
-      .select(lit(IngestionDate).cast("date").as("ingestion_date") +: months.map {
-        case (_, n) => col(s"tt_order_hol_$n")
-      }: _*)
-  }
+  def apply(orders: DataFrame): DataFrame =
+    ReferenceTransforms.aggPublicHoliday(
+      orders.select(to_date(col("o_orderdate")).as("order_date")),
+      DateDim.fromOrders(orders))
 
   val oracle: String = {
-    val pivots = months
-      .map { case (m, n) =>
-        s"cast(sum(CASE WHEN d.month_of_the_year_num = $m THEN 1 ELSE 0 END) AS bigint) AS tt_order_hol_$n"
+    val pivots = Months.zipWithIndex
+      .map { case (n, i) =>
+        s"cast(sum(CASE WHEN d.month_of_the_year_num = ${i + 1} THEN 1 ELSE 0 END) AS bigint) AS tt_order_hol_$n"
       }
       .mkString(",\n       ")
     s"""WITH ${DateDim.oracleCte}
-       |SELECT cast('$IngestionDate' AS date) AS ingestion_date,
+       |SELECT cast('$DefaultIngestionDate' AS date) AS ingestion_date,
        |       $pivots
        |FROM orders o
        |JOIN dim_dates d ON cast(o.o_orderdate AS date) = d.calendar_dt

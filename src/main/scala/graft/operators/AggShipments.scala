@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.transforms.ReferenceTransforms.DefaultIngestionDate
+
 /** Late/undelivered-shipment aggregation — Spark-native re-expression
   * of the reference's `agg_shipments` transform
   * (`airflow/dags/shipments_ETL.py:84-104`):
@@ -20,18 +22,17 @@ import org.apache.spark.sql.functions._
   * open-status flag carries the same three-valued-filter role
   * (SURVEY.md §2.2 P6 is exercised separately in left_join_nulls).
   *
-  * Scale notes: equi-join on the order key; at 100 TB both sides are
-  * large, so this is the one genuinely shuffling join in the parity
-  * set — a sort-merge/shuffled-hash join on l_orderkey/o_orderkey,
-  * which AQE can re-plan. Aggregate output is one row (full map-side
-  * partial combine), so no skew concern on the agg.
+  * It keeps its own body rather than a mapping onto
+  * `ReferenceTransforms.aggShipments`: the reference counts an item
+  * undelivered when both dates are NULL and the order is exactly 15
+  * days old, and no column mapping turns that into `l_linestatus = 'O'`
+  * AND at least 15 days old. Nulling `shipment_date` for open lines
+  * would also drop them from the late count.
   */
 object AggShipments {
-  val IngestionDate = "2022-09-05"
-
   def apply(lineitem: DataFrame, orders: DataFrame): DataFrame = {
     val shipDays  = datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate")))
-    val openDays  = datediff(lit(IngestionDate).cast("date"), to_date(col("o_orderdate")))
+    val openDays  = datediff(lit(DefaultIngestionDate).cast("date"), to_date(col("o_orderdate")))
     lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .agg(
@@ -39,17 +40,17 @@ object AggShipments {
         sum(when(col("l_linestatus") === "O" && openDays >= 15, 1).otherwise(0))
           .as("tt_undelivered_items"))
       .select(
-        lit(IngestionDate).cast("date").as("ingestion_date"),
+        lit(DefaultIngestionDate).cast("date").as("ingestion_date"),
         col("tt_late_shipments"),
         col("tt_undelivered_items"))
   }
 
   val oracle: String =
-    s"""SELECT cast('$IngestionDate' AS date) AS ingestion_date,
+    s"""SELECT cast('$DefaultIngestionDate' AS date) AS ingestion_date,
        |  cast(sum(CASE WHEN datediff('day', cast(o.o_orderdate AS date), cast(l.l_shipdate AS date)) >= 6
        |           THEN 1 ELSE 0 END) AS bigint) AS tt_late_shipments,
        |  cast(sum(CASE WHEN l.l_linestatus = 'O'
-       |                AND datediff('day', cast(o.o_orderdate AS date), cast('$IngestionDate' AS date)) >= 15
+       |                AND datediff('day', cast(o.o_orderdate AS date), cast('$DefaultIngestionDate' AS date)) >= 15
        |           THEN 1 ELSE 0 END) AS bigint) AS tt_undelivered_items
        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey""".stripMargin
 }

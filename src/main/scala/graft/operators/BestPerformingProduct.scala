@@ -1,163 +1,43 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** "Best performing product" — Spark-native re-expression of the
-  * reference's 6-CTE analytical query
-  * (`airflow/dags/reviews_ETL.py:93-198`): pick the product with the
-  * highest mean review, then report its review-star percentage split
-  * (ratio-to-report window, W1), most-ordered day + holiday flag
-  * (top-1, O2), and early/late shipment percentages.
+import graft.transforms.ReferenceTransforms
+import graft.transforms.ReferenceTransforms.DefaultIngestionDate
+
+/** "Best performing product" (`airflow/dags/reviews_ETL.py:93-198`)
+  * over the testdata star schema: a column mapping onto the
+  * [[ReferenceTransforms.bestOf]] kernel, which the reference path
+  * shares.
   *
-  * Mapping onto the testdata star schema: `lineitem` plays both
-  * `reviews` (review := floor(l_quantity) % 5 + 1 — a deterministic
-  * 1..5 star rating) and `shipments_deliveries` (l_shipdate);
-  * `part` plays `dim_products`; the derived [[DateDim]] plays
-  * `if_common.dim_dates`. The 5-way join chain J3–J6, aggregates
-  * A3–A8, window W1 and top-1 O1/O2 of SURVEY.md §2 are all
-  * exercised with the reference's plan shape.
-  *
-  * Consciously diverged (SURVEY.md §2.10): the reference's
-  * `LEFT JOIN … WHERE =` is implemented as the inner join it
-  * actually is (§2.10.4); top-1 gets deterministic tie-breaks
-  * (product_id / order_date ASC, §2.10.5); ingestion timestamp is a
-  * pinned date (§2.10.6).
-  *
-  * Scale notes: the only full-fact-table consumers are cte1→cte2
-  * (one hash aggregate over the join). Everything downstream is
-  * filtered to the single best product via a broadcast of the 1-row
-  * cte2 before grouping — at 100 TB the per-product branches touch
-  * only that product's rows (predicate pushed to the scan via the
-  * broadcast join), never re-shuffling the full table. part and the
-  * date dim are broadcast; the lineitem⋈orders join is the one real
-  * shuffle.
+  * `lineitem` plays both `reviews` (review := floor(l_quantity) % 5 + 1,
+  * a deterministic 1..5 star rating) and `shipments_deliveries`
+  * (l_shipdate); `part` plays `dim_products`; the derived [[DateDim]]
+  * plays `if_common.dim_dates`. The testdata has no delivery column, so
+  * a line counts as delivered when it shipped within 6 days: under the
+  * kernel's predicates that makes early exactly `< 6` days and late
+  * `>= 6`. On top of the kernel's row this output adds the mean review
+  * `average` and rounds it and the percentages to 4 places.
   */
 object BestPerformingProduct {
-  val IngestionDate = "2022-09-05"
-
-  private def pct(n: Column, d: Column): Column =
-    round(lit(100.0) * n / d, 4)
 
   def apply(lineitem: DataFrame, orders: DataFrame, part: DataFrame): DataFrame = {
-    val dim = DateDim.fromOrders(orders)
-
-    // reviews analog (reference staging.reviews, FIXTURES.md §A).
-    // Spread before the join chain (r18): the fact scan comes out in
-    // file-count splits (3 tasks at sf0.1), and everything until the
-    // cte1 cache write — date parsing, three hash-join probes, cache
-    // encode — is per-row CPU work that then runs ~10× under-parallel
-    // on a 32-core box. The pinned, data-derived count
-    // (Parallelism.pinCount) keeps the same code right at 100 TB;
-    // keying on the orders join key lets a non-broadcast orders join
-    // reuse the exchange.
-    val reviews = Dedup.spread(lineitem.select(
-      ((floor(col("l_quantity")).cast("int") % 5) + 1).as("review"),
-      col("l_partkey").as("product_id"),
-      col("l_orderkey").as("order_id"),
-      to_date(col("l_shipdate")).as("shipment_date")),
-      col("order_id"))
-
-    // CTE_1: 5-way join chain (reviews_ETL.py:94-113)
-    // product_name is functionally dependent on product_id (part is
-    // the product dimension), so it stays OUT of the fact cache and
-    // out of the cte2 aggregate — the top-1 row re-attaches it from
-    // the broadcast dimension below (r18, §2.3: the grouped shuffle
-    // and the 600k-row cache both drop a ~30-byte string per row; the
-    // part join itself remains as the reference's FK filter).
-    val cte1 = reviews
-      .join(broadcast(part.select(col("p_partkey"))),
-        col("product_id") === col("p_partkey"))
-      .join(orders, col("order_id") === col("o_orderkey"))
-      .join(broadcast(dim), to_date(col("o_orderdate")) === col("calendar_dt"))
-      .select(
-        col("review"), col("product_id"),
-        to_date(col("o_orderdate")).as("order_date"),
-        col("working_day"), col("day_of_the_week_num"),
-        col("shipment_date"), col("order_id"))
-      // cte1 feeds four branches (cte2 + three best-product branches);
-      // persist so the lineitem⋈orders shuffle join runs once per
-      // action instead of four times. Cheap at bench scale; at 100 TB
-      // you would instead materialize cte1 to parquet between stages.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // CTE_2: top-1 product by mean review (reviews_ETL.py:116-124).
-    // Persisted (1 row): cte2 is referenced both as the output row and
-    // inside bestId's broadcast — uncached, the full-fact hash
-    // aggregate + top-1 ran TWICE per action (r18, §2.4: share one
-    // pass; the per-product aggregate is the only full-fact consumer
-    // left).
-    val cte2 = cte1
-      .groupBy(col("product_id"))
-      .agg(avg(col("review")).as("avg_raw"),
-           sum(col("review")).as("tt_review_points"))
-      .orderBy(desc("avg_raw"), asc("product_id"))
-      .limit(1)
-      .join(broadcast(part.select(col("p_partkey").as("product_id"),
-        col("p_name").as("product_name"))), Seq("product_id"))
-      .select(col("product_id"), col("product_name"),
-              round(col("avg_raw"), 4).as("average"), col("tt_review_points"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val bestId = broadcast(cte2.select(col("product_id")))
-
-    // All three report branches read ONLY the best product's rows.
-    // Filter the fact cache down ONCE and persist the (tiny) result:
-    // the three branches below each paid a full cached-fact scan for
-    // their broadcast-join probe — now one scan feeds all three (r18).
-    val bestRows = cte1
-      .join(bestId, Seq("product_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // CTE_3 analog: order counts per day for the best product
-    // (reviews_ETL.py:127-135 + holiday flag 131)
-    val cte3 = bestRows
-      .groupBy(col("order_date"),
-               DateDim.isPublicHoliday(col("working_day"), col("day_of_the_week_num"))
-                 .as("is_public_holiday"))
-      .agg(count(col("order_id")).as("total"))
-    val mostOrdered = cte3
-      .orderBy(desc("total"), asc("order_date"))
-      .limit(1)
-      .select(col("order_date").as("most_ordered_day"), col("is_public_holiday"))
-
-    // CTE_4 analog: star-rating percentage split with ratio-to-report
-    // window (reviews_ETL.py:137-149; W1 sum(count(*)) OVER ())
-    val starCounts = bestRows
-      .groupBy(col("review"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("total_all", sum(col("cnt")).over(Window.partitionBy()))
-    val starPctCols = (1 to 5).map { s =>
-      val name = Seq("one", "two", "three", "four", "five")(s - 1)
-      pct(sum(when(col("review") === s, col("cnt")).otherwise(0L)),
-          max(col("total_all"))).as(s"pct_${name}_star_review")
-    }
-    val starPcts = starCounts.agg(starPctCols.head, starPctCols.tail: _*)
-
-    // CTE_5/6 analog: early/late shipment percentages
-    // (reviews_ETL.py:152-170; late := shipped >= 6 days after order)
-    val shipDays = datediff(col("shipment_date"), col("order_date"))
-    val shipPcts = bestRows
-      .agg(
-        pct(sum(when(shipDays < 6, 1).otherwise(0)), count(lit(1)))
-          .as("pct_early_shipment"),
-        pct(sum(when(shipDays >= 6, 1).otherwise(0)), count(lit(1)))
-          .as("pct_late_shipment"))
-
-    // CTE_FINAL (reviews_ETL.py:172-198): 1-row × 1-row joins
-    cte2
-      .crossJoin(mostOrdered)
-      .crossJoin(starPcts)
-      .crossJoin(shipPcts)
-      .select(
-        lit(IngestionDate).cast("date").as("ingestion_date"),
-        col("product_name"), col("most_ordered_day"), col("is_public_holiday"),
-        col("average"), col("tt_review_points"),
-        col("pct_one_star_review"), col("pct_two_star_review"),
-        col("pct_three_star_review"), col("pct_four_star_review"),
-        col("pct_five_star_review"),
-        col("pct_early_shipment"), col("pct_late_shipment"))
+    val orderDate = to_date(col("o_orderdate"))
+    val shipDate = to_date(col("l_shipdate"))
+    val cte1 = lineitem
+      .join(broadcast(part), col("l_partkey") === col("p_partkey"))
+      .join(orders, col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(DateDim.fromOrders(orders)), orderDate === col("calendar_dt"))
+      .select(((floor(col("l_quantity")).cast("int") % 5) + 1).as("review"),
+        col("l_partkey").as("product_id"), col("p_name").as("product_name"),
+        orderDate.as("order_date"), col("day_of_the_week_num"), col("working_day"),
+        shipDate.as("shipment_date"),
+        when(datediff(shipDate, orderDate) < 6, shipDate).as("delivery_date"))
+    val best = ReferenceTransforms.bestOf(cte1)
+    best.select(lit(DefaultIngestionDate).cast("date").as("ingestion_date") +:
+      best.columns.map(c =>
+        if (c == "average" || c.startsWith("pct_")) round(col(c), 4).as(c) else col(c)): _*)
   }
 
   val oracle: String =
@@ -208,7 +88,7 @@ object BestPerformingProduct {
        |    round(100.0::DOUBLE * sum(CASE WHEN datediff('day', c.order_date, c.shipment_date) < 6 THEN 1 ELSE 0 END) / count(*), 4) AS pct_early_shipment,
        |    round(100.0::DOUBLE * sum(CASE WHEN datediff('day', c.order_date, c.shipment_date) >= 6 THEN 1 ELSE 0 END) / count(*), 4) AS pct_late_shipment
        |  FROM cte1 c JOIN cte2 b ON c.product_id = b.product_id)
-       |SELECT cast('$IngestionDate' AS date) AS ingestion_date,
+       |SELECT cast('$DefaultIngestionDate' AS date) AS ingestion_date,
        |       b.product_name, m.most_ordered_day, m.is_public_holiday,
        |       b.average, b.tt_review_points,
        |       s.pct_one_star_review, s.pct_two_star_review,

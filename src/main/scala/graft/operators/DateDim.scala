@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * Synthetic holiday rule (replaces the external holiday calendar the
   * reference's dim carries): the 1st and 25th of every month are
-  * non-working. The reference's "public holiday" predicate
-  * (`orders_ETL.py:103`): NOT working_day AND dow IN (1..5).
+  * non-working. The reference's "public holiday" predicate is
+  * `graft.transforms.ReferenceTransforms.isPublicHoliday`.
   *
   * Tiny by construction (one row per distinct date, ~2.4k rows at any
   * SF) — always broadcast to the fact side of joins.
@@ -56,11 +56,4 @@ object DateDim {
         (isoDow <= 5 && !dayofmonth(d).isin(1, 25)).as("working_day")
       )
   }
-
-  /** The reference's "public holiday" predicate (`orders_ETL.py:103`):
-    * a weekday that is not a working day.
-    */
-  def isPublicHoliday(workingDay: org.apache.spark.sql.Column,
-                      dow: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    (workingDay === false) && dow.isin(1, 2, 3, 4, 5)
 }

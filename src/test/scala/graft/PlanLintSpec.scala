@@ -20,7 +20,6 @@ class PlanLintSpec extends SparkSpec {
     "equi_depth_buckets" -> "1-row boundary-array broadcast",
     "events_funnel_ordered" -> "three 1-row stage counts crossed",
     "association_rules" -> "1-row basket-total broadcast",
-    "best_performing_product" -> "1-row top-1 assemblies crossed",
     "semi_anti_parts" -> "1-row semi/anti count assembly",
     "tfidf_top_terms" -> "1-row corpus-size broadcast",
     "unigram_logprob" -> "1-row vocab-total broadcast",
@@ -77,7 +76,6 @@ class PlanLintSpec extends SparkSpec {
     */
   private val globalWindowAllowed: Map[String, String] = Map(
     "window_ratio_report" -> "ratio-to-report over a 3-row aggregate",
-    "best_performing_product" -> "pct-of-total over a per-day aggregate",
     "lang_temperature_weights" -> "normalizer over a per-language aggregate",
     "vocab_coverage_curve" -> "rank over the top-50 limit of the vocab aggregate",
     "open_orders_timeseries" ->

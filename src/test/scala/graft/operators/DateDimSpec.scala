@@ -25,7 +25,7 @@ class DateDimSpec extends SparkSpec {
       Seq("2022-08-25", "2022-09-03", "2022-09-05").toDF("d")
         .select(to_date($"d").as("calendar_dt")))
       .withColumn("hol",
-        DateDim.isPublicHoliday(col("working_day"), col("day_of_the_week_num")))
+        graft.transforms.ReferenceTransforms.isPublicHoliday(col("working_day"), col("day_of_the_week_num")))
       .collect().map(r => r.getDate(0).toString -> r.getBoolean(4)).toMap
     assert(dim("2022-08-25"))          // weekday holiday
     assert(!dim("2022-09-03"))         // weekend: not a "public holiday"

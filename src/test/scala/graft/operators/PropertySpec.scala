@@ -25,7 +25,7 @@ class PropertySpec extends SparkSpec {
     val dates = sample(dateGen, 300).distinct
     val dim = DateDim.fromDates(dates.toDF("calendar_dt"))
       .withColumn("hol",
-        DateDim.isPublicHoliday(col("working_day"), col("day_of_the_week_num")))
+        graft.transforms.ReferenceTransforms.isPublicHoliday(col("working_day"), col("day_of_the_week_num")))
       .collect()
     dim.foreach { r =>
       val (dt, dow, mon, working, hol) =

@@ -1,7 +1,7 @@
 package graft.transforms
 
-import java.sql.Date
-import java.time.LocalDate
+import java.sql.{Date, Timestamp}
+import java.time.{LocalDate, ZoneOffset}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
@@ -10,6 +10,7 @@ import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 import graft.catalog.ReferenceSchemas
+import graft.operators.{BestPerformingProduct, CteTestdataBestPerformingProduct}
 
 /** The one-pass [[ReferenceTransforms.bestPerformingProduct]] against
   * its CTE-faithful formulation ([[CteBestPerformingProduct]]) on
@@ -20,9 +21,13 @@ import graft.catalog.ReferenceSchemas
   * reviews are all NULL has no average), NULL shipment and delivery
   * dates, and orders on days outside `dim_dates`. Rows must be equal
   * exactly, doubles bit for bit.
+  *
+  * The registered `best_performing_product`, a testdata mapping onto
+  * the same kernel, is checked the same way against its four-branch
+  * form ([[CteTestdataBestPerformingProduct]]).
   */
 class BestPerformingProductPropertySpec extends SparkSpec {
-  import BestPerformingProductPropertySpec.Tables
+  import BestPerformingProductPropertySpec.{Tables, Testdata}
 
   private val base = LocalDate.of(2022, 8, 1)
 
@@ -110,9 +115,83 @@ class BestPerformingProductPropertySpec extends SparkSpec {
     assert(cases.count(_.shipments.exists(_._3.isEmpty)) >= 6)
     assert(cases.count(_.shipments.exists(s => s._3.nonEmpty && s._4.isEmpty)) >= 6)
   }
+
+  // 2022-08-22 is a Monday; 08-25 and 09-01 are weekday holidays
+  private val testdataBase = LocalDate.of(2022, 8, 22)
+  private val missingPart = 99
+
+  /** Lines in the testdata schema: `nParts` parts with 1..4 quantities
+    * each (review = floor(q) % 5 + 1), one order per listed day, and one
+    * line per quantity in each order. Lines ship 5, 6 or 7 days after
+    * their order, or after a random gap of 0..9 days, in turn. Lines of
+    * `missingPart`, absent from `part`, rate 5 and would win the top
+    * average if they survived the join.
+    */
+  private val testdataGen: Gen[Testdata] = for {
+    nParts <- Gen.choose(2, 4)
+    parts <- Gen.pick(nParts, 1 to 9).map(_.toSeq)
+    averageTie <- Gen.oneOf(true, false)
+    dayTie <- Gen.oneOf(true, false)
+    quantities <- Gen.listOfN(nParts, Gen.choose(1, 4).flatMap(
+      Gen.listOfN(_, Gen.choose(0, 99).map(_ / 10.0))))
+    days <- Gen.listOfN(nParts, Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.choose(0, 10))))
+    tieDays <- Gen.choose(2, 4)
+    gaps <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.choose(0, 9)))
+  } yield {
+    // averageTie: the first two parts share one list of ratings 5, 4, 5
+    // and every other part rates at most 3, so p_partkey decides the top
+    val quantitiesBy = parts.zip(quantities).zipWithIndex.map { case ((p, qs), i) =>
+      p -> (if (averageTie && i < 2) List(4.0, 3.5, 9.2)
+        else if (averageTie) qs.map(q => q % 3) else qs)
+    }.toMap + (missingPart -> List(4.0, 4.5))
+    // dayTie: every part orders once on each of the first tieDays days
+    val daysBy = parts.zip(days).map { case (p, ds) =>
+      p -> (if (dayTie) (0 until tieDays).toList else ds)
+    } :+ (missingPart -> List(0))
+    val orders = daysBy.flatMap { case (p, ds) => ds.map(p -> testdataBase.plusDays(_)) }
+      .zipWithIndex.map { case ((p, day), i) => (i + 1, day, p) }
+    val shipGaps = Seq(5, 6, 7) ++ gaps
+    val lines = orders.flatMap { case (o, day, p) =>
+      quantitiesBy(p).zipWithIndex.map { case (q, k) =>
+        (o, p, q, day.plusDays(shipGaps((o + k) % shipGaps.size)))
+      }
+    }
+    Testdata(lines, parts, orders.map { case (o, day, _) => (o, day) }, averageTie, dayTie)
+  }
+
+  /** Midnight UTC of `d` plus `hours`, as the testdata's timestamps. */
+  private def timestamp(d: LocalDate, hours: Int = 0): Timestamp =
+    Timestamp.from(d.atStartOfDay(ZoneOffset.UTC).plusHours(hours).toInstant)
+
+  test("registered testdata mapping equals its four-branch form on ties, 5/6/7-day gaps and missing parts") {
+    val cases = Gen.listOfN(24, testdataGen)(Gen.Parameters.default, Seed(11L)).get
+    import spark.implicits._
+    for ((t, i) <- cases.zipWithIndex) {
+      val lineitem = t.lines.map { case (o, p, q, ship) => (o.toLong, p.toLong, q, timestamp(ship, 13)) }
+        .toDF("l_orderkey", "l_partkey", "l_quantity", "l_shipdate")
+      val orders = t.orders.map { case (o, day) => (o.toLong, timestamp(day)) }
+        .toDF("o_orderkey", "o_orderdate")
+      val part = t.parts.map(p => (p.toLong, s"part $p")).toDF("p_partkey", "p_name")
+      val expected = CteTestdataBestPerformingProduct(lineitem, orders, part)
+      val actual = BestPerformingProduct(lineitem, orders, part)
+      assert(actual.schema.map(f => f.name -> f.dataType) ==
+        expected.schema.map(f => f.name -> f.dataType), s"case $i schema")
+      assert(actual.collect().map(exact).toSeq == expected.collect().map(exact).toSeq,
+        s"case $i: $t")
+    }
+    // the four-branch form never releases its persists
+    spark.catalog.clearCache()
+    assert(cases.count(_.averageTie) >= 6 && cases.count(_.dayTie) >= 6)
+  }
 }
 
 object BestPerformingProductPropertySpec {
+  private final case class Testdata(
+      lines: Seq[(Int, Int, Double, LocalDate)], // l_orderkey, l_partkey, l_quantity, ship day
+      parts: Seq[Int],
+      orders: Seq[(Int, LocalDate)],              // o_orderkey, order day
+      averageTie: Boolean, dayTie: Boolean)
+
   private final case class Tables(
       reviews: Seq[(Option[Int], Int)],
       products: Seq[Int],
