@@ -1,370 +1,277 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.{ListMap, TreeMap}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The per-query board. `main` builds the library's own session, runs
+  * the untimed setup (derived layouts, model preloads, AOT warms, JIT
+  * quiesce), then [[board]] times every selected registered query once
+  * cold and `SPARK_GRAFT_WARM_REPS` (default 3) times warm. The record
+  * goes to `bench_subset.json` under `SPARK_GRAFT_SUBSET`, otherwise to
+  * `bench_full.c<cores>.json`; the last stdout line is a short summary.
+  */
 object Bench {
-  /** One /proc sample. `busy` is total non-idle non-iowait jiffies
-    * across all CPUs (steal INCLUDED — it is host time someone else
-    * ran); `self` is this process's utime+stime; `steal` and `iowait`
-    * are broken out separately because the r13 degraded-host regime
-    * (loadavg 16+ at 96 % CPU-idle, vmstat steal ~2 %) was INVISIBLE
-    * to per-process CPU deltas — two full-board attempts at 273–304 s
-    * cold passed the old guard. USER_HZ=100 on Linux; all -1 when
-    * /proc is unavailable.
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One timed run of one query: wall seconds (the `count()` action plus
+    * the blocking cache teardown), GC milliseconds inside it, used heap
+    * and process RSS after it, and the executed plan's hash ("err" when
+    * the query failed).
     */
-  private final case class ProcSample(busy: Long, self: Long,
-                                      steal: Long, iowait: Long)
-  private def procSample(): ProcSample =
+  final case class Run(sec: Double, gcMs: Long, heapMb: Long, rssMb: Long,
+                       plan: String)
+
+  /** A recording-time flag: `cold_vs_warm` and `warm_unstable` carry the
+    * query's warm `reps`; the suite-wide `rss_growth` compares MB.
+    */
+  final case class Flag(q: String, kind: String, cold: Double, ref: Double,
+                        ratio: Double, reps: Seq[Double] = Nil)
+
+  /** The whole recording. `value` is the cold total, `warm_total` the
+    * sum of per-query warm medians; `telemetry` holds each query's cold
+    * [[Run]]; `plan_changes` names only queries whose plan hash moved
+    * across runs (an AQE replan under identical code); `host_steal_share`
+    * is the hypervisor's steal share of host CPU over the timed passes.
+    */
+  final case class Record(
+      metric: String = "total", value: Double, unit: String = "sec",
+      sf: String, warmReps: Int, warmTotal: Double, wallSec: Double,
+      hostStealShare: Double, jitQuiesceSec: Double = 0.0,
+      modelBuildSec: Double, modelBuilds: Map[String, Map[String, Any]],
+      preloadsEnabled: Boolean, rssBaselineMb: Long, rssEndMb: Long,
+      errors: Map[String, String], flags: Seq[Flag],
+      telemetry: Map[String, Run], planChanges: Map[String, Seq[String]],
+      warmRepTimes: Map[String, Seq[Double]], cold: Map[String, Double],
+      warm: Map[String, Double])
+
+  private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+
+  private def gcMillis(): Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(b => math.max(0L, b.getCollectionTime)).sum
+
+  private def heapUsedMb(): Long =
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
+
+  /** Process resident set in MB — the only counter that sees native
+    * allocations such as RocksDB state stores; -1 when unreadable.
+    */
+  private def rssMb(): Long =
     try {
-      val stat = java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
-        .linesIterator.next().trim.split("\\s+").drop(1).map(_.toLong)
-      val busyTotal = stat.sum - stat(3) - stat(4) // minus idle + iowait
-      val self = java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/self/stat"))
-        .split("\\s+")
-      // utime+stime PLUS cutime+cstime: the JVM forks short-lived
-      // children (Hadoop Shell chmod/stat per checkpoint file —
-      // thousands per RocksDB streaming micro-batch), whose CPU lands
-      // in host busy but only reaches the parent as reaped-child time.
-      // Without it, the streaming family self-reports 1.2–4.1 "foreign"
-      // cores in its own windows (r17 diag, host otherwise 0.05 busy)
-      // and the ledger's foreign guard starves it forever.
-      ProcSample(busyTotal,
-        self(13).toLong + self(14).toLong +
-          self(15).toLong + self(16).toLong,
-        if (stat.length > 7) stat(7) else 0L, stat(4))
-    } catch { case _: Throwable => ProcSample(-1L, -1L, -1L, -1L) }
-
-  /** DISTURBANCE cores averaged over a `secs`-second /proc sample:
-    * other processes' CPU rate (which already includes hypervisor
-    * steal — it lands in the busy total) PLUS the host's iowait rate.
-    * iowait is host-wide time cores sat blocked on storage — exactly
-    * the steal/IO-contention regime per-process sampling cannot see
-    * (r13 verdict #1). Between passes this process is quiescent, so
-    * any sustained iowait is foreign storage pressure, not our own
-    * scans. -1 when /proc is unavailable.
-    */
-  private def foreignCoresSample(secs: Double): Double = {
-    val a = procSample()
-    if (a.busy < 0) return -1.0
-    Thread.sleep((secs * 1000).toLong)
-    val b = procSample()
-    if (b.busy < 0) -1.0
-    else (math.max(0L, (b.busy - a.busy) - (b.self - a.self)) +
-      math.max(0L, b.iowait - a.iowait)) / (100.0 * secs)
-  }
-
-  // ---- per-query telemetry (r9 verdict #1) --------------------------
-  // The r9 recording showed a cold-inflation window and broad warm
-  // drift that no code change explained, and without per-query
-  // GC/heap/RSS evidence every cross-round comparison was an argument
-  // instead of a measurement. Each sample below is two /proc reads +
-  // two MXBean calls — microseconds, taken OUTSIDE the timed window.
-
-  /** Total stop-the-world GC milliseconds since JVM start. */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  /** JVM heap in MB (used, committed). */
-  private def heapMb(): (Long, Long) = {
-    val m = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
-    (m.getUsed >> 20, m.getCommitted >> 20)
-  }
-
-  /** Process resident set in MB from /proc/self/status — the ONLY
-    * counter that sees native (off-JVM-heap) allocations such as
-    * RocksDB state stores; -1 when unavailable.
-    */
-  private def rssMb(field: String = "VmRSS"): Long =
-    try {
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/self/status"))
-        .linesIterator.find(_.startsWith(field + ":"))
+      Files.readString(Paths.get("/proc/self/status")).linesIterator
+        .find(_.startsWith("VmRSS:"))
         .map(_.split("\\s+")(1).toLong >> 10).getOrElse(-1L)
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
-  /** 1-minute system load average; -1 when unavailable. */
-  private def load1(): Double =
+  /** (steal, total) host CPU ticks since boot from `/proc/stat`, read as
+    * `etlbench/run.py` reads them; None when unreadable.
+    */
+  private def hostTicks(): Option[(Long, Long)] =
     try {
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
+      val t = Files.readString(Paths.get("/proc/stat")).linesIterator.next()
+        .trim.split("\\s+").drop(1).map(_.toLong)
+      Some((if (t.length > 7) t(7) else 0L, t.sum))
+    } catch { case NonFatal(_) => None }
 
   /** 8-hex-char digest of the executed plan with run-varying ids
-    * (expression ids, plan ids, cache/RDD numbers, codegen ids)
-    * stripped — equal hashes across runs ⟺ same physical plan shape,
-    * so a flagged query can be checked for an AQE replan vs a pure
-    * environment effect.
+    * (expression, plan, cache/RDD and codegen ids) stripped: equal
+    * hashes across runs mean the same physical plan shape.
     */
-  private def planHash(df: org.apache.spark.sql.DataFrame): String =
+  private def planHash(df: DataFrame): String =
     try {
       val s = df.queryExecution.executedPlan.toString
         .replaceAll("#\\d+[L]?", "#")
-        // lambda variables (x_41, y_42 in transform/aggregate exprs)
-        // carry a GLOBAL monotone counter — differs every execution
+        // lambda variables (x_41) carry a global counter
         .replaceAll("_\\d+#", "_#")
         .replaceAll("plan_id=\\d+", "plan_id=")
         .replaceAll("\\bid=#?\\d+", "id=")
         .replaceAll("\\[\\d+\\]", "[]")
         .replaceAll("@[0-9a-f]{6,}", "@")
-        // FileScan metadata truncates at a CHARACTER budget, so the
-        // digit width of the (run-varying) exprIds shifts where the
-        // "..." lands — cut each line at its first ellipsis so the
-        // hash sees only the stable prefix
+        // FileScan metadata truncates at a character budget, so the
+        // digit width of the exprIds shifts where "..." lands: keep
+        // each line's stable prefix only
         .linesIterator.map { l =>
           val i = l.indexOf("...")
           if (i >= 0) l.substring(0, i) else l
         }.mkString("\n")
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8"))
-      d.take(4).map("%02x".format(_)).mkString
-    } catch { case _: Throwable => "n/a" }
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .take(4).map("%02x".format(_)).mkString
+    } catch { case NonFatal(_) => "n/a" }
 
-  /** `stealCores`/`iowaitCores` are HOST rates sampled over this
-    * query run's own wall window (r14 verdict #6): the two r14
-    * warm_unstable flags were caused by ONE 0.31-steal warm pass, but
-    * pass-level attribution couldn't say which REP ate it — a flag
-    * now carries its own exoneration or indictment.
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** Times `queries` on `spark` over `sfDir`: one cold pass, then
+    * `warmReps` warm passes, batch queries first and the isolated
+    * streaming queries in their own phase after them. A query that
+    * throws a non-fatal exception is recorded in `errors` and the board
+    * goes on; fatal errors propagate.
     */
-  private case class QueryRun(sec: Double, gcMs: Long, heapUsedMb: Long,
-                              rssMbAfter: Long, load1Before: Double,
-                              plan: String, stealCores: Double = -1.0,
-                              iowaitCores: Double = -1.0,
-                              foreignCores: Double = -1.0)
+  def board(spark: SparkSession, sfDir: String,
+            queries: Seq[(String, Query)], warmReps: Int): Record = {
+    // a median over no reps would read 0 s and flag every cold query
+    require(warmReps >= 1, s"warmReps must be >= 1, got $warmReps")
+    val errors = scala.collection.mutable.Map[String, String]()
 
-  /** Machine-decided host exoneration for per-query flags (r16,
-    * closing the r15 verdict's item-1 done criterion: "flags whose
-    * inline telemetry machine-decides the exoneration"). A cold flag
-    * whose OWN query window carried at least this much foreign steal
-    * (or sustained host iowait) is stamped `"host_exonerated":true`
-    * inline: the inflated number is a host artifact, not a code
-    * signal, and the artifact says so itself instead of pointing at
-    * prose. 0.5 steal cores is ~10× this box's measured healthy-burn
-    * steal rate and matches the r15 evidence: the two cold_vs_r1
-    * flags carried 1.92 / 3.17 steal cores through their cold windows
-    * while the unflagged queries' windows sat at ≤ ~0.1. The iowait
-    * bound mirrors the pass-level `degraded` rule. Exoneration never
-    * suppresses a flag — the flag still records, reviewers still see
-    * it; only the attribution is pre-computed.
-    */
-  private val ExonerationStealCores = 0.5
-  private val ExonerationIowaitCores = 2.0
-  private def hostExonerated(q: QueryRun): Boolean =
-    q.stealCores >= ExonerationStealCores ||
-      q.iowaitCores >= ExonerationIowaitCores
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default: every core of this machine; a run at other than 32
-    // cores records beside the committed board (see recordPath)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // warm per-query times are MEDIANS over this many warm passes —
-    // r9 showed a single warm pass at 155 queries is not a stable
-    // trend line (three builder runs: 126.8 / 129.3 / 93.3 s)
-    val warmReps = sys.env.getOrElse("SPARK_GRAFT_WARM_REPS", "3").toInt
-    // 0 reps degenerates: median of an empty list is 0.0, so every
-    // cold ≥ 2 s query gets a spurious cold_vs_warm flag against the
-    // 0.05 s floor — fail loudly instead of recording garbage
-    require(warmReps >= 1, s"SPARK_GRAFT_WARM_REPS must be >= 1, got $warmReps")
-    // ---- ledger mode (r16 verdict #1) -------------------------------
-    // With SPARK_GRAFT_LEDGER set, this run is one ATTEMPT of a
-    // chunked/resumable recording: only queries without an adopted
-    // (window-clean) ledger record run, adoption happens per-query on
-    // the query's OWN steal/iowait windows, and when the board empties
-    // the ledger is assembled into bench_full.json. See BenchLedger's
-    // scaladoc for the protocol and tools/record_bench.sh for the
-    // retry loop.
-    val ledgerPath = sys.env.get("SPARK_GRAFT_LEDGER").filter(_.nonEmpty)
-    val headSha = BenchLedger.headSha()
-    val (ledgerAttempts, ledgerPriorRaw) =
-      ledgerPath.map(BenchLedger.read)
-        .getOrElse((0, Map.empty[String, BenchLedger.Rec]))
-    // sha staleness guard (r17 verdict item 8): a resumed campaign
-    // must never assemble colds measured on different code. Records
-    // adopted at another commit (or before shas were recorded) are
-    // dropped here — their queries go back on the board and re-run at
-    // HEAD. With no readable .git there is no guard (matching the
-    // /proc telemetry's best-effort stance).
-    val ledgerPrior =
-      if (headSha == "unknown") ledgerPriorRaw
-      else {
-        val stale = ledgerPriorRaw.filter(_._2.sha != headSha)
-        if (stale.nonEmpty)
-          System.err.println(s"ledger: dropping ${stale.size} record(s) " +
-            s"from other commit(s) [${stale.valuesIterator.map(_.sha)
-              .toSet.mkString(",")}] != $headSha")
-        ledgerPriorRaw -- stale.keys
-      }
-    val cleanStealCores = sys.env.get("SPARK_GRAFT_CLEAN_STEAL")
-      .map(_.toDouble).getOrElse(BenchLedger.DefaultCleanStealCores)
-    val cleanIowaitCores = sys.env.get("SPARK_GRAFT_CLEAN_IOWAIT")
-      .map(_.toDouble).getOrElse(BenchLedger.DefaultCleanIowaitCores)
-    val cleanForeignCores = sys.env.get("SPARK_GRAFT_CLEAN_FOREIGN")
-      .map(_.toDouble).getOrElse(BenchLedger.DefaultCleanForeignCores)
-    // ---- idle gate (r7 verdict #4) ----------------------------------
-    // The r6 and r7 driver recordings were inflated 1.3–2.4× by
-    // foreign CPU bursts on the shared box (BASELINE.md round-7
-    // reconciliation). Rather than reconciling after the fact every
-    // round, the bench WAITS (bounded) for the box to go quiet before
-    // the timed pass, and records what it saw either way.
-    val idleGateCores =
-      sys.env.getOrElse("SPARK_GRAFT_IDLE_GATE_CORES", "2.0").toDouble
-    val idleWaitMaxSec =
-      sys.env.getOrElse("SPARK_GRAFT_IDLE_WAIT_MAX_SEC", "600").toDouble
-    /** Sample foreign load and pause (bounded) until it drops under
-      * the gate; returns (first sample, wait beyond the first sample,
-      * last sample). Run at START and at EVERY pass boundary (r10
-      * verdict #2): the r10 recording's warm-2 pass ran under load1
-      * 12.4 because the box was only checked once, 10 minutes
-      * earlier — median-of-3 absorbed it, but a gated pass beats a
-      * flagged one.
-      */
-    def waitForIdle(sampleSec: Double, maxWaitSec: Double): (Double, Double, Double) = {
+    def runOne(name: String, fn: Query): Run = {
+      val gc0 = gcMillis()
       val t0 = System.nanoTime()
-      val pre = foreignCoresSample(sampleSec)
-      var last = pre
-      while (last >= 0 && last > idleGateCores &&
-          (System.nanoTime() - t0) / 1e9 < maxWaitSec) {
-        System.err.println(
-          f"idle-gate: foreign load $last%.1f cores > $idleGateCores%.1f, waiting...")
-        last = foreignCoresSample(sampleSec)
+      val df = try { val d = fn(spark, sfDir); d.count(); Some(d) } catch {
+        case NonFatal(e) =>
+          errors(name) =
+            e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(160)
+          None
       }
-      (pre, (System.nanoTime() - t0) / 1e9 - sampleSec, last)
+      // operators persist intermediates; the teardown is BLOCKING and
+      // inside the window, so eviction is billed to the query that
+      // allocated the cache, not to the next query's window
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      val sec = (System.nanoTime() - t0) / 1e9
+      Run(r3(sec), gcMillis() - gc0, heapUsedMb(), rssMb(),
+        df.fold("err")(planHash))
     }
-    val (preGateCores, idleWaitSec, lastSample) =
-      waitForIdle(5.0, idleWaitMaxSec)
-    // the library's own session: without it the bench times a plan
-    // the engine would never produce
-    val spark = GraftSession.local(cpus.toInt, "graft-bench")
-    // plan-hash stability: FileScan metadata truncates at a CHAR
-    // budget (default 100) and run-varying exprId digit widths shift
-    // the cut point, making identical plans hash differently. Render
-    // the full strings instead — both confs only affect toString,
-    // never planning.
-    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
-    spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
-    // one throwaway action so JVM/scheduler warmup isn't billed to
-    // whichever query happens to run first
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // one-time derived layouts belong to bench SETUP, not to whichever
-    // query happens to trigger the rewrite: r6 billed the ~9 s
-    // partitioned-copy write to dpp_quarter_revenue. The fingerprint
-    // staleness check inside still guards against serving a stale copy.
-    // ---- suite subset (r10 verdict #7) ------------------------------
-    // The full suite is ~10 min/recording and growing; targeted
-    // re-records (one family under iteration) shouldn't pay for all
-    // of it. Comma-separated globs over query names; unset = full
-    // suite — the driver recording never sets it, so the committed
-    // protocol is unchanged. (Shared impl — see graft.Subset.)
-    // In ledger mode the board additionally excludes FINAL records:
-    // complete (clean cold + warmReps clean warm reps) AND tier-1
-    // (cold from an uncontended attempt). This also gates the family
-    // setup/AOT-warm blocks below, so late (small-board) attempts
-    // don't pay setup for families that already have final records.
-    // Partial records keep their query on the board to harvest the
-    // missing reps; complete-but-tier-2 records stay on the board so
-    // a clean attempt can upgrade their cold.
-    def selected(name: String): Boolean =
-      Subset.selected(name) &&
-        !ledgerPrior.get(name)
-          .exists(r => r.warm.size >= warmReps && r.cleanAttempt)
+
+    // the GC at each pass boundary pays the pass's heap pressure
+    // outside every timed window
+    def pass(qs: Seq[(String, Query)]): Map[String, Run] =
+      if (qs.isEmpty) Map.empty
+      else {
+        val r = qs.map { case (n, fn) => n -> runOne(n, fn) }.toMap
+        System.gc()
+        r
+      }
+
+    // streaming queries boot a state store whose native allocations
+    // would squeeze every batch query after them: they run last
+    val streaming = SparkEntry.isolatedStreamingQueries
+    val (streamQs, batchQs) = queries.sortBy(_._1).partition(q => streaming(q._1))
+    System.gc() // setup's garbage is collected outside the first window
+    val ticks0 = hostTicks()
+    val wall0 = System.nanoTime()
+    val coldBatch = pass(batchQs)
+    val rssCold = rssMb()
+    val warm1 = pass(batchQs)
+    val rssWarm1 = rssMb()
+    val warmBatch = warm1 +: Seq.fill(warmReps - 1)(pass(batchQs))
+    val coldStream = pass(streamQs)
+    // the RSS floor is the max of the steady-state samples: how far the
+    // boundary GC shrinks the heap varies run to run, and the streaming
+    // phase loads RocksDB's native libraries once, which must not read
+    // as growth
+    val rssBaseline = Seq(rssCold, rssWarm1, rssMb()).max
+    val warmStream = Seq.fill(warmReps)(pass(streamQs))
+    val wallSec = (System.nanoTime() - wall0) / 1e9
+    val ticks1 = hostTicks()
+    System.gc()
+    val rssEnd = rssMb()
+
+    val cold = TreeMap.from(coldBatch ++ coldStream)
+    val warmRuns = (warmBatch ++ warmStream).flatMap(_.toSeq)
+      .groupMap(_._1)(_._2)
+    val repTimes = cold.map { case (n, _) => n -> warmRuns(n).map(_.sec) }
+    val warm = repTimes.map { case (n, reps) => n -> r3(median(reps)) }
+    val queryFlags = cold.toSeq.flatMap { case (n, c) =>
+      val reps = repTimes(n)
+      val w = math.max(warm(n), 0.05)
+      val fastest = math.max(reps.min, 0.05)
+      // JIT and codegen warm-up legitimately dominate queries under 2 s
+      Option.when(c.sec >= 2.0 && c.sec > 2.0 * w)(
+        Flag(n, "cold_vs_warm", c.sec, warm(n), r3(c.sec / w), reps)) ++
+        // reps that disagree by > 2× mark environment drift: a code
+        // regression moves every rep together
+        Option.when(reps.max >= 1.0 && reps.max > 2.0 * fastest)(
+          Flag(n, "warm_unstable", c.sec, reps.min, r3(reps.max / fastest), reps))
+    }
+    // end-of-run RSS beyond 1.5× the floor is retention: cache blocks,
+    // codegen classes or native state
+    val rssFlag = Option.when(rssBaseline > 0 && rssEnd > 1.5 * rssBaseline)(
+      Flag("_suite", "rss_growth", rssEnd.toDouble, rssBaseline.toDouble,
+        r3(rssEnd.toDouble / rssBaseline)))
+    val planChanges = cold.flatMap { case (n, c) =>
+      val hashes = c.plan +: warmRuns(n).map(_.plan)
+      if (hashes.distinct.size > 1) Some(n -> hashes) else None
+    }
+    Record(
+      value = r3(cold.values.map(_.sec).sum), sf = sfDir, warmReps = warmReps,
+      warmTotal = r3(warm.values.sum), wallSec = r3(wallSec),
+      hostStealShare = (for ((s0, t0) <- ticks0; (s1, t1) <- ticks1)
+        yield (s1 - s0).toDouble / math.max(1L, t1 - t0)).getOrElse(-1.0),
+      modelBuildSec = r3(graft.operators.ModelCost.totalSec),
+      modelBuilds = graft.operators.ModelCost.entries,
+      preloadsEnabled = graft.operators.ModelCost.preloadsEnabled,
+      rssBaselineMb = rssBaseline, rssEndMb = rssEnd,
+      errors = TreeMap.from(errors), flags = queryFlags ++ rssFlag,
+      telemetry = cold, planChanges = planChanges, warmRepTimes = repTimes,
+      cold = cold.map { case (n, c) => n -> c.sec }, warm = warm)
+  }
+
+  /** Untimed setup for the selected queries: one-time derived layouts
+    * and trained models, then the graph and streaming AOT warms, then a
+    * JIT quiesce. Returns the quiesce's seconds.
+    */
+  private def setup(spark: SparkSession, sfDir: String,
+                    selected: String => Boolean): Double = {
+    import graft.operators.{Dedup, Features, ModelCost, PartitionedFacts,
+      ProductAnalytics, ProductQuantization, Similarity, TextAnalysis}
+    // each derived layout is built once per corpus and read by several
+    // queries; building it belongs to setup, not to whichever consumer
+    // the sort order runs first. Staleness checks inside still apply.
     if (selected("dpp_quarter_revenue"))
-      graft.operators.PartitionedFacts.partitionedLineitem(spark, sfDir)
-    // same argument for the near-dup cluster assignment: ONE
-    // clustering job per corpus, four consumer queries — the derived
-    // layout belongs to setup, not to whichever cluster-family query
-    // the sort order runs first (r10 verdict #1)
+      PartitionedFacts.partitionedLineitem(spark, sfDir)
     if (Seq("dedup_clusters", "dedup_cluster_canonical",
         "dedup_cluster_sizes", "cluster_safe_split").exists(selected))
-      graft.operators.Dedup.materializedClusters(spark, sfDir)
-    // ...and the graph family's shared pair/node layouts (r11 verdict
-    // #2): ONE orderkey self-join per corpus, seven consumer queries
-    if (Seq("part_cooccurrence", "part_graph_stats", "part_pagerank",
-        "pagerank_converged", "part_bfs_hops", "part_triangles",
-        "item_similarity", "association_rules").exists(selected)) {
-      graft.operators.ProductAnalytics.materializedPairCounts(spark, sfDir)
-      graft.operators.ProductAnalytics.materializedPartOrderCounts(spark, sfDir)
+      Dedup.materializedClusters(spark, sfDir)
+    val graphQueries = Seq("part_cooccurrence", "part_graph_stats",
+      "part_pagerank", "pagerank_converged", "part_bfs_hops",
+      "part_triangles", "item_similarity", "association_rules")
+    if (graphQueries.exists(selected)) {
+      ProductAnalytics.materializedPairCounts(spark, sfDir)
+      ProductAnalytics.materializedPartOrderCounts(spark, sfDir)
     }
-    // ...and the PCA family's memoized eigen-fit (r11 verdict #3):
-    // one moments scan + integer eigensolve, three consumer queries
     if (Seq("pca_power_projection", "mahalanobis_pc2", "zca_whiten_pc2")
         .exists(selected))
-      graft.operators.Features.powerFitE6For(spark, sfDir,
-        graft.operators.Features.PowerIters)
-    // ...and the embedded-Derby warehouse load (one JDBC stage per
-    // corpus fingerprint — the reference's load-then-query shape)
+      Features.powerFitE6For(spark, sfDir, Features.PowerIters)
     if (selected("jdbc_pushdown_segment"))
       graft.sources.JdbcGate.ensureCustomerLoaded(spark, sfDir)
-    // ...and the ANN quantizer models (r16 verdict #3): train-or-load
-    // once per store key (DerivedStore.value). A warehouse
-    // ships its trained quantizer with the index — Lloyd passes are
-    // index-build cost, not query latency; the r15 cold_vs_warm flags
-    // on ann_ivf_topk (3.42×) / ann_ivfpq_topk (2.42×) were exactly
-    // this training re-running inside every cold window.
-    // ...the ANN/BPE model preloads below are gated (with the AOT
-    // warms) behind the ONE opt-out `SPARK_GRAFT_AOT_WARM=0` (r17
-    // verdict item 2): opted out, the store's disk tier disables itself too
-    // (see ModelCost), so the first timed window that needs a model
-    // pays the trainer loop — train-included timings on demand. The
-    // excluded build seconds are surfaced as `model_build_sec` below.
-    if (graft.operators.ModelCost.preloadsEnabled &&
+    // Trained models (ANN quantizers, BPE merges) ship with the index:
+    // training is index-build cost, not query latency. Their seconds
+    // surface as `model_build_sec`. `SPARK_GRAFT_AOT_WARM=0` opts out of
+    // every preload and warm below, so the first timed window that
+    // needs a model pays its trainer.
+    if (ModelCost.preloadsEnabled &&
         Seq("ann_ivf_topk", "ann_ivfpq_topk", "ann_ivf_pruned_recall")
-        .exists(selected)) {
+          .exists(selected)) {
       val emb = graft.catalog.Tables(spark, sfDir).embeddings
-      if (selected("ann_ivf_topk")) graft.operators.Similarity.trainCentroids(emb)
-      if (selected("ann_ivfpq_topk"))
-        graft.operators.ProductQuantization.trainCodebooks(emb)
-      // the pruned-recall row's deterministic 32-cell quantizer
-      if (selected("ann_ivf_pruned_recall"))
-        graft.operators.Similarity.trainCentroidsExact(emb)
+      if (selected("ann_ivf_topk")) Similarity.trainCentroids(emb)
+      if (selected("ann_ivfpq_topk")) ProductQuantization.trainCodebooks(emb)
+      if (selected("ann_ivf_pruned_recall")) Similarity.trainCentroidsExact(emb)
     }
-    // ...and the BPE tokenizer's learned merges (r17): train-or-load
-    // once per store key (TextAnalysis via DerivedStore.value)
-    // — the tokenizer twin of the ANN quantizer preload above; the
-    // sequential trainer loop is model-build cost, not query latency.
-    if (graft.operators.ModelCost.preloadsEnabled &&
+    if (ModelCost.preloadsEnabled &&
         Seq("bpe_learn_merges", "bpe_encode_counts",
-        "bpe_fertility_by_lang", "bpe_decode_roundtrip").exists(selected))
-      graft.operators.TextAnalysis
-        .bpeLearnMerges(graft.catalog.Tables(spark, sfDir).documents,
-          graft.operators.TextAnalysis.BpeRounds).count()
-    // AOT warm (r11 verdict #7): the graph family's residual cold:warm
-    // gap is C2/JIT warming of the iterative keyed join+agg dataflow's
-    // classes, not plan compile count (the r11 negative result). Run
-    // the SAME dataflows once over a 6-edge in-memory graph in setup —
-    // identical plan SHAPES, so the shared infra (Janino, shuffle
-    // writers, codegen frameworks, decimal sum paths) warms on setup's
-    // dime while per-plan generated classes still compile cold. A/B on
-    // an idle box (2 pairs, foreign_cpu 0): part_bfs_hops cold 7.66/
-    // 8.10 → 5.09/5.46 s (−30%, the most iterative dataflow), others
-    // within run-to-run variance, family cold total −10%, warm
-    // unchanged. Defensible billing: cluster executors are long-lived
-    // and always JIT-warm — a freshly-booted JVM's first iterative
-    // query overstates production cold latency. SPARK_GRAFT_AOT_WARM=0
-    // opts out (for measuring the raw-JVM regime).
-    // ...gated, like the setup preloads above, on a graph-family query
-    // actually being selected (r12 advice): subset re-records of other
-    // families shouldn't pay the warm or its clearCache/unpersist-all.
-    if (graft.operators.ModelCost.preloadsEnabled &&
-        Seq("part_pagerank", "pagerank_converged", "part_bfs_hops",
-          "part_triangles", "part_graph_stats", "part_cooccurrence",
-          "item_similarity", "association_rules").exists(selected)) {
+          "bpe_fertility_by_lang", "bpe_decode_roundtrip").exists(selected))
+      TextAnalysis.bpeLearnMerges(graft.catalog.Tables(spark, sfDir).documents,
+        TextAnalysis.BpeRounds).count()
+    // Graph AOT warm: the graph family's residual cold gap is C2/JIT
+    // warming of the iterative join+agg dataflows, which needs ~10k
+    // invocations of the hot loops. Run the same dataflows once over a
+    // deterministic ~24k-edge synthetic graph (spark.range, no I/O) so
+    // the shared kernels reach C2 on setup's time; per-plan generated
+    // classes still compile cold. Cluster executors are long-lived and
+    // always JIT-warm, so a fresh JVM's first iterative query would
+    // overstate production cold latency.
+    if (ModelCost.preloadsEnabled && graphQueries.exists(selected)) {
       import org.apache.spark.sql.functions.{array, col, explode, expr}
-      // SIZED synthetic graph, not a toy (r12 verdict #1): the r12
-      // profile showed part_triangles' warm instability is the C2
-      // compile-queue tail — 48 s of compiler wall time decaying over
-      // ~6 executions (GC flat ≤ 250 ms, foreign CPU 0), surfacing as
-      // rep swings only when compiler threads compete with the 32
-      // executor threads for cores. Tiered compilation needs ~10k
-      // invocations of the hot loops to reach C2, which the old
-      // 6-edge graph could never trigger — so the warm now runs the
-      // same three dataflows over a deterministic ~50k-edge synthetic
-      // graph (spark.range, no I/O), pushing the shared kernels
-      // (sorted-intersect merge, decimal rank sums, frontier joins,
-      // shuffle writers, UnsafeWriter paths) through their C2
-      // transitions on setup's dime. Same billing argument as before:
-      // cluster executors are long-lived and always JIT-warm.
       val n = 4096L
       val e = spark.range(n).select(col("id").as("src"))
         .select(col("src"), explode(array(
@@ -374,649 +281,89 @@ object Bench {
         .filter(col("src") =!= col("dst"))
       val nodes = e.select(col("src").as("part")).distinct()
       graft.functions.TopKByScore.register(spark)
-      graft.operators.ProductAnalytics
-        .pageRankRatios(nodes, e, rounds = 3).count()
-      // the CONVERGED loop's round plan is a different shape since the
-      // r14 restructure (one left join over the carried-outdeg
-      // checkpoint + edge contrib agg) — without its own warm its
-      // generated classes hit C2 inside the timed window: measured
-      // round-1 checkpoint 5.9 s cold vs 1.1 s warm at sf0.1, doubling
-      // the query's cold in every r14 attempt until this line.
-      graft.operators.ProductAnalytics
-        .pageRankConverged(nodes, e, maxRounds = 3)._1.count()
-      graft.operators.ProductAnalytics
-        .bfsHopHistogram(e, maxHops = 3).count()
-      graft.operators.ProductAnalytics
-        .triangleParticipation(e.filter(col("src") < col("dst"))
-          .select(col("src").as("u"), col("dst").as("v")).distinct()).count()
+      ProductAnalytics.pageRankRatios(nodes, e, rounds = 3).count()
+      // the converged loop's round plan is a different shape and needs
+      // its own warm (its round-1 checkpoint measured 5.9 s cold vs
+      // 1.1 s warm at sf0.1 without it)
+      ProductAnalytics.pageRankConverged(nodes, e, maxRounds = 3)._1.count()
+      ProductAnalytics.bfsHopHistogram(e, maxHops = 3).count()
+      ProductAnalytics.triangleParticipation(e.filter(col("src") < col("dst"))
+        .select(col("src").as("u"), col("dst").as("v")).distinct()).count()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
     }
-    // STREAMING AOT warm (r17): the alphabetically-first query of the
-    // isolated streaming phase used to pay the one-time engine boot —
-    // RocksDB state-store provider + its native library, micro-batch
-    // execution, offset/commit-log I/O, the transformWithState
-    // machinery, the memory sink — inside its own cold window:
-    // stream_cusum cold 7.18 s vs 2.60 s warm in the r16 recording, a
-    // ~4.6 s gap no other stream query shows (their cold:warm gaps
-    // are 0.3–0.9 s). Boot the same machinery once in setup over a
-    // 3-row parquet stream through the REAL CUSUM processor — the
-    // identical billing argument as the graph AOT warm above:
-    // cluster executors (and streaming drivers) are long-lived and
-    // always engine-warm; a freshly-booted JVM's first streaming
-    // query overstates production cold latency. Same
-    // SPARK_GRAFT_AOT_WARM=0 opt-out for measuring the raw-JVM regime.
-    if (graft.operators.ModelCost.preloadsEnabled &&
+    // Streaming AOT warm: the first streaming query would otherwise pay
+    // the one-time engine boot (RocksDB provider and native library,
+    // micro-batch execution, offset/commit logs, transformWithState) in
+    // its cold window. Boot it once over a 3-row parquet stream through
+    // the real CUSUM processor; same long-lived-driver argument.
+    if (ModelCost.preloadsEnabled &&
         SparkEntry.isolatedStreamingQueries.exists(selected)) {
       import org.apache.spark.sql.functions.col
-      val warmDir = java.nio.file.Files.createTempDirectory("graft-stream-warm")
+      val warmDir = Files.createTempDirectory("graft-stream-warm")
       try {
         spark.range(3).selectExpr("cast(id as string) as event_type",
             "'2024-01-01' as day", "1L as m", "1L as ssum", "1L as q")
           .write.mode("overwrite").parquet(s"$warmDir/in")
         val schema = spark.read.parquet(s"$warmDir/in").schema
         val in = spark.readStream.schema(schema).parquet(s"$warmDir/in")
-          .select(col("event_type"), col("day"), col("m"), col("ssum"),
-            col("q"))
+          .select(col("event_type"), col("day"), col("m"), col("ssum"), col("q"))
         graft.streaming.EventsStream.withRocksDbStateStore(spark) {
           graft.streaming.EventsStream.runAvailableNow(
             graft.streaming.StreamingCusum.perTypeCusum(in).toDF(),
             "aot_stream_warm_sink", outputMode = "update")
         }
         spark.catalog.dropTempView("aot_stream_warm_sink")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(warmDir))
-          java.nio.file.Files.walk(warmDir).iterator().asScala.toSeq
-            .reverseIterator.foreach(f =>
-              try java.nio.file.Files.deleteIfExists(f)
-              catch { case _: java.io.IOException => () })
+      } finally graft.streaming.EventsStream.deleteRecursively(warmDir)
+    }
+    // JIT quiesce: the warms queue hundreds of C2 compiles; if the timed
+    // window opens while the queue drains, compiler threads compete
+    // with executor threads. Wait until accumulated compile time grows
+    // < 50 ms per 500 ms twice in a row, or 30 s.
+    val q0 = System.nanoTime()
+    val jit = ManagementFactory.getCompilationMXBean
+    if (jit != null && jit.isCompilationTimeMonitoringSupported) {
+      val deadline = q0 + 30L * 1000 * 1000 * 1000
+      var quiet = 0
+      var last = jit.getTotalCompilationTime
+      while (quiet < 2 && System.nanoTime() < deadline) {
+        Thread.sleep(500)
+        val cur = jit.getTotalCompilationTime
+        if (cur - last < 50) quiet += 1 else quiet = 0
+        last = cur
       }
     }
-    // JIT QUIESCE: the AOT warm queues hundreds of C2 compiles; if the
-    // timed window opens while the queue drains, compiler threads
-    // compete with the 32 executor threads and tax whichever queries
-    // run first (r14 attempt 8: part_triangles cold 10.8 s vs 3.2 s
-    // warm on a zero-steal box). Poll the compiler MXBean until its
-    // accumulated compile time goes quiet (< 50 ms growth over 500 ms,
-    // twice in a row) or 30 s — the warm's compiles then finish on
-    // setup's dime, which is the AOT warm's whole billing argument.
-    // …and RECORD how long the quiesce took (r14 advice): the cold
-    // definition here is "first timed run in a fully compiled JVM",
-    // and the artifact itself must carry what that setup choice cost
-    // (like gate_wait_sec) so it stays auditable.
-    val jitQuiesceSec = locally {
-      val q0 = System.nanoTime()
-      val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (jit != null && jit.isCompilationTimeMonitoringSupported) {
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        var quiet = 0
-        var last = jit.getTotalCompilationTime
-        while (quiet < 2 && System.nanoTime() < deadline) {
-          Thread.sleep(500)
-          val cur = jit.getTotalCompilationTime
-          if (cur - last < 50) quiet += 1 else quiet = 0
-          last = cur
-        }
-      }
-      (System.nanoTime() - q0) / 1e9
-    }
-    // excluded model-build cost registered by the setup preloads just
-    // above (ANN centroids/codebooks, BPE merges — whatever this run's
-    // board selected): the trainer seconds NO timed window below will
-    // pay, surfaced in the artifact instead of vanished (r17 verdict
-    // item 2). 0.0 when preloads are opted out — the timed windows
-    // then carry the cost themselves.
-    val modelBuildSec = graft.operators.ModelCost.totalSec
-    val modelBuildsJson = graft.operators.ModelCost.entriesJson
-    // a crashing query must surface as an err entry, not be billed a
-    // fast "time" inside a clean-looking total
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // contention telemetry: foreign_cpu_sec is busy CPU seconds spent
-    // by OTHER processes during the run; steal/iowait are broken out
-    // host-wide because they are the signals per-process CPU misses.
-    val run0 = procSample()
-    val (busy0, self0) = (run0.busy, run0.self)
-    val wall0 = System.nanoTime()
-    // pre-suite RSS, recorded for context (the leak-detector FLOOR is
-    // taken after the cold pass instead: the JVM legitimately grows
-    // its heap over the first full pass and never returns those pages,
-    // so a pre-suite floor false-flags ordinary heap sizing as a leak)
-    System.gc()
-    val rssPreSuiteMb = rssMb()
+    (System.nanoTime() - q0) / 1e9
+  }
 
-    def runOne(name: String,
-               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QueryRun = {
-      val loadBefore = load1()
-      val gc0 = gcMillis()
-      val h0 = procSample()
-      var df: org.apache.spark.sql.DataFrame = null
-      val t0 = System.nanoTime()
-      try { df = fn(spark, sfDir); df.count() } catch {
-        case t: Throwable =>
-          errors(name) =
-            t.getClass.getSimpleName + ": " + String.valueOf(t.getMessage).take(160)
-      }
-      // several operators persist() intermediates; drop them so one
-      // query's cache never evicts/slows the next. The unpersist is
-      // BLOCKING: clearCache's default async eviction let one query's
-      // block teardown run inside the NEXT query's timed window —
-      // eviction cost belongs to the query that allocated the cache.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      val sec = (System.nanoTime() - t0) / 1e9
-      val h1 = procSample()
-      val (qSteal, qIowait, qForeign) =
-        if (h0.busy < 0 || h1.busy < 0 || sec <= 0) (-1.0, -1.0, -1.0)
-        else (math.max(0L, h1.steal - h0.steal) / (100.0 * sec),
-          math.max(0L, h1.iowait - h0.iowait) / (100.0 * sec),
-          // other PROCESSES' CPU over this window (busy − self):
-          // in-container contenders are invisible to steal/iowait
-          math.max(0L, (h1.busy - h0.busy) - (h1.self - h0.self)) /
-            (100.0 * sec))
-      val gcDelta = gcMillis() - gc0
-      val (heapUsed, _) = heapMb()
-      QueryRun(sec, gcDelta, heapUsed, rssMb(), loadBefore,
-        if (df == null) "err" else planHash(df), qSteal, qIowait,
-        qForeign)
-    }
-
-    // deterministic (sorted) order so per-query times are comparable
-    // across rounds; JVM warmup lands on the same query every run.
-    // The two transformWithState queries run in their OWN phase after
-    // every batch pass (r9 verdict #2): each boots a streaming query +
-    // RocksDB state store whose NATIVE allocations used to land
-    // mid-alphabet in the cold pass and squeeze every query after them
-    // — real cost, wrong venue. Phase order changes nothing semantic
-    // (queries are independent, caches cleared between them); the
-    // reported maps stay name-sorted.
-    // ...plus the incremental-ingest drill, which boots two streaming
-    // queries and round-trips the corpus through a landing zone —
-    // same "real cost, wrong venue" argument. Membership is DERIVED
-    // from the provider registry (default isolated; see
-    // StreamingProvider) — the set was previously hardcoded here and
-    // every new streaming row had to remember to join it (r11 #4).
-    val rocksDbQueries = SparkEntry.isolatedStreamingQueries
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => selected(q._1))
-    val batchQs = sorted.filterNot(q => rocksDbQueries(q._1))
-    val streamQs = sorted.filter(q => rocksDbQueries(q._1))
-
-    def runPass(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Seq[(String, QueryRun)] =
-      qs.map { case (name, fn) => name -> runOne(name, fn) }
-
-    // cold = first run (comparable to BASELINE.md); warm = MEDIAN of
-    // `warmReps` further full passes — codegen/JIT/broadcast hot,
-    // closer to steady-state cluster behavior, and the median makes
-    // one contended pass unable to move the trend line.
-    val passTelemetry = scala.collection.mutable.ArrayBuffer[String]()
-    var passGateWaitTotal = 0.0
-    // per-pass HOST-LEVEL contention evidence (r13 verdict #1): a
-    // degraded pass is one whose steal rate, iowait rate, or
-    // load-vs-busy divergence says the host was unhealthy while it
-    // ran. The divergence signature (runnable+D-state load high while
-    // host CPU is near-idle) is exactly the r13 regime — loadavg 16+
-    // at 96 % CPU-idle — which no per-process counter can see.
-    // Steal is judged as a SHARE of host execution, not an absolute
-    // rate: steal scales with demand, and this box measures ~0.1 %
-    // share under a healthy 32-thread burn but 15 %+ during a real
-    // neighbor burst (measured while building this guard — that
-    // burst also put the pass's part_pagerank cold at 2.2× warm, so
-    // the share signal and the damage line up). The 0.2-core floor
-    // keeps near-idle passes from flagging on jiffy noise; the other
-    // thresholds are one-sided: a HEALTHY bench pass has host busy ≈
-    // our own 32 threads, so high load with host busy under 3 cores
-    // cannot be self-inflicted.
-    final case class PassHost(label: String, stealCores: Double,
-                              iowaitCores: Double, hostBusyCores: Double,
-                              load1End: Double) {
-      def stealShare: Double =
-        if (hostBusyCores > 0) stealCores / hostBusyCores else 0.0
-      /** The r13 regime (runnable+D-state load high while host CPU is
-        * near-idle) — the ONE signal per-query windows cannot carry,
-        * because load1 is a minute-scale EMA. Kept as its own test so
-        * ledger adoption can veto on exactly this without inheriting
-        * the coarser pass-level steal/iowait tests (whose per-query
-        * equivalents are stricter AND correctly scoped — a 15-min
-        * campaign attempt dies entirely on one dirty warm pass
-        * otherwise: r17 attempts 1-2 adopted 0/195 each because a
-        * neighbor burst during the warm passes vetoed 173 clean colds).
-        */
-      def loadDivergent: Boolean =
-        load1End > 12.0 && hostBusyCores >= 0 && hostBusyCores < 3.0
-      def degraded: Boolean =
-        (stealCores > 0.2 && stealShare > 0.05) || iowaitCores > 2.0 ||
-          loadDivergent
-    }
-    val passHosts = scala.collection.mutable.ArrayBuffer[PassHost]()
-    def passStamp(label: String, t: Double, gatePre: Double,
-                  gateWait: Double, host: PassHost): Unit =
-      passTelemetry += f"""{"pass":"$label","sec":$t%.2f,"gc_ms":${gcMillis()},"heap_mb":${heapMb()._1},"rss_mb":${rssMb()},"load1":${load1()}%.2f,"gate_pre_cores":$gatePre%.2f,"gate_wait_sec":${math.max(0.0, gateWait)}%.1f,"steal_cores":${host.stealCores}%.2f,"iowait_cores":${host.iowaitCores}%.2f,"host_busy_cores":${host.hostBusyCores}%.2f,"degraded":${host.degraded}}"""
-
-    def timedPass(label: String,
-        qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Seq[(String, QueryRun)] = {
-      if (qs.isEmpty) return Seq.empty // subset runs skip empty phases
-      // re-gate at the pass boundary: the box can turn busy any time
-      // during a ~10-minute recording, not only before it. Short
-      // sample (2 s) keeps the idle-path overhead at ~16 s/recording;
-      // bounded wait (120 s) so a permanently-busy box still records
-      // (the pass's load1/foreign telemetry then tells the story).
-      val (gatePre, gateWait, _) = waitForIdle(2.0, 120.0)
-      passGateWaitTotal += math.max(0.0, gateWait)
-      val p0 = procSample()
-      val t0 = System.nanoTime()
-      val r = runPass(qs)
-      val passWall = (System.nanoTime() - t0) / 1e9
-      val p1 = procSample()
-      val host =
-        if (p0.busy < 0 || p1.busy < 0 || passWall <= 0)
-          PassHost(label, -1.0, -1.0, -1.0, load1())
-        else PassHost(label,
-          math.max(0L, p1.steal - p0.steal) / (100.0 * passWall),
-          math.max(0L, p1.iowait - p0.iowait) / (100.0 * passWall),
-          math.max(0L, p1.busy - p0.busy) / (100.0 * passWall),
-          load1())
-      passHosts += host
-      passStamp(label, passWall, gatePre, gateWait, host)
-      // pass-boundary GC so heap pressure accumulated by one pass is
-      // paid HERE (unbilled) instead of inside the next pass's queries
-      System.gc()
-      r
-    }
-
-    val coldBatch = timedPass("cold", batchQs)
-    // leak-detector floor, part 1: post-cold, post-GC
-    val rssPostColdMb = rssMb()
-    val warmFirst =
-      if (warmReps >= 1) Seq(timedPass("warm1", batchQs)) else Seq.empty
-    // part 2: post-first-warm — how far the boundary GC shrinks the
-    // heap varies run-to-run (observed 2.8 vs 8.6 GB on identical
-    // code), so a single post-cold sample false-flags. The floor is
-    // the MAX of the steady-state samples; growth beyond 1.5× of
-    // that is retention, not warmup.
-    val rssPostWarm1Mb = math.max(rssPostColdMb, rssMb())
-    val warmBatchReps =
-      warmFirst ++ (2 to warmReps).map(i => timedPass(s"warm$i", batchQs))
-    val coldStream = timedPass("cold_stream", streamQs)
-    // part 3: post-first-streaming — RocksDB native libraries, state
-    // stores, and the driver-side memory-sink tables all load HERE
-    // for the first time, but rss_end is sampled after the streaming
-    // phases too; a batch-only floor would bill that one-time native
-    // step as "growth" and false-flag (fatal under RSS_STRICT). The
-    // bound must measure retention across like-for-like phases.
-    val rssBaselineMb = math.max(rssPostWarm1Mb, rssMb())
-    val warmStreamReps = (1 to warmReps).map(i => timedPass(s"warm${i}_stream", streamQs))
-
-    val cold = (coldBatch ++ coldStream).sortBy(_._1)
-    val warmRepsByQuery: Map[String, Seq[QueryRun]] =
-      (batchQs.map(_._1).map { n =>
-        n -> warmBatchReps.map(_.toMap.apply(n))
-      } ++ streamQs.map(_._1).map { n =>
-        n -> warmStreamReps.map(_.toMap.apply(n))
-      }).toMap
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) 0.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    val warm = cold.map { case (n, _) =>
-      n -> median(warmRepsByQuery(n).map(_.sec))
-    }
-
-    def fmt(v: Double): String = "%.2f".format(v)
-    def jmap(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    def jsmap(kvs: Seq[(String, String)]): String =
-      kvs.map { case (k, v) =>
-        "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
-      }.mkString("{", ",", "}")
-    val total = cold.map(_._2.sec).sum
-    val warmTotal = warm.map(_._2).sum
-    // ---- self-flagging (r8 verdict #4) ------------------------------
-    // Flag, at RECORDING time, every query whose cold run exceeds 2×
-    // (a) its own (median) warm time — requires cold ≥ 2 s, since
-    // JIT/codegen warmup legitimately dominates small queries — or
-    // (b) its round-1 baseline cold time — requires only cold ≥ 0.5 s
-    // (noise floor): r9 advice noted the old shared ≥ 2 s guard let a
-    // 0.3 s → 1.9 s (6×) regression pass unflagged. Every flag entry
-    // carries the cold run's GC/RSS/plan telemetry so a flag is
-    // attributable (GC spike, native-memory step, replan) instead of
-    // an argument.
-    val r1Baseline: Map[String, Double] =
-      try {
-        val txt = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("tools/baseline_r1_queries.json"))
-        """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-    val warmByName = warm.toMap
-    def telemetrySuffix(q: QueryRun): String =
-      s""","gc_ms":${q.gcMs},"rss_mb":${q.rssMbAfter},"plan":"${q.plan}"""" +
-        s""","steal_cores":${fmt(q.stealCores)},"iowait_cores":${fmt(q.iowaitCores)}""" +
-        (if (hostExonerated(q)) ""","host_exonerated":true""" else "")
-    val flags = scala.collection.mutable.ArrayBuffer[String]()
-    cold.foreach { case (name, q) =>
-      val c = q.sec
-      warmByName.get(name).foreach { w =>
-        if (c >= 2.0 && c > 2.0 * math.max(w, 0.05))
-          flags += f"""{"q":"$name","kind":"cold_vs_warm","cold":${fmt(c)},"ref":${fmt(w)},"ratio":${fmt(c / math.max(w, 0.05))}${telemetrySuffix(q)}}"""
-      }
-      r1Baseline.get(name).foreach { b =>
-        if (c >= 0.5 && c > 2.0 * b)
-          flags += f"""{"q":"$name","kind":"cold_vs_r1","cold":${fmt(c)},"ref":${fmt(b)},"ratio":${fmt(c / b)}${telemetrySuffix(q)}}"""
-      }
-      // warm instability: the reps disagree with each other by > 2×
-      // on a ≥ 1 s query — the signature of environment drift (the r9
-      // warm inflation) as opposed to a code regression, which moves
-      // every rep together
-      val warmRuns = warmRepsByQuery(name)
-      val reps = warmRuns.map(_.sec)
-      if (reps.nonEmpty && reps.max >= 1.0 &&
-          reps.max > 2.0 * math.max(reps.min, 0.05))
-        // per-REP host steal/iowait (r14 verdict #6): the flag carries
-        // the evidence to attribute its own outlier rep — foreign
-        // steal during that rep's window exonerates the code
-        flags += f"""{"q":"$name","kind":"warm_unstable","cold":${fmt(c)},"ref":${fmt(reps.min)},"ratio":${fmt(reps.max / math.max(reps.min, 0.05))},"reps":[${reps.map(fmt).mkString(",")}],"rep_steal_cores":[${warmRuns.map(r => fmt(r.stealCores)).mkString(",")}],"rep_iowait_cores":[${warmRuns.map(r => fmt(r.iowaitCores)).mkString(",")}]}"""
-    }
-    // ---- RSS leak detector (r9 verdict #5) --------------------------
-    // End-of-run RSS must stay within 1.5× the post-warmup floor — a
-    // standing guard against cache blocks, codegen classes, and
-    // NATIVE state (RocksDB) that future operators can't silently
-    // defeat. Surfaces as a flag (the driver must still get a
-    // recording), fatal under SPARK_GRAFT_RSS_STRICT=1 for local use.
-    System.gc()
-    val rssEndMb = rssMb()
-    val rssBoundOk = rssBaselineMb <= 0 || rssEndMb <= 0 ||
-      rssEndMb.toDouble <= 1.5 * rssBaselineMb
-    if (!rssBoundOk) {
-      flags += f"""{"q":"_suite","kind":"rss_growth","cold":${rssEndMb.toDouble},"ref":${rssBaselineMb.toDouble},"ratio":${fmt(rssEndMb.toDouble / rssBaselineMb)}}"""
-      if (sys.env.get("SPARK_GRAFT_RSS_STRICT").contains("1"))
-        sys.error(s"RSS grew ${rssBaselineMb} -> ${rssEndMb} MB (> 1.5x)")
-    }
-    if (flags.nonEmpty)
-      System.err.println(s"bench: ${flags.size} regression flag(s) — see bench_full.json")
-    val run1 = procSample()
-    val (busy1, self1) = (run1.busy, run1.self)
-    val wallSec = (System.nanoTime() - wall0) / 1e9
-    val (selfCpuSec, foreignCpuSec) =
-      if (busy0 < 0 || busy1 < 0) (-1.0, -1.0)
-      else ((self1 - self0) / 100.0,
-        math.max(0L, (busy1 - busy0) - (self1 - self0)) / 100.0)
-    val (stealCpuSec, iowaitCpuSec) =
-      if (run0.busy < 0 || run1.busy < 0) (-1.0, -1.0)
-      else (math.max(0L, run1.steal - run0.steal) / 100.0,
-        math.max(0L, run1.iowait - run0.iowait) / 100.0)
-    // per-query cold telemetry + per-query warm reps + plan-hash
-    // changes across passes (only queries whose hash moved — an AQE
-    // replan under identical code is exactly what this catches)
-    val telemetryJson = cold.map { case (n, q) =>
-      f""""$n":{"gc_ms":${q.gcMs},"heap_mb":${q.heapUsedMb},"rss_mb":${q.rssMbAfter},"load1":${q.load1Before}%.2f,"steal_cores":${fmt(q.stealCores)},"iowait_cores":${fmt(q.iowaitCores)},"plan":"${q.plan}"}"""
-    }.mkString("{", ",", "}")
-    val warmRepsJson = cold.map { case (n, _) =>
-      s""""$n":[${warmRepsByQuery(n).map(r => fmt(r.sec)).mkString(",")}]"""
-    }.mkString("{", ",", "}")
-    val planChanges = cold.flatMap { case (n, q) =>
-      val hashes = q.plan +: warmRepsByQuery(n).map(_.plan)
-      if (hashes.distinct.size > 1)
-        Some(s""""$n":[${hashes.map("\"" + _ + "\"").mkString(",")}]""")
-      else None
-    }.mkString("{", ",", "}")
-    // ---- contention guard (r11 verdict #1) --------------------------
-    // The r11 committed recording carried 71 s foreign CPU and 42
-    // warm_unstable flags with monotonically falling reps — the
-    // instrumentation caught the contended box, but nothing stopped
-    // the recording from overwriting the committed reference. Now a
-    // recording that self-identifies as contended (many unstable-rep
-    // flags, or heavy foreign CPU on a full-suite run) lands in
-    // bench_full.contended.json instead of clobbering bench_full.json;
-    // SPARK_GRAFT_FORCE_RECORD=1 overrides when a contended number is
-    // deliberately wanted.
-    // subset re-records are DEV runs: route them away from the
-    // committed full-board recording (a 10-query subset run used to
-    // overwrite the 191-query bench_full.json in place)
-    val isSubset = sys.env.get("SPARK_GRAFT_SUBSET").exists(_.nonEmpty)
-    val warmUnstableCount = flags.count(_.contains("\"warm_unstable\""))
-    // Foreign CPU must be judged as a RATE, not a total: the container's
-    // constant ~0.15-core background accumulates 75-85 s over a clean
-    // 10-minute full-board run (both clean r11 recordings: 82.5/75.3 s),
-    // while the contaminated r11 recording had LESS absolute foreign CPU
-    // (71.3 s) but 42 warm_unstable flags. So the rep-instability count
-    // is the primary signal and foreign CORES (>0.5 of a core sustained
-    // over the whole run) the secondary one.
-    val foreignCores = if (wallSec > 0) foreignCpuSec / wallSec else 0.0
-    // steal/IO-aware routing (r13 verdict #1): the r13 driver
-    // recording carried foreign_cpu_sec 0.00 yet 103 flags — the host
-    // was in a steal/IO-contention regime per-process CPU cannot see.
-    // Route on sustained host-level rates exactly like foreign cores:
-    // whole-run steal or iowait rate over threshold, or ≥ 2 degraded
-    // passes (per-pass steal/iowait/load-divergence — one pass alone
-    // can be a load1-EMA tail from our own previous pass).
-    val stealCores = if (wallSec > 0) math.max(0.0, stealCpuSec) / wallSec else 0.0
-    val iowaitCores = if (wallSec > 0) math.max(0.0, iowaitCpuSec) / wallSec else 0.0
-    val runBusySec =
-      if (busy0 < 0 || busy1 < 0) 0.0 else math.max(1L, busy1 - busy0) / 100.0
-    val stealShareRun =
-      if (runBusySec > 0) math.max(0.0, stealCpuSec) / runBusySec else 0.0
-    val degradedPasses = passHosts.filter(_.degraded)
-    // the COLD pass is the headline `value`: one degraded warm pass
-    // can be absorbed by the median, but a steal-taxed cold pass IS
-    // the number the judge reads (r14 attempt 4: cold 192 s at 0.42
-    // steal cores slipped under the ≥2-degraded-passes rule while
-    // warm3 ran 110 s on the quiet tail) — route it aside on its own.
-    val hostContended = (stealCores > 0.2 && stealShareRun > 0.05) ||
-      iowaitCores > 2.0 || degradedPasses.size >= 2 ||
-      degradedPasses.exists(p => p.label == "cold" || p.label == "cold_stream")
-    if (hostContended)
-      flags += f"""{"q":"_suite","kind":"host_contention","steal_cores":$stealCores%.2f,"steal_share":$stealShareRun%.3f,"iowait_cores":$iowaitCores%.2f,"degraded_passes":[${degradedPasses.map(p => "\"" + p.label + "\"").mkString(",")}],"pass_steal_cores":[${passHosts.map(p => f"${p.stealCores}%.2f").mkString(",")}],"pass_load1":[${passHosts.map(p => f"${p.load1End}%.1f").mkString(",")}],"pass_host_busy_cores":[${passHosts.map(p => f"${p.hostBusyCores}%.1f").mkString(",")}]}"""
-    val contended = warmUnstableCount > 10 || foreignCores > 0.5 || hostContended
-    // ---- ledger adoption (r16 verdict #1) ---------------------------
-    // A query's COLD is adopted when its cold window was individually
-    // clean (per-window host steal, iowait, AND foreign-process cores
-    // under the bounds) and no containing pass showed the r13
-    // load-vs-busy divergence regime (the one signal a per-query
-    // window cannot carry — load1 is a minute-scale EMA) and the
-    // query didn't error. Warm reps adopt INDEPENDENTLY, each on its
-    // own window, accumulating across attempts (Rec.warmAttempts) —
-    // requiring all four windows clean in ONE attempt starved the
-    // multi-second-window tail for 6 straight attempts. The pass-level
-    // steal/iowait tests are deliberately NOT inherited: their
-    // per-window equivalents are stricter and correctly scoped, and a
-    // whole-pass veto throws away every clean window in it (attempts
-    // 1-2: 0/195 adopted despite 173 clean cold windows). -1 window
-    // samples (/proc unavailable) count as clean — on such a host
-    // there is no guard at all, matching the pass-level rules, and the
-    // record still carries the -1 to audit.
-    //
-    // TIERING: a cold adopted while the whole ATTEMPT was contended
-    // (this run's `contended`) is tier-2 — valid fallback, but a
-    // clean-window cold from a later UNcontended attempt replaces it,
-    // direction-blind, and is then final. Window guards see
-    // scheduling interference; they cannot see the cache/membw tax of
-    // a neighbor that is busy without stealing — measured as a broad
-    // 1.12× median cold inflation across the 74 records adopted
-    // during two contended attempts of the first r17 campaign. Warm
-    // reps are not tiered: medians absorb single-rep taxes, and the
-    // measured warm values matched the clean r16 reference.
-    ledgerPath.foreach { lp =>
-      val divergentByPass: Map[String, Boolean] =
-        passHosts.map(p => p.label -> p.loadDivergent).toMap
-      def windowClean(steal: Double, iowait: Double,
-                      foreign: Double): Boolean =
-        (steal < 0 || steal <= cleanStealCores) &&
-          (iowait < 0 || iowait <= cleanIowaitCores) &&
-          (foreign < 0 || foreign <= cleanForeignCores)
-      val attempt = ledgerAttempts + 1
-      val updated = cold.flatMap { case (name, q) =>
-        val sfx = if (rocksDbQueries(name)) "_stream" else ""
-        val cleanWarm = warmRepsByQuery(name).zipWithIndex.collect {
-          case (r, i)
-            if !divergentByPass.getOrElse(s"warm${i + 1}$sfx", true) &&
-              windowClean(r.stealCores, r.iowaitCores, r.foreignCores) => r
-        }
-        val coldOk = !divergentByPass.getOrElse("cold" + sfx, true) &&
-          windowClean(q.stealCores, q.iowaitCores, q.foreignCores)
-        if (errors.contains(name)) None
-        else ledgerPrior.get(name) match {
-          case Some(prev) =>
-            // top up missing warm reps from this attempt's clean ones
-            val take = cleanWarm.take(warmReps - prev.warm.size)
-            val topped = if (take.isEmpty) prev else prev.copy(
-              warm = prev.warm ++ take.map(_.sec),
-              warmSteal = prev.warmSteal ++ take.map(_.stealCores),
-              warmIowait = prev.warmIowait ++ take.map(_.iowaitCores),
-              warmForeign = prev.warmForeign ++ take.map(_.foreignCores),
-              warmAttempts = prev.warmAttempts ++ take.map(_ => attempt),
-              warmPlans = prev.warmPlans ++ take.map(_.plan))
-            // tier upgrade: replace a contended-attempt cold with this
-            // clean attempt's clean-window cold (whatever its value)
-            val upgraded =
-              if (!prev.cleanAttempt && !contended && coldOk)
-                topped.copy(attempt = attempt, cold = q.sec,
-                  gcMs = q.gcMs, heapMb = q.heapUsedMb,
-                  rssMb = q.rssMbAfter, load1 = q.load1Before,
-                  steal = q.stealCores, iowait = q.iowaitCores,
-                  foreign = q.foreignCores, plan = q.plan,
-                  cleanAttempt = true)
-              else topped
-            if (upgraded == prev) None else Some(name -> upgraded)
-          case None =>
-            if (!coldOk) None
-            else {
-              val take = cleanWarm.take(warmReps)
-              Some(name -> BenchLedger.Rec(name, attempt, q.sec,
-                q.gcMs, q.heapUsedMb, q.rssMbAfter, q.load1Before,
-                q.stealCores, q.iowaitCores, q.foreignCores, q.plan,
-                take.map(_.sec), take.map(_.stealCores),
-                take.map(_.iowaitCores), take.map(_.foreignCores),
-                take.map(_ => attempt), take.map(_.plan),
-                cleanAttempt = !contended, sha = headSha))
-            }
-        }
-      }.toMap
-      val doneAll = ledgerPrior ++ updated
-      def complete(r: BenchLedger.Rec) = r.warm.size >= warmReps
-      val board = SparkEntry.queries.keys.toSeq
-        .filter(Subset.selected).sorted
-      val pending =
-        board.filterNot(n => doneAll.get(n).exists(complete))
-      BenchLedger.write(lp, attempt, sfDir, cpus, warmReps,
-        cleanStealCores, cleanIowaitCores, doneAll, pending, headSha)
-      val nFull = doneAll.valuesIterator.count(complete)
-      val nTier2 = doneAll.valuesIterator
-        .count(r => complete(r) && !r.cleanAttempt)
-      System.err.println(s"ledger: attempt $attempt - $nFull " +
-        s"complete ($nTier2 upgradable), " +
-        s"${doneAll.size - nFull} partial, " +
-        s"${pending.size} pending of ${board.size}")
-      if (pending.isEmpty) {
-        // a subset campaign covers a partial board — its assembly
-        // must never clobber the committed full-board recording
-        val out = if (sys.env.get("SPARK_GRAFT_SUBSET").exists(_.nonEmpty))
-          "bench_ledger_assembled.json" else "bench_full.json"
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(out),
-          BenchLedger.assemble(doneAll, r1Baseline, sfDir, warmReps,
-            attempt, cleanStealCores, cleanIowaitCores, headSha))
-        System.err.println(s"ledger: complete - $out " +
-          s"assembled from $attempt attempt(s), every window clean")
-      }
-    }
-    val forceRecord = sys.env.get("SPARK_GRAFT_FORCE_RECORD").contains("1")
-    val recordPath =
-      // a ledger ATTEMPT covers only the pending board — its whole-run
-      // artifact must never clobber the committed full recording; the
-      // assembled bench_full.json is written by the adoption block
-      if (ledgerPath.nonEmpty) "bench_ledger_attempt.json"
-      else if (isSubset) "bench_subset.json"
-      // the committed protocol records at local[32]; a lower-core run
-      // (the driver's own scaling pass, a dev probe) must never
-      // overwrite the committed full-board reference in place — the
-      // r17 driver's 8-core run did exactly that (verdict item 3)
-      else if (cpus != "32") s"bench_full.c$cpus.json"
-      else if (contended && !forceRecord) "bench_full.contended.json"
-      else "bench_full.json"
-    if (contended)
-      System.err.println(
-        f"bench: CONTENDED recording ($warmUnstableCount warm_unstable flags, " +
-          f"foreign_cpu ${fmt(foreignCpuSec)} s = ${fmt(foreignCores)} cores, " +
-          f"steal ${fmt(stealCores)} cores, iowait ${fmt(iowaitCores)} cores, " +
-          f"degraded passes [${degradedPasses.map(_.label).mkString(",")}]) -> $recordPath")
-    // the stdout budget (driver captures only the final ~2000 chars)
-    // can't hold all per-query times — the COMPLETE record goes to a
-    // side file in the repo root for the judge / cross-round diffs
-    val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","contended":$contended,
-         |"warm_total":${fmt(warmTotal)},"warm_reps":$warmReps,
-         |"wall_sec":${fmt(wallSec)},"self_cpu_sec":${fmt(selfCpuSec)},"foreign_cpu_sec":${fmt(foreignCpuSec)},"steal_cpu_sec":${fmt(stealCpuSec)},"iowait_cpu_sec":${fmt(iowaitCpuSec)},
-         |"idle_gate_pre_cores":${fmt(preGateCores)},"idle_gate_wait_sec":${fmt(math.max(0.0, idleWaitSec))},"idle_gate_last_cores":${fmt(lastSample)},"pass_gate_wait_sec":${fmt(passGateWaitTotal)},"jit_quiesce_sec":${fmt(jitQuiesceSec)},
-         |"rss_pre_suite_mb":$rssPreSuiteMb,"rss_post_cold_mb":$rssPostColdMb,"rss_baseline_mb":$rssBaselineMb,"rss_end_mb":$rssEndMb,"rss_hwm_mb":${rssMb("VmHWM")},"rss_bound_ok":$rssBoundOk,
-         |"model_build_sec":${fmt(modelBuildSec)},"model_builds":$modelBuildsJson,"preloads_enabled":${graft.operators.ModelCost.preloadsEnabled},
-         |"errors":${jsmap(errors.toSeq)},
-         |"flags":${flags.mkString("[", ",", "]")},
-         |"passes":${passTelemetry.mkString("[", ",", "]")},
-         |"telemetry":$telemetryJson,
-         |"plan_changes":$planChanges,
-         |"warm_rep_times":$warmRepsJson,
-         |"cold":${jmap(cold.map(kv => kv._1 -> kv._2.sec))},
-         |"warm":${jmap(warm)}}""".stripMargin
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(recordPath), fullJson)
-    // full detail first (for humans / logs)…
-    println(s"""BENCH_WARM ${jmap(warm)}""")
-    // …then the machine-read line LAST. The driver captures only the
-    // final 2000 chars of stdout (sbt appends its own ~80-char
-    // "[success]" line after us), so this line must stay well under
-    // ~1900 chars or the driver records parsed:null (rounds 1-3 did).
-    // 2-decimal values + cold map only keeps ~68 queries at ~1700
-    // chars; the SLOWEST queries are kept (totals stay exact) and the
-    // dropped fast ones are all in bench_full.json.
-    val budget = 1800
-    val coldTimes = cold.map(kv => kv._1 -> kv._2.sec)
-    // verdict r16 #4: the named "queries" map only ever fits ~60
-    // entries in the stdout budget, so cross-round per-query
-    // comparison from driver artifacts alone was impossible for the
-    // tail. "cold_all" carries EVERY query's cold time as a compact
-    // array in name-sorted board order (~5 chars/query vs ~28 named);
-    // "board_md5" digests the sorted name list so a consumer can
-    // verify which board the positions refer to (the board itself is
-    // deterministic: sorted SparkEntry.queries keys at this commit).
-    val boardMd5 = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(cold.map(_._1).mkString(",").getBytes("UTF-8"))
-      d.take(4).map("%02x".format(_)).mkString
-    }
-    val coldAllJson =
-      s"""[${cold.map(kv => fmt(kv._2.sec)).mkString(",")}]"""
-    def line(qs: Seq[(String, Double)], omitted: Int,
-             withAll: Boolean): String = {
-      val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      val er = if (errors.nonEmpty) s""","errors":${jsmap(errors.toSeq)}""" else ""
-      val fl = if (flags.nonEmpty) s""","n_flags":${flags.size}""" else ""
-      val ct = if (contended) s""","contended":true""" else ""
-      val ca = if (withAll)
-        s""","n_q":${cold.size},"board_md5":"$boardMd5","cold_all":$coldAllJson"""
-      else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jmap(qs)},"warm_total":${fmt(warmTotal)},"foreign_cpu_sec":${fmt(foreignCpuSec)},"model_build_sec":${fmt(modelBuildSec)}$om$er$fl$ct$ca,"full":"$recordPath","sf":"$sfDir"}"""
-    }
-    def fitLine(withAll: Boolean): String = {
-      var keep = coldTimes.sortBy(-_._2)
-      while (line(keep.sortBy(_._1), coldTimes.size - keep.size,
-          withAll).length > budget && keep.size > 1)
-        keep = keep.dropRight(1)
-      line(keep.sortBy(_._1), coldTimes.size - keep.size, withAll)
-    }
-    // if the board ever outgrows the budget even with one named
-    // query, drop cold_all rather than emit an unparseable line
-    val outLine = {
-      val l = fitLine(withAll = true)
-      if (l.length <= budget) l else fitLine(withAll = false)
-    }
-    println(outLine)
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val warmReps = sys.env.getOrElse("SPARK_GRAFT_WARM_REPS", "3").toInt
+    // the library's own session: the bench times the plans the engine
+    // produces
+    val spark = GraftSession.local(cores, "graft-bench")
+    // render full plan strings so the plan hash is stable: both confs
+    // only affect toString, never planning
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
+    // one throwaway action so JVM and scheduler warm-up is not billed
+    // to whichever query runs first
+    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val queries = SparkEntry.queries.toSeq.filter(q => Subset.selected(q._1))
+    val jitQuiesceSec = setup(spark, sfDir, queries.map(_._1).toSet)
+    val record = board(spark, sfDir, queries, warmReps)
+      .copy(jitQuiesceSec = r3(jitQuiesceSec))
+    val path =
+      if (sys.env.get("SPARK_GRAFT_SUBSET").exists(_.nonEmpty)) "bench_subset.json"
+      else s"bench_full.c$cores.json"
+    Files.writeString(Paths.get(path), Json.write(record))
+    println(Json.write(ListMap("metric" -> record.metric,
+      "value" -> record.value, "warm_total" -> record.warmTotal,
+      "n_q" -> record.cold.size, "n_errors" -> record.errors.size,
+      "n_flags" -> record.flags.size, "full" -> path)))
     spark.stop()
   }
 }

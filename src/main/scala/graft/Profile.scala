@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Dev profiling harness: time named queries (default all) with
   * warm-up + repeats inside one session; optionally print the
   * formatted physical plan. Usage:
@@ -75,7 +77,7 @@ object Profile {
           val self = java.nio.file.Files.readString(
             java.nio.file.Paths.get("/proc/self/stat")).split("\\s+")
           (stat.sum - stat(3) - stat(4), self(13).toLong + self(14).toLong)
-        } catch { case _: Throwable => (-1L, -1L) }
+        } catch { case NonFatal(_) => (-1L, -1L) }
       val times = (1 to reps).map { i =>
         if (args.contains("--clear")) spark.catalog.clearCache()
         stageLog.clear()

@@ -4,6 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Zipf-skew adversarial smoke (r13 verdict #2). The copy-inflation
   * smoke ([[ScaleSmoke]]) is adversarial for LSH banding but FRIENDLY
   * for the graph and prefix-join families: disjoint exact copies keep
@@ -187,7 +189,7 @@ object ZipfSmoke {
       // a BY-CONTRACT refusal (e.g. knnJoinBlocked's over-cap
       // raise_error at --grow m ≥ 3) must not kill the ops after it
       val rows = try body catch {
-        case t: Throwable =>
+        case NonFatal(t) =>
           println(s"$name REFUSED: " + String.valueOf(t.getMessage)
             .linesIterator.next().take(160))
           return

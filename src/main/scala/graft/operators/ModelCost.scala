@@ -60,14 +60,14 @@ object ModelCost {
     costs.values.asScala.map(_._2).sum
   }
 
-  /** `{"kind":{"sec":N,"built_now":B},...}` — per-model breakdown for
-    * the full bench record (kinds are unique per model family).
+  /** Per-model breakdown for the bench record, keyed by kind (kinds
+    * are unique per model family): `sec` and `built_now`.
     */
-  def entriesJson: String = {
+  def entries: Map[String, Map[String, Any]] = {
     import scala.jdk.CollectionConverters._
-    costs.values.asScala.toSeq.sortBy(_._1).map { case (kind, sec, now) =>
-      s""""${kind.replaceAll("[\"\\\\]", "_")}":{"sec":${"%.2f".format(sec)},"built_now":$now}"""
-    }.mkString("{", ",", "}")
+    scala.collection.immutable.TreeMap.from(costs.values.asScala.map {
+      case (kind, sec, now) => kind -> Map[String, Any]("sec" -> sec, "built_now" -> now)
+    })
   }
 
   private[graft] def clear(): Unit = costs.clear()

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
+import scala.util.control.NonFatal
+
 /** Data-derived partition counts for the pinned exchanges.
   *
   * Round 9 pinned every exchange feeding a persisted or CPU-heavy
@@ -89,7 +91,7 @@ object Parallelism {
         // partition count off a sentinel
         .filter(s => s >= 0 && s < BigInt(Long.MaxValue) / 16)
       if (sizes.isEmpty) -1L else sizes.sum.toLong
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** The partition count to pin an exchange feeding `df`'s pipeline:
     * session parallelism floored, input-size-scaled, capped.

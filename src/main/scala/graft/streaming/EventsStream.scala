@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import scala.util.control.NonFatal
+
 /** Structured Streaming surface over the `events` table.
   *
   * The reference is batch-only (`schedule_interval='@once'`,
@@ -185,7 +187,7 @@ object EventsStream extends StreamingProvider {
     val bytes =
       try p.getFileSystem(spark.sessionState.newHadoopConf())
         .getContentSummary(p).getLength
-      catch { case _: Throwable => -1L }
+      catch { case NonFatal(_) => -1L }
     if (bytes <= 0) spark.sessionState.conf.numShufflePartitions
     else math.max(1L, math.min(
       graft.operators.Parallelism.MaxPartitions.toLong,
@@ -273,7 +275,7 @@ object EventsStream extends StreamingProvider {
         case None => spark.conf.unset(clKey)
       }
       try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
   }
 

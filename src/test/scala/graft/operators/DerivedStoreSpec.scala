@@ -142,7 +142,7 @@ class DerivedStoreSpec extends SparkSpec {
         assert(DerivedStore.verdict(src(), kind) { probes += 1; Thread.sleep(30); true })
       }
       assert(probes == 1)
-      assert(!ModelCost.entriesJson.contains(kind), ModelCost.entriesJson)
+      assert(!ModelCost.entries.contains(kind), ModelCost.entries)
     }
   }
 }

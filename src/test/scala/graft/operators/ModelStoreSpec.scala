@@ -94,13 +94,13 @@ class ModelStoreSpec extends SparkSpec {
       call() // trains: records measured seconds in the entry
       val builtSec = ModelCost.totalSec
       assert(builtSec >= 0.03, s"train cost must be measured, got $builtSec")
-      assert(ModelCost.entriesJson.contains("\"built_now\":true"))
+      assert(ModelCost.entries(kind)("built_now") == true)
       ModelCost.clear()
       call() // fresh cache → disk hit: cost re-surfaces from the entry
       assert(math.abs(ModelCost.totalSec - builtSec) < 0.5,
         s"the entry must carry the original build cost " +
           s"(${ModelCost.totalSec} vs $builtSec)")
-      assert(ModelCost.entriesJson.contains("\"built_now\":false"))
+      assert(ModelCost.entries(kind)("built_now") == false)
       ModelCost.clear()
     }
   }
