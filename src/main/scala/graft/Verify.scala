@@ -11,12 +11,10 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // the library's own session: the DuckDB oracle gate validates the
     // SAME plans the library produces (a WindowTopKToHeap bug must fail
     // THIS gate, not only the unit specs)
-    val spark = GraftSession.local(cpus.toInt, "graft-verify")
+    val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // same subset filter as Bench (shared impl — see graft.Subset):
     // targeted dev-loop checks on one family; the driver never sets

@@ -31,7 +31,7 @@ import graft.catalog.Tables
   */
 object Dedup {
 
-  private val NumPerms = 16
+  private[operators] val NumPerms = 16
   private val BandRows = 2 // 8 bands of 2 → high recall at sim ≥ 0.5
   private val JaccardThreshold = 0.5
   /** |A∩B|/|A| threshold for [[containmentPrefixJoin]]. Lower than a
@@ -91,7 +91,7 @@ object Dedup {
     * df-keyed structure (LSH buckets, prefix-filter buckets)
     * degenerates toward all-pairs.
     */
-  private def shingleSetsK(docs: DataFrame, k: Int): DataFrame = {
+  private[operators] def shingleSetsK(docs: DataFrame, k: Int): DataFrame = {
     val w = split(trim(col("text")), "\\s+")
     val m = greatest(size(w) - lit(k - 1), lit(0))
     val grams = (2 to k).foldLeft(slice(w, lit(1), m))((acc, j) =>

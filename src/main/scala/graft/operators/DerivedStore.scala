@@ -165,9 +165,6 @@ object DerivedStore {
     * [[ModelCost]]), the rest `encode(value)`, written through a temp
     * file and an atomic rename. An entry that cannot be read or
     * decoded is a miss: the value is computed and the entry rewritten.
-    * The disk tier is off when [[ModelCost.preloadsEnabled]] is false:
-    * every JVM then pays the compute inside whatever window first
-    * needs it.
     */
   def value[T <: AnyRef](df: DataFrame, kind: String)(compute: => T)(
       encode: T => String)(decode: String => T): T =
@@ -189,7 +186,7 @@ object DerivedStore {
       if (it.hasNext) { it.next(); it.remove() }
     }
     memo.computeIfAbsent(memoKey, _ => new Lazy(() =>
-      k.filter(_ => ModelCost.preloadsEnabled) match {
+      k match {
         case Some(dk) => onDisk(kind, dk, ledger)(compute)(encode)(decode)
         case None => compute
       })).get.asInstanceOf[T]

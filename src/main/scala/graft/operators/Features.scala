@@ -345,30 +345,36 @@ object Features {
     (meansE6, v1, v2, covE6, cov2)
   }
 
-  /** [[powerFitE6]] memoized per store key (its kind carries `iters`) — the
-    * PCA family's analogue of the cluster family's derived layout
-    * (r11 verdict #3): three board queries (`pca_power_projection`,
-    * `mahalanobis_pc2`, `zca_whiten_pc2`) consume the identical
-    * moments-scan + integer eigensolve; recomputing it inside each is
-    * three corpus scans where one suffices. The fit is a pure
-    * DRIVER-SIDE model (a few width-bounded Long arrays — exactly the
-    * legitimate-collect class), so a JVM-lifetime memo is the right
-    * mechanism — unlike cached DataFrames it survives Bench's
-    * per-query clearCache, and the [[DerivedStore.key]] gives it the
-    * same staleness guarantee as the on-disk layouts: neither a
-    * regenerated corpus nor changed engine code can serve a stale
-    * eigenbasis. A corpus without a key is refitted on every call.
+  /** [[powerFitE6]] kept in [[DerivedStore.value]] under its kind
+    * (which carries `iters`): `pca_power_projection`, `mahalanobis_pc2`
+    * and `zca_whiten_pc2` consume the identical moments scan and
+    * integer eigensolve, so the first of them fits and the others, and
+    * later JVMs, reuse the fit. The store key gives it the same
+    * staleness guarantee as the derived layouts: neither a regenerated
+    * corpus nor changed engine code can serve a stale eigenbasis. A
+    * corpus without a key is fitted once per JVM.
     */
-  def powerFitE6For(s: SparkSession, dir: String, iters: Int): Fit = {
+  private[operators] def powerFitE6For(s: SparkSession, dir: String, iters: Int): Fit = {
     val emb = Tables(s, dir).embeddings
-    DerivedStore.key(emb, s"pca_fit_i$iters") match {
-      case Some(k) => fitMemo.computeIfAbsent(k, _ => powerFitE6(emb, iters))
-      case None => powerFitE6(emb, iters)
-    }
+    DerivedStore.value(emb, s"pca_fit_i$iters")(powerFitE6(emb, iters))(
+      encodeFit)(decodeFit)
   }
 
-  private val fitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Fit]()
+  /** One comma-separated line per array: meansE6, v1, v2, then the
+    * `dim` rows of covE6 and the `dim` rows of cov2.
+    */
+  private def encodeFit(f: Fit): String = {
+    val (meansE6, v1, v2, covE6, cov2) = f
+    (Seq(meansE6, v1, v2) ++ covE6 ++ cov2).map(_.mkString(",")).mkString("\n")
+  }
+
+  private def decodeFit(body: String): Fit = {
+    val rows = body.split("\n").map(_.split(",").map(_.toLong))
+    val dim = rows(0).length
+    require(rows.length == 3 + 2 * dim && rows.forall(_.length == dim),
+      s"malformed PCA fit entry: ${rows.length} rows for dim $dim")
+    (rows(0), rows(1), rows(2), rows.slice(3, 3 + dim), rows.slice(3 + dim, 3 + 2 * dim))
+  }
 
   /** Fixed-point projection column Σᵢ v_i·(x_i_e6 − mean_i_e6) —
     * scale 1e12, all-integer, shuffle-free.

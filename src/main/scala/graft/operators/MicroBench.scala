@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.operators.MicroBench <sfDir> [piece,piece,...] [--reps=N]
   *
-  * Pieces replicate the exact expression trees of the operators they
-  * decompose (object-private helpers are inlined, with a pointer to
-  * the source); they are measurement scaffolding, never query paths.
+  * Pieces call the operators' own kernels (`Dedup.shingleSetsK`,
+  * `TextAnalysis.hits`, ...) and compose the sub-dataflows of the
+  * queries they decompose; they are measurement scaffolding, never
+  * query paths.
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -31,22 +32,8 @@ object MicroBench {
 
     def docs = t.documents
 
-    // --- inlined copies of Dedup's object-private text kernels -----
-    // (Dedup.shingleSetsK / TextAnalysis.hits; keep in sync by eye —
-    // a drift here only mis-times a dev probe, never a query)
-    def shingles(k: Int): DataFrame = {
-      val w = split(trim(col("text")), "\\s+")
-      val m = greatest(size(w) - lit(k - 1), lit(0))
-      val grams = (2 to k).foldLeft(slice(w, lit(1), m))((acc, j) =>
-        zip_with(acc, slice(w, lit(j), m), (a, b) => concat(a, lit(" "), b)))
-      docs.select(col("doc_id"), array_distinct(grams).as("toks"))
-    }
-    def hits(needle: String) =
-      ((length(concat(lit(" "), col("text"), lit(" "))) -
-        length(expr(s"replace(concat(' ', text, ' '), '$needle', '')"))) /
-        lit(needle.length)).cast("long")
-    val nWords = when(length(trim(col("text"))) === 0, 0)
-      .otherwise(size(split(trim(col("text")), "\\s+"))).cast("long")
+    def shingles(k: Int): DataFrame = Dedup.shingleSetsK(docs, k)
+    import TextAnalysis.{hits, nWords}
 
     // shared graph inputs for the pagerank pieces — the exact
     // relations the part_pagerank/pagerank_converged entries build
@@ -88,7 +75,7 @@ object MicroBench {
       "docs_minhash" -> (() => shingles(2)
         .filter(size(col("toks")) >= 1)
         .select(col("doc_id"),
-          graft.functions.MinHash60.minhash60(col("toks"), 16  /* Dedup.NumPerms (object-private) */).as("mh"))),
+          graft.functions.MinHash60.minhash60(col("toks"), Dedup.NumPerms).as("mh"))),
       "mh_cands" -> (() => Dedup.minhashBandCandidates(docs)),
       "mh_pairs" -> (() => Dedup.minhashPairs(docs.select(col("doc_id"), col("text")))),
       "curation_scored" -> (() => docs.select(col("doc_id"), col("text"),
@@ -104,11 +91,11 @@ object MicroBench {
       "fused_tokcount" -> (() => docs.select(col("doc_id"),
         graft.functions.ShingleKernel.token_count(col("text")).as("tc"))),
       "fused_minhash" -> (() => docs.select(col("doc_id"),
-        graft.functions.ShingleKernel.minhash60_text(col("text"), 16).as("mh"))),
+        graft.functions.ShingleKernel.minhash60_text(col("text"), Dedup.NumPerms).as("mh"))),
       "fused_sig" -> (() => docs.select(col("doc_id"),
-        graft.functions.ShingleKernel.shingle_sig(col("text"), 16).as("sig"))),
+        graft.functions.ShingleKernel.shingle_sig(col("text"), Dedup.NumPerms).as("sig"))),
       "fused_sig3" -> (() => {
-        val sig = graft.functions.ShingleKernel.shingle_sig(col("text"), 16)
+        val sig = graft.functions.ShingleKernel.shingle_sig(col("text"), Dedup.NumPerms)
         docs.select(col("doc_id"), sig.as("s"))
           .select(col("doc_id"), col("s.vtoks").as("vtoks"),
             col("s.n").as("n"), col("s.mh").as("mh"))
@@ -174,7 +161,7 @@ object MicroBench {
         toks.select(col("doc_id"),
           array_sort(transform(col("toks"), x => xxhash64(x))).as("vtoks"),
           size(col("toks")).as("n"),
-          graft.functions.MinHash60.minhash60(col("toks"), 16).as("mh"))
+          graft.functions.MinHash60.minhash60(col("toks"), Dedup.NumPerms).as("mh"))
       })
     )
     val sel = pieces.filter(p => only.isEmpty || only(p._1))

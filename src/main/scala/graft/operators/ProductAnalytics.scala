@@ -402,7 +402,8 @@ object ProductAnalytics {
     * the unweighted graph trio (edges = the distinct key set).
     * Same [[DerivedStore.table]] as the partitioned fact copy and the
     * cluster assignment — keyed on the source files and the engine
-    * code, billed to bench setup like all one-time layout jobs.
+    * code, billed to the first query that needs it like all one-time
+    * layout jobs.
     */
   def materializedPairCounts(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir).lineitem

@@ -147,10 +147,6 @@ object ProductQuantization {
     }
   }
 
-  /** Train M codebooks driver-side on the bounded sample. */
-  def trainCodebooks(emb: DataFrame): Array[Array[Array[Double]]] =
-    trainedPqModels(emb)._2
-
   /** Both PQ-side models — the coarse router and the M per-subspace
     * codebooks — from ONE bounded sample, persisted fingerprint-keyed
     * (r16 verdict item 3, same machinery and exactness argument as

@@ -22,8 +22,8 @@ import graft.operators.DerivedStore
   * Scale shape: the warehouse LOAD runs once per [[DerivedStore]] key
   * of the customer table (the staleness contract of every derived
   * table — a regenerated corpus or changed engine code reloads) and
-  * is billed to bench setup with the
-  * other one-time layout jobs; the per-query cost is the partitioned
+  * is billed to the first query that needs it, as the other one-time
+  * layout jobs are; the per-query cost is the partitioned
   * JDBC scan with the segment/balance predicates pushed into Derby
   * (`PushedFilters` plan-asserted in `JdbcSpec`) plus one tiny keyed
   * aggregate. On a cluster the URL swaps to Postgres and

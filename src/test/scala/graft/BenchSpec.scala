@@ -3,7 +3,9 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** `Bench.board` on the shared session, over small in-memory queries. */
+import graft.operators.{DerivedStore, ModelCost}
+
+/** `Bench.board` on the shared session, over small queries. */
 class BenchSpec extends SparkSpec {
 
   private val tiny: Bench.Query = (s, _) => s.range(10).toDF()
@@ -51,7 +53,34 @@ class BenchSpec extends SparkSpec {
     val flag = rec.flags.find(_.kind == "warm_unstable")
     assert(flag.exists(f => f.q == "flaky" && f.reps == rec.warmRepTimes("flaky")),
       rec.flags)
-    assert(!rec.flags.exists(_.kind == "cold_vs_warm"))
+  }
+
+  test("the board bills a model to the window that trains it, and a fresh JVM loads it from disk") {
+    withTempDir { dir =>
+      spark.range(20).toDF("id").write.mode("overwrite").parquet(dir.toString)
+      val df = spark.read.parquet(dir.toString)
+      // a throwaway action, as in Bench.main, so JVM and scheduler
+      // warm-up is not billed to the trained query
+      df.count()
+      val kind = s"bench_model_${System.nanoTime()}"
+      // an empty answer keeps a warm window to the memo hit and one
+      // small job, well under the trainer's 400 ms
+      val trained: Bench.Query = (_, _) => {
+        DerivedStore.value(df, kind) { Thread.sleep(400); "model" }(identity)(identity)
+        df.limit(0)
+      }
+      // an empty memo and ledger, as a fresh JVM would see them
+      def freshBoard(warmReps: Int): Bench.Record = {
+        DerivedStore.clearMemo()
+        ModelCost.clear()
+        Bench.board(spark, sf, Seq("trained" -> trained), warmReps)
+      }
+      val rec = freshBoard(3)
+      assert(rec.cold("trained") >= 0.3, rec.cold)
+      assert(rec.warm("trained") < 0.3, rec.warmRepTimes)
+      assert(rec.modelBuilds(kind)("built_now") == true)
+      assert(freshBoard(1).modelBuilds(kind)("built_now") == false)
+    }
   }
 
   test("query names and error text with quote, backslash, newline and \\u0001 round-trip through the record") {

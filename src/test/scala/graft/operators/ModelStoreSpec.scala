@@ -4,9 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** r16 verdict item 3: trained ANN models persist store-keyed
-  * (`DerivedStore.value`) so Lloyd training is index-build cost, not
-  * per-query cold latency. The contract under test: (a) a file-backed
+/** Trained models persist store-keyed (`DerivedStore.value`): the
+  * first window that needs a model trains it, and later JVMs load it.
+  * The contract under test: (a) a file-backed
   * corpus trains ONCE and later calls — including across fresh
   * JVM-level caches, i.e. fresh sessions — load the identical model
   * from disk; (b) changing the corpus retrains (staleness contract
@@ -63,26 +63,6 @@ class ModelStoreSpec extends SparkSpec {
       "a synthetic relation has no stable content key and must train per cache")
   }
 
-  test("preload opt-out bypasses the disk tier: train-included timings on demand") {
-    // r17 verdict item 2: with the single preload gate off, NO timed
-    // window may be served a pre-trained model from disk — the memo
-    // must fall through to train-per-JVM and write nothing.
-    withTempDir { dir =>
-      writeVecs(dir, 10, 0.0)
-      def df() = spark.read.parquet(dir.toString)
-      var trains = 0
-      val kind = s"spec_gate_${System.nanoTime()}"
-      def call() = fresh(df(), kind) { trains += 1; Array(Array(1.0)) }
-      ModelCost.forceDisabledFlag = true
-      try { call(); call() } finally { ModelCost.forceDisabledFlag = false }
-      assert(trains == 2,
-        "gate off: each fresh cache must retrain, never read disk")
-      // gate back on: disk tier resumes, third call persists + fourth loads
-      call(); call()
-      assert(trains == 3, "gate on: disk tier must dedupe training again")
-    }
-  }
-
   test("model build cost rides a sidecar and registers in the ModelCost ledger") {
     // the "sidecar" is now the first line of the value's disk entry
     withTempDir { dir =>
@@ -101,6 +81,31 @@ class ModelStoreSpec extends SparkSpec {
         s"the entry must carry the original build cost " +
           s"(${ModelCost.totalSec} vs $builtSec)")
       assert(ModelCost.entries(kind)("built_now") == false)
+      ModelCost.clear()
+    }
+  }
+
+  test("the PCA fit reloads from disk and projects as a direct fit does") {
+    withTempDir { dir =>
+      spark.read.parquet(s"$sf/embeddings.parquet")
+        .write.parquet(s"$dir/embeddings.parquet")
+      val kind = s"pca_fit_i${Features.PowerIters}"
+      def fit() = {
+        DerivedStore.clearMemo()
+        ModelCost.clear()
+        val f = Features.powerFitE6For(spark, dir.toString, Features.PowerIters)
+        (f._1.toSeq, f._2.toSeq, f._3.toSeq, f._4.map(_.toSeq).toSeq,
+          f._5.map(_.toSeq).toSeq)
+      }
+      val built = fit()
+      assert(ModelCost.entries(kind)("built_now") == true)
+      val loaded = fit()
+      assert(ModelCost.entries(kind)("built_now") == false)
+      assert(loaded == built)
+      // the memo now holds the decoded fit; the direct path refits
+      val emb = graft.catalog.Tables(spark, dir.toString).embeddings
+      assert(rows(Features.queries("pca_power_projection")(spark, dir.toString)).toSet ==
+        rows(Features.pcaPowerProjection(emb)).toSet)
       ModelCost.clear()
     }
   }
