@@ -118,12 +118,14 @@ object Bench {
     * `warmReps` warm passes, batch queries first and the isolated
     * streaming queries in their own phase after them. A query that
     * throws a non-fatal exception is recorded in `errors` and the board
-    * goes on; fatal errors propagate.
+    * goes on; fatal errors propagate. `model_builds` lists only the
+    * models this board's windows built or loaded.
     */
   def board(spark: SparkSession, sfDir: String,
             queries: Seq[(String, Query)], warmReps: Int): Record = {
     // a median over no reps would read 0 s and flag every cold query
     require(warmReps >= 1, s"warmReps must be >= 1, got $warmReps")
+    graft.operators.ModelCost.clear()
     val errors = scala.collection.mutable.Map[String, String]()
 
     def runOne(name: String, fn: Query): Run = {

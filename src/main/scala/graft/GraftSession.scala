@@ -70,6 +70,12 @@ object GraftSession {
       // generated classes. The engine adds no session artifacts (no
       // addArtifact or addJar), so isolation has nothing to isolate.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // The HDFS-backed state store writes snapshots only in background
+      // maintenance (60 s default), which a sub-second AvailableNow run
+      // never reaches: every IncrementalIngest run then replays every
+      // delta since its first drop. At 250 ms snapshots are taken and a
+      // drop's cost stays flat with history (DEPLOY.md has the A/B).
+      .config("spark.sql.streaming.stateStore.maintenanceInterval", "250ms")
     // dev escape hatch: SPARK_GRAFT_CONF="k=v;k=v" overlays any conf
     // (profiling experiments — never required for correctness)
     sys.env.get("SPARK_GRAFT_CONF").toSeq

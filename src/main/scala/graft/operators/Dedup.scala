@@ -54,12 +54,6 @@ object Dedup {
     */
   private val PrefixJoinShingleK = 3
 
-  /** md5-derived 60-bit hash of a string column (both-engine-stable;
-    * single codegen'd expression — see functions.Md5Hash60).
-    */
-  private def h60(c: Column): Column =
-    graft.functions.Md5Hash60.md5_hash60(c)
-
   /** Band b's signature string over a `mh: array<bigint>` MinHash
     * column — the [[BandRows]] member hashes comma-joined, identical
     * to the `concat_ws(",", mh_{2b}, mh_{2b+1})` the oracles build.
@@ -67,11 +61,6 @@ object Dedup {
   private def bandSig(b: Int): Column =
     concat_ws(",", (b * BandRows until (b + 1) * BandRows)
       .map(i => element_at(col("mh"), i + 1).cast("string")): _*)
-
-  /** Distinct whitespace tokens per doc. */
-  private def tokenSets(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      array_distinct(split(trim(col("text")), "\\s+")).as("toks"))
 
   /** Distinct word-bigram shingles per doc. Bigrams (not unigram
     * bags) are the MinHash shingle: on a small-vocabulary corpus

@@ -448,25 +448,6 @@ object ProductAnalytics {
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_orders"))
   }
 
-  /** One row per order: the deduplicated basket as an array — the
-    * shared first stage of every market-basket query. ONE
-    * map-side-combined shuffle on the order key replaces the previous
-    * three wide ops (distinct on (order, part), self-join on order,
-    * pair distinct): pairs fall out of a narrow double explode of the
-    * basket array, already deduplicated within the order because the
-    * basket is a set. Basket size is bounded by order line count, so
-    * the explode is O(lines × basket), never corpus-quadratic.
-    */
-  def baskets(lineitem: DataFrame): DataFrame =
-    lineitem.select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("parts"))
-
-  /** Per-order co-purchase pairs from the basket relation: one output
-    * row per (order, a, b). `ordered` keeps a < b (undirected graphs,
-    * co-occurrence counts); otherwise both directions minus the
-    * diagonal (directed rules, PageRank edges).
-    */
   /** Top-k co-purchase neighbors per part, ranked by cosine² kept in
     * bigint (see the `item_similarity` query comment). Factored out
     * so ScaleSmoke can drive it at N× the bench scale.
@@ -512,13 +493,6 @@ object ProductAnalytics {
       .filter(col("rank") <= k)
       .select(col("ia").as("item"), col("ib").as("neighbor"),
         col("n_both"), col("n_item"), col("sim2_e6"), col("rank"))
-  }
-
-  def basketPairs(bk: DataFrame, ordered: Boolean): DataFrame = {
-    val p = bk.select(explode(col("parts")).as("a"), col("parts"))
-      .select(col("a"), explode(col("parts")).as("b"))
-    if (ordered) p.filter(col("a") < col("b"))
-    else p.filter(col("a") =!= col("b"))
   }
 
   /** Distinct co-purchase edges straight from lineitem via a codegen

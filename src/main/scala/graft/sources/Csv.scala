@@ -51,10 +51,4 @@ object Csv {
     val w = df.write.mode(SaveMode.Overwrite).option("header", "true")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).csv(path)
   }
-
-  /** INSERT INTO … SELECT equivalent (S8): append to a catalog table,
-    * creating it on first write.
-    */
-  def appendTable(df: DataFrame, table: String): Unit =
-    df.write.mode(SaveMode.Append).saveAsTable(table)
 }

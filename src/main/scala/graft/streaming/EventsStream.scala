@@ -168,7 +168,7 @@ object EventsStream extends StreamingProvider {
   }
 
   /** Data-derived state-partition count for the one-shot AvailableNow
-    * drains: ceil(sourceBytes / Parallelism.DefaultBytesPerTask),
+    * drains: ceil(bytes under `path` / Parallelism.DefaultBytesPerTask),
     * clamped to [1, Parallelism.MaxPartitions]. Unlike the batch pins
     * (which FLOOR at session parallelism because their tasks are pure
     * CPU), each streaming state partition is a state-store INSTANCE
@@ -181,9 +181,8 @@ object EventsStream extends StreamingProvider {
     * corpus, exactly like the repo's other pinned exchanges. Falls
     * back to the session default when the source size is unknowable.
     */
-  def statePartitions(spark: SparkSession, dir: String,
-                      table: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+  def statePartitions(spark: SparkSession, path: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val bytes =
       try p.getFileSystem(spark.sessionState.newHadoopConf())
         .getContentSummary(p).getLength
@@ -198,12 +197,8 @@ object EventsStream extends StreamingProvider {
   def runAvailableNow(df: DataFrame, queryName: String,
                       outputMode: String = "append",
                       stateParts: Int = -1): Unit = {
-    val spark = df.sparkSession
-    val spKey = "spark.sql.shuffle.partitions"
-    val priorSp = spark.conf.getOption(spKey)
-    if (stateParts > 0) spark.conf.set(spKey, stateParts.toString)
     val ck = scratchDir(s"graft-ck-$queryName")
-    try {
+    try withStatePartitions(df.sparkSession, stateParts) {
       val q = df.writeStream
         .format("memory").queryName(queryName)
         .outputMode(outputMode)
@@ -219,12 +214,22 @@ object EventsStream extends StreamingProvider {
           s"[stream-debug] $queryName batch=${p.batchId} " +
             s"durationMs=${p.durationMs} stateOperators=${
               p.stateOperators.map(_.json).mkString(";")}"))
-    } finally {
-      deleteRecursively(ck)
-      priorSp match {
-        case Some(v) => spark.conf.set(spKey, v)
-        case None => spark.conf.unset(spKey)
-      }
+    } finally deleteRecursively(ck)
+  }
+
+  /** Runs `body` (which starts a stateful query) with the session's
+    * shuffle partitions set to `n`, when positive, and restores them.
+    * A query's state partition count is the value at its checkpoint's
+    * first batch; later runs keep it whatever the session says.
+    */
+  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.getOption(key)
+    if (n > 0) spark.conf.set(key, n.toString)
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
@@ -350,7 +355,7 @@ object EventsStream extends StreamingProvider {
       import org.apache.spark.sql.functions.{col, unix_millis}
       runAvailableNow(sessionize(readEvents(s, dir)).toDF(),
         "stream_sessions_sink",
-        stateParts = statePartitions(s, dir, "events"))
+        stateParts = statePartitions(s, s"$dir/events.parquet"))
       s.table("stream_sessions_sink")
         .select(col("user_id"), col("n_events"),
           unix_millis(col("start")).as("start_ms"),

@@ -101,7 +101,7 @@ object StreamingCusum extends StreamingProvider {
             col("q"))
         EventsStream.runAvailableNow(perTypeCusum(in).toDF(),
           "stream_cusum_sink", outputMode = "update",
-          stateParts = EventsStream.statePartitions(s, dir, "events"))
+          stateParts = EventsStream.statePartitions(s, s"$dir/events.parquet"))
         // n_seen is strictly monotone per key; the max-n_seen
         // emission is the post-drain trajectory regardless of how
         // many micro-batches the drain took

@@ -114,7 +114,7 @@ object StreamingHeavyHitters extends StreamingProvider {
         EventsStream.runAvailableNow(
           perGroupHitters(in, capacity = 1 << 17, failAtCapacity = true).toDF(),
           "stream_hh_sink", outputMode = "update",
-          stateParts = EventsStream.statePartitions(s, dir, "events"))
+          stateParts = EventsStream.statePartitions(s, s"$dir/events.parquet"))
         // the update-mode memory sink keeps ONE leaderboard row per
         // group per micro-batch; a multi-file drain would leave
         // several. n_seen is strictly monotone per group, so the

@@ -164,7 +164,7 @@ object StreamingNearDup extends StreamingProvider {
           .select(col("doc_id"), col("text"))
           .repartition(
             math.max(s.sessionState.conf.numShufflePartitions,
-              EventsStream.statePartitions(s, dir, "documents")),
+              EventsStream.statePartitions(s, s"$dir/documents.parquet")),
             col("doc_id"))
         // NOTE: deliberately NOT using the byte-derived statePartitions
         // here (r18): unlike the per-key-trivial events processors,

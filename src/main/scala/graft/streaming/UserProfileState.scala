@@ -72,7 +72,7 @@ object UserProfileState extends StreamingProvider {
         EventsStream.runAvailableNow(
           runningProfiles(EventsStream.readEvents(s, dir)).toDF(),
           "stream_profiles_sink", outputMode = "update",
-          stateParts = EventsStream.statePartitions(s, dir, "events"))
+          stateParts = EventsStream.statePartitions(s, s"$dir/events.parquet"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(desc("n_events"))
         s.table("stream_profiles_sink")

@@ -3,7 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{DerivedStore, ModelCost}
+import graft.operators.DerivedStore
 
 /** `Bench.board` on the shared session, over small queries. */
 class BenchSpec extends SparkSpec {
@@ -69,10 +69,9 @@ class BenchSpec extends SparkSpec {
         DerivedStore.value(df, kind) { Thread.sleep(400); "model" }(identity)(identity)
         df.limit(0)
       }
-      // an empty memo and ledger, as a fresh JVM would see them
+      // an empty memo, as a fresh JVM would see it
       def freshBoard(warmReps: Int): Bench.Record = {
         DerivedStore.clearMemo()
-        ModelCost.clear()
         Bench.board(spark, sf, Seq("trained" -> trained), warmReps)
       }
       val rec = freshBoard(3)
@@ -80,6 +79,23 @@ class BenchSpec extends SparkSpec {
       assert(rec.warm("trained") < 0.3, rec.warmRepTimes)
       assert(rec.modelBuilds(kind)("built_now") == true)
       assert(freshBoard(1).modelBuilds(kind)("built_now") == false)
+    }
+  }
+
+  test("a second board in the same JVM lists only the models its own windows touched") {
+    withTempDir { dir =>
+      spark.range(20).toDF("id").write.mode("overwrite").parquet(dir.toString)
+      val df = spark.read.parquet(dir.toString)
+      def trainer(kind: String): Bench.Query = (_, _) => {
+        DerivedStore.value(df, kind)("model")(identity)(identity)
+        df.limit(0)
+      }
+      val (first, second) = (s"bench_first_${System.nanoTime()}",
+        s"bench_second_${System.nanoTime()}")
+      val rec1 = Bench.board(spark, sf, Seq("first" -> trainer(first)), 1)
+      assert(rec1.modelBuilds.contains(first))
+      val rec2 = Bench.board(spark, sf, Seq("second" -> trainer(second)), 1)
+      assert(rec2.modelBuilds.keySet == Set(second), rec2.modelBuilds)
     }
   }
 
